@@ -5,10 +5,9 @@ Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Isolated re-measure protocol (the round-8 regression-triage procedure,
-promoted to a flag): cross-gate session accounting — cold costs landing
-on different members of shared-persisted-state clusters, streaming
-state-store residue — can shift an individual gate's in-sweep timing
-without any plan change. `--isolate name1,name2` (or `--isolate auto`
+promoted to a flag): cross-gate session accounting — JIT warm-up,
+streaming state-store residue — can shift an individual gate's in-sweep
+timing without any plan change. `--isolate name1,name2` (or `--isolate auto`
 for every >2s entry of the last BENCH_FULL.json) re-measures each gate
 median-of-3 in its OWN fresh process (fresh JVM — same-process session
 restarts reuse the gateway and inherit its heap), merges the medians
@@ -60,6 +59,8 @@ def compact_line(timings, headline, failed, total, sf, limit: int = 1800) -> str
 
 
 def _sf_of(sf_dir: str) -> float:
+    """Scale factor from a path ending in sfN; 0.1 for any other path
+    (e.g. /data/transfer/corpus has 'sf' but no number)."""
     m = re.search(r"sf([0-9.]+)/?$", sf_dir.rstrip("/"))
     try:
         return float(m.group(1)) if m else 0.1
@@ -179,7 +180,7 @@ def isolate_main(spec: str) -> None:
         # should be self-adjudicating via the isolated medians
         names = sorted(
             k for k, t in prior.get("queries", {}).items()
-            if t > 1.0 and not k.endswith(("_cold", "_per_batch", "_per_mb"))
+            if t > 1.0 and not k.endswith(("_per_batch", "_per_mb"))
         )
     else:
         names = [n for n in spec.split(",") if n]
@@ -224,14 +225,7 @@ def isolate_main(spec: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # tolerant sf sniffing: a path like /data/transfer/corpus contains
-    # 'sf' but no number — a bare float() here crashed the whole bench
-    # before any JSON line could be printed
-    m = re.search(r"sf([0-9.]+)/?$", sf_dir.rstrip("/"))
-    try:
-        sf = float(m.group(1)) if m else 0.1
-    except ValueError:
-        sf = 0.1
+    sf = _sf_of(sf_dir)
 
     from meteor_spark.session import get_spark
     from meteor_spark.queries import QUERIES
@@ -287,31 +281,11 @@ def main() -> None:
                 t = min(t, t2)
         timings[name] = t
 
-    # Cold-path cost of the _SHARED dedup intermediates. What actually
-    # survives between loop iterations: the per-query clearCache()
-    # unpersists the persisted shared frames, so every consumer query
-    # above recomputes its full lineage (honest standalone costs); only
-    # LOCALCHECKPOINTED state held in _SHARED (the connected-components
-    # labels) survives clearCache and is genuinely shared. The *_cold
-    # entries re-run after dropping _SHARED entirely, so they
-    # additionally price rebuilding that checkpointed state. They are
-    # informational and EXCLUDED from the total.
-    try:
-        from meteor_spark.queries import _SHARED
-
-        _SHARED.clear()
-        spark.catalog.clearCache()
-        for cold_name in ("minhash_near_duplicates", "near_dup_clusters"):
-            if cold_name in QUERIES:
-                timings[f"{cold_name}_cold"] = run_once(cold_name, QUERIES[cold_name])
-    except Exception as e:  # noqa: BLE001
-        print(f"bench error timing cold shared builds: {e}", file=sys.stderr)
-
     # Amortized store-lifecycle line items (informational, excluded
-    # from the total like the *_cold entries): the two multi-microbatch
-    # pipeline gates report one number that mixes per-batch fixed cost
-    # with state growth; these split out cost per microbatch and per MB
-    # of store compacted, from instrumentation of the gates' final run.
+    # from the total): the two multi-microbatch pipeline gates report
+    # one number that mixes per-batch fixed cost with state growth;
+    # these split out cost per microbatch and per MB of store
+    # compacted, from instrumentation of the gates' final run.
     try:
         from meteor_spark.streaming.pipeline import LAST_STATS
 
@@ -333,7 +307,7 @@ def main() -> None:
     except Exception as e:  # noqa: BLE001
         print(f"bench error deriving amortized entries: {e}", file=sys.stderr)
 
-    _informational = ("_cold", "_per_batch", "_per_mb")
+    _informational = ("_per_batch", "_per_mb")
     total = round(
         sum(t for k, t in timings.items() if t >= 0 and not k.endswith(_informational)),
         3,
@@ -447,8 +421,6 @@ def main() -> None:
         "zorder_distributed_skipping",
         "nation_revenue_salted_join",
         "streaming_click_attribution_salted",
-        "minhash_near_duplicates_cold",
-        "near_dup_clusters_cold",
         "streaming_incremental_neardup",
         "streaming_incremental_neardup_per_batch",
         "neardup_store_compaction",

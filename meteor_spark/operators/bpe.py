@@ -120,8 +120,8 @@ def encode_word(word: str, ranks: dict) -> list:
 
 def word_subword_counts(df: DataFrame, rules: list, text_col: str = "text") -> DataFrame:
     """(word, n_sub) over the corpus's DISTINCT word types — the one
-    Python (Arrow-batched) stage of encoding. Build once and share it
-    across every encode consumer: it depends only on (corpus, rules)."""
+    Python (Arrow-batched) stage of encoding; it depends only on
+    (corpus, rules)."""
     ranks = {(r[1], r[2]): r[0] for r in rules}
 
     @F.pandas_udf("int")
@@ -140,15 +140,11 @@ def encode_token_counts(
     rules: list,
     text_col: str = "text",
     id_col: str = "doc_id",
-    word_tok: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document subword token counts under a trained merge table:
     (id, n_words, n_subwords). Python touches only DISTINCT word types
-    (Arrow-batched); the corpus-sized step is a broadcast join. Pass a
-    prebuilt `word_tok` (word_subword_counts) to share the Python stage
-    across consumers."""
-    if word_tok is None:
-        word_tok = word_subword_counts(df, rules, text_col=text_col)
+    (Arrow-batched); the corpus-sized step is a broadcast join."""
+    word_tok = word_subword_counts(df, rules, text_col=text_col)
     tok = df.select(
         F.col(id_col), F.explode(words(normalize_text(F.col(text_col)))).alias("word")
     )

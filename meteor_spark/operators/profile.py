@@ -88,7 +88,6 @@ def profile_df(
     exact: bool = True,
     round_to: int = 4,
     quantiles: dict[str, float] | None = None,
-    distinct_budget: int | None = 8_000_000,
 ) -> DataFrame:
     """DataFrame-shaped profile: one output row per column, columns
     (column, min, max, avg, med, unique, count, top[, *quantiles]).

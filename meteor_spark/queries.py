@@ -11,6 +11,12 @@ Determinism contract shared by every pair:
   same row set;
 - every computed column is aliased identically in both formulations.
 
+Each gate call builds its own inputs; no frame or rule list is kept
+between calls. A fixture rewritten inside one session needs
+`spark.catalog.clearCache()` before the next call: a frame an operator
+persisted stays in Spark's CacheManager, which matches it by plan and
+so serves the old file's rows.
+
 Reference parity notes are cited per query (file:line into
 /root/reference) — see SURVEY.md §2 for the inventory this covers.
 """
@@ -105,25 +111,6 @@ def _fp_lift(col: Column, scale: int = 100) -> Column:
     runtime at 10x (docs/SCALING.md r11). NOT for signed columns:
     truncation-toward-zero flips the half-up direction below 0."""
     return (col * scale + F.lit(0.5)).cast("long")
-
-
-# Session-scoped shared intermediates: the minhash-LSH verified-pairs
-# frame and its connected-components labels feed THREE gate queries
-# (pairs report, cluster report, survivor dedup). Materializing each once
-# per (session, sf_dir) — persist for pairs, localCheckpoint for labels —
-# is the DataFrame analogue of a shared CTE across a workload: on a real
-# cluster the dedup pipeline computes the closure exactly once and every
-# downstream consumer reads the materialized result. Deterministic, so
-# reuse can never change answers; keyed by applicationId so a fresh
-# session never sees stale state.
-_SHARED: dict[tuple, DataFrame] = {}
-
-
-def _shared(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _SHARED:
-        _SHARED[key] = build()
-    return _SHARED[key]
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,23 +884,14 @@ def _profile_oracle(table: str, cols: list[str], numeric: set[str]) -> str:
 
 
 def _profile_li_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ONE exact lineitem profile both profile gates consume,
-    built once per session via _shared: profile_df's exact path
-    persists its (column, v, cnt) frequency frames, so the second
-    consumer reuses the cached frames instead of re-scanning lineitem
-    (the r11 verdict's #3 bench regression — the approx gate's exact
-    arm duplicated this gate's whole computation). Carries exact
-    p45/p55 from the same freq frames for the approx gate's median
-    rank window — no extra scan, window stays exact."""
-    return _shared(
-        spark,
-        sf_dir,
-        "profile_lineitem_exact",
-        lambda: profile_df(
-            _t(spark, sf_dir, "lineitem"),
-            _PROFILE_COLS["lineitem"],
-            quantiles={"p45": 0.45, "p55": 0.55},
-        ),
+    """The exact lineitem profile both profile gates consume. Carries
+    exact p45/p55 from the same (column, v, cnt) frequency frames as
+    the median, for the approx gate's median rank window — no extra
+    scan of lineitem, and the window stays exact."""
+    return profile_df(
+        _t(spark, sf_dir, "lineitem"),
+        _PROFILE_COLS["lineitem"],
+        quantiles={"p45": 0.45, "p55": 0.55},
     )
 
 
@@ -2180,36 +2158,13 @@ def _bpe_encode_oracle_sql(n_merges: int = 20) -> str:
     return _bpe_cte_chain(n_merges) + _bpe_subword_tail("doc_id", n_merges, False)
 
 
-def _bpe_rules(spark: SparkSession, sf_dir: str) -> list:
-    """Session-shared 20-merge rule table: training is deterministic
-    (count desc, pair lexicographic ties), so the trainer, encoder, and
-    fertility gates reuse ONE training pass per (session, sf_dir) — the
-    same _SHARED discipline as the LSH pair state."""
+def _bpe_rules(docs: DataFrame) -> list:
+    """The 20-merge rule table the trainer, encoder and fertility gates
+    all read. Training is deterministic (count desc, pair lexicographic
+    ties), so every gate trains the identical table."""
     from meteor_spark.operators.bpe import train_bpe
 
-    return _shared(
-        spark,
-        sf_dir,
-        "bpe_rules20",
-        lambda: train_bpe(_docs(spark, sf_dir), n_merges=20)[0],
-    )
-
-
-def _bpe_word_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared (word, n_sub) frame — the Arrow-batched encode of
-    every DISTINCT word type under the shared rules. Both encode-family
-    gates broadcast-join it; building it once halves the Python stage,
-    the dominant marginal cost per SCALING.md."""
-    from meteor_spark.operators.bpe import word_subword_counts
-
-    return _shared(
-        spark,
-        sf_dir,
-        "bpe_word_tok20",
-        lambda: word_subword_counts(
-            _docs(spark, sf_dir), _bpe_rules(spark, sf_dir)
-        ).persist(),
-    )
+    return train_bpe(docs, n_merges=20)[0]
 
 
 @query("bpe_merge_rules", _bpe_oracle_sql())
@@ -2223,7 +2178,7 @@ def bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     full value equality."""
     from meteor_spark.operators.bpe import merge_rules_frame
 
-    return merge_rules_frame(spark, _bpe_rules(spark, sf_dir))
+    return merge_rules_frame(spark, _bpe_rules(_docs(spark, sf_dir)))
 
 
 @query(
@@ -2274,9 +2229,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     from meteor_spark.functions.exactmath import ppm_expr
 
-    per_lang = encode_token_counts(
-        docs, _bpe_rules(spark, sf_dir), id_col="lang", word_tok=_bpe_word_tok(spark, sf_dir)
-    )
+    per_lang = encode_token_counts(docs, _bpe_rules(docs), id_col="lang")
     return per_lang.select(
         "lang",
         "n_words",
@@ -2302,9 +2255,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meteor_spark.operators.bpe import encode_token_counts
 
     docs = _docs(spark, sf_dir)
-    return encode_token_counts(
-        docs, _bpe_rules(spark, sf_dir), word_tok=_bpe_word_tok(spark, sf_dir)
-    )
+    return encode_token_counts(docs, _bpe_rules(docs))
 
 
 def _kmeans_oracle_sql(k: int = 8, iters: int = 4, round_to: int = 6) -> str:
@@ -2507,28 +2458,21 @@ def minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _shared(
-        spark,
-        sf_dir,
-        "minhash_pairs",
-        lambda: dedup.minhash_near_duplicates(
-            _docs(spark, sf_dir),
-            k=_MINHASH_K,
-            num_hashes=_MINHASH_HASHES,
-            bands=_MINHASH_BANDS,
-            threshold=0.5,
-        ).persist(),
-    )
+    # persisted: connected_components and minhash_eval_report each read
+    # the pairs twice
+    return dedup.minhash_near_duplicates(
+        _docs(spark, sf_dir),
+        k=_MINHASH_K,
+        num_hashes=_MINHASH_HASHES,
+        bands=_MINHASH_BANDS,
+        threshold=0.5,
+    ).persist()
 
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meteor_spark.operators.cluster import connected_components
 
-    # connected_components localCheckpoints its result, so the returned
-    # frame is already materialized — reuse is a cache read, not a rerun
-    return _shared(
-        spark, sf_dir, "cc_labels", lambda: connected_components(_minhash_pairs(spark, sf_dir))
-    )
+    return connected_components(_minhash_pairs(spark, sf_dir))
 
 
 # near-dup clustering: transitive closure of the verified minhash pairs.
@@ -2604,8 +2548,7 @@ def near_dup_best_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups differ in quality (keep the full page, drop its truncated
     mirrors). The ranking window runs over the labels table only
     (clustered docs << corpus); the corpus-sized step is the same
-    AQE-broadcast left_anti as min-id selection. Shares the session's
-    persisted cluster labels with the other near-dup gates."""
+    AQE-broadcast left_anti as min-id selection."""
     from meteor_spark.operators.cluster import best_survivors_from_labels
 
     docs = _docs(spark, sf_dir)
@@ -2727,34 +2670,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate equi-join lossless AND near-quadratic-free — the auditable
     alternative to probabilistic LSH. Oracle = brute-force all pairs, so
     the gate itself proves the filter loses nothing."""
-    return _prefix_pairs(spark, sf_dir)
-
-
-def _prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the lossless exact-Jaccard arm is the expensive ground truth for
-    # the LSH evaluation gates too — build it once per (session, sf_dir)
-    return _shared(
-        spark,
-        sf_dir,
-        "prefix_pairs",
-        lambda: dedup.prefix_filter_jaccard_pairs(
-            _docs(spark, sf_dir), threshold=0.5
-        ).persist(),
-    )
-
-
-def _true_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same pair set as _prefix_pairs (tests pin the equality), via the
-    # blocked posting join that stays output-linear on clone-heavy
-    # fixtures where prefix candidates explode
-    return _shared(
-        spark,
-        sf_dir,
-        "true_pairs",
-        lambda: dedup.exact_jaccard_pairs_blocked(
-            _docs(spark, sf_dir), threshold=0.5
-        ).persist(),
-    )
+    return dedup.prefix_filter_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
 
 
 # --------------------------------------------------------------------------
@@ -3182,19 +3098,15 @@ pairs AS (
 def _semdedup_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted base (exact copies of the 20 lowest-id vectors under
     shifted ids, so the gate can never be vacuously green on the random
-    fixture embeddings) -> seeded cluster assignment, shared across the
+    fixture embeddings) -> seeded cluster assignment, the input of the
     pairs and survivors gates."""
-
-    def build():
-        emb = _t(spark, sf_dir, "embeddings")
-        planted = (
-            emb.orderBy("vec_id")
-            .limit(_SEMDEDUP_PLANT)
-            .select((F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding", "label")
-        )
-        return similarity.semantic_assign(emb.unionByName(planted), n_clusters=_SEMDEDUP_K).persist()
-
-    return _shared(spark, sf_dir, "semdedup_assigned", build)
+    emb = _t(spark, sf_dir, "embeddings")
+    planted = (
+        emb.orderBy("vec_id")
+        .limit(_SEMDEDUP_PLANT)
+        .select((F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding", "label")
+    )
+    return similarity.semantic_assign(emb.unionByName(planted), n_clusters=_SEMDEDUP_K).persist()
 
 
 @query(
@@ -4247,10 +4159,10 @@ def profile_lineitem_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     cols = _PROFILE_COLS["lineitem"]
     pa = profile_df(li, cols, exact=False)
-    # exact arm + p45/p55 window bounds both come from the shared exact
-    # profile (one freq-frame pass, reused by profile_lineitem) — the
-    # r11 shape re-scanned lineitem twice more here: once for the exact
-    # profile, once for a full-sort F.percentile bounds agg.
+    # exact arm + p45/p55 window bounds both come from the one exact
+    # profile (one freq-frame pass) — the r11 shape re-scanned lineitem
+    # twice more here: once for the exact profile, once for a full-sort
+    # F.percentile bounds agg.
     pe = _profile_li_exact(spark, sf_dir).select(
         "column",
         F.col("med").alias("emed"),
@@ -7088,7 +7000,12 @@ def minhash_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set explodes clone-quadratically at 100x (4.84B raw
     matches, 2B+ distinct candidates — measured fatal on disk twice),
     while the blocked join is output-linear with broadcast postings."""
-    truth = _true_pairs(spark, sf_dir).select("a", "b")
+    # persisted: read twice, by its count and by the semi join
+    truth = (
+        dedup.exact_jaccard_pairs_blocked(_docs(spark, sf_dir), threshold=0.5)
+        .persist()
+        .select("a", "b")
+    )
     det = _minhash_pairs(spark, sf_dir).select("a", "b")
     hit = truth.join(det, ["a", "b"], "left_semi")
     return (
@@ -7138,8 +7055,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines (banded minhash pairs + the deterministic md5 holdout),
     and the oracle nests both of their oracle SQLs, so the audit itself
     is value-checked. The split frame is a pure per-row expression, so
-    the only real cost is the pair pipeline it reuses from the shared
-    session state."""
+    the only real cost is the pair pipeline."""
     from meteor_spark.operators import sampling
 
     docs = _t(spark, sf_dir, "documents")
@@ -7231,9 +7147,8 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (LSH pairs → connected components → min-id survivors) —
     the per-domain duplication report a crawl-quality dashboard leads
     with; a source shedding 30% near-dups needs upstream attention, not
-    more filtering. Composes the already-gated survivor pipeline (its
-    shared session state makes the reuse a cache read) with one
-    source-keyed left join; the oracle nests the survivors oracle."""
+    more filtering. Composes the already-gated survivor pipeline with
+    one source-keyed left join; the oracle nests the survivors oracle."""
     docs = _t(spark, sf_dir, "documents")
     surv = near_dup_cluster_survivors(spark, sf_dir)
     return (
@@ -7741,7 +7656,7 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     twins in val inflating eval) is removed at assignment time, not
     audited after. Unclustered docs hash their own id; the md5 bucket
     math is the holdout_split contract, so a doc's split is stable as
-    the corpus grows. Reuses the session's one CC materialization
+    the corpus grows. The labels are the near-dup gates' CC closure
     (_cluster_labels); the oracle rebuilds closure + buckets in SQL."""
     from meteor_spark.operators.cluster import cluster_aware_split
 

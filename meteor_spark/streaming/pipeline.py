@@ -24,6 +24,7 @@ backlog in rate-limited batches without keeping the driver loop alive.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,14 +55,20 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The footer sniff lists the whole fixture directory and decodes a
     parquet footer on the DRIVER — ~0.2-0.4s of serial stall per call,
     and every one of the ~13 streaming gates pays it. Memoized per
-    (session, path): schema METADATA only (never data or results), keyed
-    on applicationId so a new session re-sniffs — the same
-    session-scoped discipline as queries._shared."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    (session, path, file mtime, file size): schema METADATA only (never
+    data or results). A new session or a rewritten file re-sniffs; a
+    path os.stat cannot read (e.g. an object-store URI) is never
+    memoized."""
+    try:
+        st = os.stat(os.path.join(sf_dir, "events.parquet"))
+        key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         schema = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
-        _SCHEMA_MEMO[key] = schema
+        if key is not None:
+            _SCHEMA_MEMO[key] = schema
     # the streaming file source wants a directory; glob-filter to the table
     raw = (
         spark.readStream.schema(schema)

@@ -7,6 +7,7 @@ change time units under the engine again."""
 from __future__ import annotations
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -70,6 +71,29 @@ def test_streaming_normalize_ts(spark, events_path):
     assert isinstance(out.schema["ts"].dataType, T.TimestampType)
     got = sorted(r[0] for r in out.select(F.unix_micros("ts")).collect())
     assert got == sorted(r[1] for r in ROWS)
+
+
+def test_stream_events_resniffs_rewritten_fixture(spark, sf_dir, tmp_path):
+    """The footer-schema memo must not outlive the file it describes: a
+    fixture regenerated with another ts physical type inside one session
+    is read with its new schema."""
+    from meteor_spark.streaming.pipeline import run_stream_to_batch, stream_events
+
+    tbl = pq.read_table(f"{sf_dir}/events.parquet", columns=["event_id", "ts"])
+    want = sorted(
+        (e, t) for e, t in zip(tbl["event_id"].to_pylist(), tbl["ts"].cast(pa.int64()).to_pylist())
+    )
+    d = str(tmp_path)
+
+    def streamed() -> list:
+        out = stream_events(spark, d).select("event_id", F.unix_micros("ts").alias("us"))
+        return sorted(map(tuple, run_stream_to_batch(out, output_mode="append").collect()))
+
+    pq.write_table(tbl, f"{d}/events.parquet")
+    assert streamed() == want
+    nanos = tbl.set_column(1, "ts", pc.multiply(tbl["ts"].cast(pa.int64()), 1000))
+    pq.write_table(nanos, f"{d}/events.parquet")
+    assert streamed() == want
 
 
 def test_zipf_rank_bounds_determinism_and_skew(spark):

@@ -462,13 +462,11 @@ def _plan_counts(plan: str) -> dict:
 
 @pytest.mark.parametrize("name", sorted(_PLAN_BUDGETS))
 def test_plan_budget(spark, name):
-    # budgets are COLD-plan counts: shared persisted state left behind
-    # by earlier tests swaps subtrees for InMemoryTableScans and shifts
-    # join strategies, making the counts order-dependent
+    # budgets are COLD-plan counts: frames that earlier tests persisted
+    # (Spark's CacheManager matches them by plan) would swap subtrees
+    # for InMemoryTableScans and shift join strategies
     from meteor_spark import io
-    from meteor_spark.queries import _SHARED
 
-    _SHARED.clear()
     spark.catalog.clearCache()
     # keep the lazy plan inspectable: finish_and_release would swap the
     # whole subtree for a localCheckpoint RDD scan, hiding every

@@ -1,5 +1,5 @@
 """Capture `.explain("formatted")` for named gates with the cold-plan
-protocol of tests/test_plans.py (shared state cleared, eager cache
+protocol of tests/test_plans.py (Spark cache cleared, eager cache
 release disabled). Usage:
 
     python tools/capture_plans.py <out_dir> <suffix> gate [gate ...]
@@ -19,7 +19,7 @@ def main() -> None:
     out_dir, suffix, gates = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from meteor_spark import io
-    from meteor_spark.queries import QUERIES, _SHARED
+    from meteor_spark.queries import QUERIES
     from meteor_spark.session import get_spark
 
     spark = get_spark("capture_plans")
@@ -29,7 +29,6 @@ def main() -> None:
     # hard-coded True — the tool must not silently flip global state
     prev_eager = io.EAGER_CACHE_RELEASE
     for name in gates:
-        _SHARED.clear()
         spark.catalog.clearCache()
         io.EAGER_CACHE_RELEASE = False
         try:
