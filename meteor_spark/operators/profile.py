@@ -61,20 +61,26 @@ def _aggs_for(col: str, dtype: T.DataType, exact: bool) -> list[Column]:
     ]
 
 
-def profile_columns(df: DataFrame, columns: list[str] | None = None, exact: bool = False) -> dict[str, dict]:
+def profile_columns(
+    df: DataFrame, columns: list[str] | None = None, exact: bool = False
+) -> tuple[int, dict[str, dict]]:
     """Profile every (profilable) column in one aggregation pass.
 
-    Returns {column: {min,max,avg,med,unique,count,top}} matching the
-    ColumnProfile facet (models/odpf/assets/facets/v1beta1/schema.pb.go:180).
+    Returns (total_rows, {column: {min,max,avg,med,unique,count,top}}),
+    the profiles matching the ColumnProfile facet
+    (models/odpf/assets/facets/v1beta1/schema.pb.go:180). The row count
+    rides in the same aggregate, so a caller that also needs the table's
+    TotalRows pays no separate count job.
     """
     cols = columns or profilable_columns(df)
     types = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    aggs: list[Column] = []
+    aggs: list[Column] = [F.count(F.lit(1)).alias("__total_rows")]
     for c in cols:
         aggs.extend(_aggs_for(c, types[c], exact))
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {
-        c: {f: row[f"{c}__{f}"] for f in _PROFILE_FIELDS}
+    row = df.agg(*aggs).collect()[0]
+    vals = row.asDict()
+    return row[0], {
+        c: {f: vals[f"{c}__{f}"] for f in _PROFILE_FIELDS}
         for c in cols
     }
 

@@ -130,8 +130,10 @@ class Sink:
     def validate(self, config: dict[str, Any] | None) -> None:
         build_config(config, self.CONFIG)
 
-    def sink(self, df: DataFrame) -> int:
-        """Write the DataFrame; return number of records written."""
+    def sink(self, df: DataFrame) -> int | None:
+        """Write the DataFrame; return the number of records written, or
+        None for "every row of the frame" (the runner then reports its
+        own record count instead of paying another count job)."""
         raise NotImplementedError
 
     def close(self) -> None:

@@ -25,7 +25,13 @@ Spark-first divergences (SURVEY.md §4 — deliberate):
     the analogue of the reference's per-subscriber channels fed by one
     extraction pass (agent/stream.go:51-103).
   - Record count comes from df.count() on the cached frame — one extra
-    action on cached data, not a second extraction.
+    action on cached data, not a second extraction. A sink that writes
+    the whole frame returns None and is credited with that count
+    instead of counting again.
+  - Frames a source builds on the driver (catalog walks, API scans) are
+    one partition (sources.base.assets_df): the rows already sit in
+    driver memory, so the persist, the count and each sink's action run
+    one task apiece instead of one per default-parallelism slice.
 """
 
 from __future__ import annotations

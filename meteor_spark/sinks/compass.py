@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from meteor_spark.plugins_base import Field, Sink
 from meteor_spark.registry import register_sink
 from meteor_spark.sinks.http import post_json
+from meteor_spark.sinks.lines import json_lines
 
 
 def resolve_label_template(value: str, record: dict[str, Any]) -> str | None:
@@ -100,7 +101,7 @@ class CompassSink(Sink):
         headers = dict(self.config["headers"] or {})
         labels = dict(self.config["labels"] or {})
         n = 0
-        for line in df.toJSON().toLocalIterator():
+        for line in json_lines(df):
             record = json.loads(line)
             payload = build_compass_payload(record, labels)
             post_json(f"{host}/v1beta1/assets", payload, method="PATCH", headers=headers)

@@ -1,9 +1,10 @@
 """Console sink — JSON per record to stdout.
 
 Reference (plugins/sinks/console/sink.go:43-61): marshal each record to
-JSON and print. Driver-side toJSON over a limited collect; for large
-frames this is a debugging sink, so output is capped (the reference has
-no cap because its record streams are tiny metadata sets).
+JSON and print. The first `max_rows` rows are encoded by the shared
+`json_lines` helper; for large frames this is a debugging sink, so
+output is capped (the reference has no cap because its record streams
+are tiny metadata sets).
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from pyspark.sql import DataFrame
 
 from meteor_spark.plugins_base import Field, Sink
 from meteor_spark.registry import register_sink
+from meteor_spark.sinks.lines import json_lines
 
 
 @register_sink("console", "Print records to stdout")
@@ -20,7 +22,7 @@ class ConsoleSink(Sink):
 
     def sink(self, df: DataFrame) -> int:
         n = 0
-        for line in df.toJSON().take(self.config["max_rows"]):
+        for line in json_lines(df.limit(self.config["max_rows"])):
             print(line)
             n += 1
         return n

@@ -5,14 +5,18 @@ Reference (plugins/sinks/file/file.go:57-146): path must look like
 `overwrite` config selects truncate vs append.
 
 Spark translation: ndjson is exactly Spark's json lines format. To honor
-the reference's single-file contract the rows are written via toJSON
-to the target path (collect through an iterator, not a big .collect()
-list). For cluster-scale output use overwrite=dir mode, which maps to
-df.write.json — the distributed path.
+the reference's single-file contract the rows are encoded to JSON in the
+JVM (`sinks.lines.json_lines`, byte-identical to `toJSON`) and streamed
+to the target path one partition at a time, never one big `.collect()`
+list; a driver-built asset frame is one partition, so that is one job.
+For cluster-scale output use `distributed: true` (or format parquet),
+which maps to df.write — the distributed path. It returns None: the
+write covers every row of the frame, whose count the runner already has.
 """
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 import yaml
@@ -21,6 +25,7 @@ from pyspark.sql import DataFrame
 
 from meteor_spark.plugins_base import Field, InvalidConfigError, ConfigError, Sink
 from meteor_spark.registry import register_sink
+from meteor_spark.sinks.lines import json_lines
 
 
 @register_sink("file", "Save output to a file (ndjson/yaml)")
@@ -41,7 +46,7 @@ class FileSink(Sink):
             # reference: file.go:128-136 requires name.ext
             raise InvalidConfigError([ConfigError("path", "path must be a file name like name.ext")])
 
-    def sink(self, df: DataFrame) -> int:
+    def sink(self, df: DataFrame) -> int | None:
         path = Path(self.config["path"])
         fmt = self.config["format"]
         if self.config["distributed"] or fmt == "parquet":
@@ -50,19 +55,15 @@ class FileSink(Sink):
                 df.write.mode(mode).parquet(str(path))
             else:
                 df.write.mode(mode).json(str(path))
-            return df.count()
+            return None
         path.parent.mkdir(parents=True, exist_ok=True)
         mode = "w" if self.config["overwrite"] else "a"
         n = 0
         with open(path, mode) as f:
-            if fmt in ("json", "ndjson"):
-                for line in df.toJSON().toLocalIterator():
+            for line in json_lines(df):
+                if fmt in ("json", "ndjson"):
                     f.write(line + "\n")
-                    n += 1
-            else:
-                import json
-
-                for line in df.toJSON().toLocalIterator():
+                else:
                     yaml.safe_dump(json.loads(line), f, explicit_start=True, sort_keys=False)
-                    n += 1
+                n += 1
         return n

@@ -10,7 +10,9 @@ name ascending, matching the reference's `ORDER BY COLUMN_NAME ASC`
 (mysql.go:163-167); TotalRows mirrors oracle.go:145-146 `count(*)`;
 preview mirrors bigquery.go:280-337 first-N rows; column profiles mirror
 bigquery.go:386-411 (see meteor_spark.operators.profile — computed in ONE
-aggregation pass over the table instead of one SQL query per column).
+aggregation pass over the table instead of one SQL query per column; when
+profiling is on, that same pass also yields TotalRows, so no separate
+count job runs).
 
 At 100 TB scale the count/profile path reads each table once with only
 the needed columns (parquet column pruning); the schema walk itself reads
@@ -67,9 +69,9 @@ class ParquetCatalogExtractor(Extractor):
     def _table_asset(self, spark: SparkSession, root: Path, database: str, t: Path) -> dict:
         df = self._read(spark, str(t))
         name = t.stem
-        profiles: dict[str, dict] = {}
+        total_rows, profiles = None, {}
         if self.config["include_column_profile"]:
-            profiles = profile_columns(df)
+            total_rows, profiles = profile_columns(df)
         columns = [
             column_dict(
                 name=f.name,
@@ -82,7 +84,7 @@ class ParquetCatalogExtractor(Extractor):
         ]
         profile = None
         if self.config["include_row_count"]:
-            profile = {"total_rows": df.count()}
+            profile = {"total_rows": df.count() if total_rows is None else total_rows}
         preview = None
         if self.config["include_preview"]:
             n = self.config["max_preview_rows"]
