@@ -1,144 +1,20 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract.
 
-entry(spark)  -> flagship: catalog extraction over sf0.001 (the engine's
-                 core workload — parquet_catalog source → asset DataFrame).
-queries()     -> every implemented operator from SURVEY.md §2 plus the
-                 beyond-reference training-data operators (dedup incl.
-                 clustering + incremental, similarity search, text
-                 hygiene/quality/chunking, sampling, range join,
-                 streaming incl. session windows, stream-static and
-                 stream-stream joins, drift/contamination/sketch ops,
-                 LM perplexity quality filter, domain-mixture weights,
-                 BM25 retrieval, DSIR importance reweighting, passage
-                 dedup, training-order interleave, next-fit packing,
-                 holdout split, containment join, count-min sketches,
-                 audio silence segmentation, RRF hybrid retrieval,
-                 temperature mixture weights, Misra-Gries exact heavy
-                 hitters, truncation budgeting, char-entropy quality,
-                 greedy k-center coreset, per-source lexical KL drift,
-                 PMI collocation mining, streaming heavy hitters,
-                 co-usage graph triangle counts, per-doc novelty
-                 scores, source diversity metrics, Zipf rank-frequency
-                 fit, event transition matrix, sorted-neighborhood
-                 near-dup blocking, exact weighted medians, seasonal
-                 anomaly residuals, embedding label-centroid overlap,
-                 exact-gated ANN recall evaluation, functional- and
-                 inclusion-dependency discovery, column correlations,
-                 join-cardinality estimate validation, behavioral path
-                 mining, vocabulary coverage curves, weighted
-                 percentile bands, hourly autocorrelation, token-mass
-                 Gini, exact-gated LSH recall/precision evaluation,
-                 cross-split leakage audit, winsorized statistics,
-                 per-source dedup-rate report, retrieval rank
-                 agreement, scan-free footer-stats profiling, video
-                 scene-cut segmentation, image perceptual-hash dedup,
-                 chi-square split balance, association lift matrix,
-                 conditional transition entropy, user-activity Gini,
-                 language-ID confidence margins,
-                 cross-encoder-stub candidate reranking) —
-                 215 entries, ALL oracle-bearing as of r11: 211 with
-                 full-value exact DuckDB oracles + 4 with
-                 checked-contract oracles (the former rows-only gates:
-                 ivf/pq kmeans ANN publish k-rows-per-query +
-                 recall-vs-exact-twin floor booleans; the HLL sketch
-                 rollup publishes exact distinct counts + a 5%
-                 tolerance boolean; the approx profile publishes its
-                 exact fields value-hashed + unique/median tolerance
-                 booleans) (r10 adds
-                 streaming_click_attribution_salted — the skew-safe
-                 stream-stream attribution twin, (user,salt)-sharded
-                 state, bit-equal to the plain twin on the Zipf
-                 fixture; zorder_distributed_skipping — the
-                 distributed z-order WRITE path certified via
-                 footer-stats skipping bound, repartitionByRange with
-                 no single-partition exchange; r9 adds
-                 zorder_footer_skipping — the z-order skipping payoff
-                 certified on REAL parquet footer min/max stats, read
-                 independently via pyarrow metadata and DuckDB
-                 parquet_metadata();
-                 nation_revenue_salted_join — the salted-JOIN twin
-                 completing the oracle-gated salted pair, dim
-                 replicated per salt bucket, oracle is the plain
-                 relational join; r8 adds
-                 user_tcloseness_census — skewness-attack audit
-                 completing the k-anonymity / l-diversity /
-                 t-closeness trio, exact-integer total variation;
-                 lineitem_constraint_report — declarative dbt-test-shaped
-                 constraint suite, one conditional-agg pass + FK
-                 anti-join; user_ldiversity_census — homogeneity-attack
-                 complement to the k-anonymity audit;
-                 multi_touch_attribution — linear credit sharing over
-                 the bounded interval join, exact-integer credit_ppm;
-                 source_overlap_hll_estimate — pairwise vocabulary
-                 overlap by HLL register max-merge inclusion-exclusion,
-                 never an exact intersect;
-                 zorder_skipping_report — Morton-interleave layout vs
-                 row-key layout, measured as files read under min/max
-                 pruning (the OPTIMIZE ZORDER payoff, exact);
-                 streaming_psi_drift + streaming_holt_smoothing — live
-                 PSI and live Holt level/residuals from the same
-                 mergeable grid state, equal to the batch oracles;
-                 streaming_ttl_dedup — dropDuplicatesWithinWatermark
-                 retransmission dedup with measured one-batch eviction
-                 lag, oracle restates the state machine relationally;
-                 split_quota_apportionment — Hamilton largest-remainder
-                 integer budget apportionment; consistent_hash_reshard
-                 — md5-ring reshard movement census;
-                 csv_catalog_assets — sixth lakehouse format;
-                 streaming_rate_changepoint — live CUSUM from mergeable
-                 hourly-count state, equal to the batch gate's bit-exact
-                 oracle; document_pareto_frontier — 2-D skyline via an
-                 Arrow-batched narrow prefilter + window restatement,
-                 oracle is the O(N^2) dominance definition;
-                 event_rate_holt_smoothing — exact-integer exponential
-                 smoothing, row-preserving, oracle replays the whole
-                 recursion via RECURSIVE CTE; hard_negative_mining —
-                 per-anchor top-k different-label neighbors;
-                 bitext_margin_pairs — Artetxe-Schwenk margin-normalized
-                 parallel-pair mining, all-integer margin_ppm;
-                 json_catalog_assets — fifth lakehouse format; r7 added
-                 event_rate_changepoint — exact-integer CUSUM
-                 changepoint per key over the hourly rate series;
-                 orc_catalog_assets — ORC catalog source, fourth
-                 lakehouse format through the parquet_catalog format
-                 seam, oracle checks the ORC-extracted metadata
-                 against the parquet views;
-                 mw_domain_reweight — DoReMi-shaped Group-DRO
-                 multiplicative-weights domain mixing, all-integer
-                 update, oracle replays all 8 iterations;
-                 rerank_cross_encoder — retrieve->fuse->rerank third
-                 stage, Arrow-batched joint pair scoring stub,
-                 exact-integer score_ppm; streaming_ks_drift —
-                 live reference-vs-current KS from mergeable
-                 value-grid count state, equal to the batch gate's
-                 bit-exact oracle; user_kanonymity_census —
-                 privacy audit over generalized behavioral
-                 quasi-identifiers, integer-exact magnitude bands;
-                 r6 added
-                 leakage_free_split — near-dup-cluster-aware holdout,
-                 embedding_dimension_profile — fixed-point whitening
-                 stats, event_value_mad_outliers — robust MAD census,
-                 events_sliding_distinct + streaming_sliding_distinct
-                 — trailing-window distinct from mergeable register
-                 partials, batch and live, one bit-exact oracle,
-                 token_budget_allocation — all-integer mix/epoch
-                 planner, embedding_pc1_power_iteration — exact-int64
-                 quantized power iteration, oracle replays all 8
-                 iterations, event_value_ks_drift — exact-integer
-                 two-sample Kolmogorov-Smirnov drift). The 4 rows-only gates wrap
-                 engine-internal approximate state and each names its
-                 exact-gated twin; all r1-r7 gates green at latest
-                 driver status.
-oracle_sql()  -> DuckDB-equivalent SQL per query (see meteor_spark.queries;
-                 the 4 operators wrapping engine-internal state (ML
-                 KMeans init, HLL registers, APPROX_* sketches) are
-                 rows-only and have no oracle).
+entry(spark)  -> the flagship workload: the parquet_catalog extractor over
+                 sf0.001, one row per table (urn, table_name, asset_type,
+                 n_columns, total_rows), ordered by table name.
+queries()     -> every registered gate, name -> fn(spark, sf_dir) returning a
+                 DataFrame, in correctness-sampling order (see _sampling_order).
+oracle_sql()  -> DuckDB SQL per oracle-bearing gate, in the same order.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
-from collections.abc import Callable
+import re
+from collections.abc import Callable, Container, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -165,165 +41,58 @@ def entry(spark: SparkSession) -> DataFrame:
     ).orderBy("table_name")
 
 
-# Driver-sampling priority (the harness samples a prefix of registration
-# order). Three tiers:
-#   1. _FAILED_LATEST — red at their most recent driver check. Empty as
-#      of the r5 record: the six r4 hash-only reds went green after the
-#      HUGEINT->float64 pandas-fetch root cause was fixed (CAST(..AS
-#      BIGINT) in the oracles + the type gate in tools/check_parity.py).
-#   2. never-checked — no driver row yet in any round; new gates land
-#      here and therefore sort AHEAD of re-samples automatically.
-#   3. _CHECKED_GREEN — green at latest driver status (CORRECTNESS_r01-
-#      r11 union: all 215 gates, incl. the 4 checked-contract ones);
-#      re-sampled last, ROTATED by staleness (see below).
-# Within each tier, oracle-bearing entries precede rows-only ones, and
-# ties break on rounds-since-last-driver-row (read from the committed
-# CORRECTNESS_r*.json records): with all 215 gates green, a fixed
-# registration order would re-sample the same 50-gate prefix every
-# round (r11 re-sampled 48 of r10's 50); sorting the green tier
-# stalest-first makes each round's sample maximize coverage of gates
-# whose last driver check is oldest.
-# Post-round hygiene (documented process): refresh these sets from the
-# new CORRECTNESS_r{N}.json before adding round-{N+1} gates.
-_FAILED_LATEST: set[str] = set()
-
-_CHECKED_GREEN = {
-    "ann_cosine_topk", "ann_recall_report", "audio_silence_segments",
-    "benchmark_contamination", "bitext_margin_pairs", "bm25_search_topk",
-    "bpe_encode_stats", "consistent_hash_reshard", "csv_catalog_assets",
-    "document_pareto_frontier", "event_rate_holt_smoothing",
-    "hard_negative_mining", "json_catalog_assets",
-    "lineitem_constraint_report", "multi_touch_attribution",
-    "source_overlap_hll_estimate", "split_quota_apportionment",
-    "streaming_holt_smoothing", "streaming_psi_drift",
-    "streaming_rate_changepoint", "streaming_ttl_dedup",
-    "user_ldiversity_census", "user_tcloseness_census",
-    "zorder_skipping_report",
-    "nation_revenue_salted_join", "zorder_footer_skipping",
-    "bpe_fertility_by_lang", "bpe_merge_rules", "bpe_token_stats",
-    "building_segment_small_spenders", "catalog_assets",
-    "catalog_snapshot_diff", "cdc_shared_chunks", "char_entropy_quality",
-    "click_purchase_funnel", "corpus_holdout_split", "corpus_pmi_bigrams",
-    "corpus_tfidf_terms", "corpus_top_bigrams", "corpus_word_heavy_hitters",
-    "corpus_zipf_fit", "curation_pipeline", "customer_balance_quartiles",
-    "customer_order_set_ops", "customers_without_orders",
-    "dedup_exact_survivors", "dedup_rate_by_source",
-    "embedding_dimension_profile", "embedding_pc1_power_iteration",
-    "event_rate_changepoint",
-    "doc_bigram_perplexity", "doc_containment_pairs", "doc_novelty_scores",
-    "doc_repetition_quality", "doc_similarity_topk", "document_chunks",
-    "dsir_importance_weights", "duplicated_span_report",
-    "embedding_kmeans_profile", "embedding_label_stats",
-    "embedding_near_dup_pairs", "enrich_catalog", "event_hourly_autocorr",
-    "event_join_pairs", "event_key_skew_report",
-    "event_seasonality_residuals", "event_transition_entropy",
-    "event_transition_matrix", "event_type_count_min",
-    "event_type_lift_matrix", "event_value_drift_psi",
-    "event_value_ks_drift", "event_value_mad_outliers",
-    "event_value_outliers", "event_value_percentiles",
-    "event_value_quantile_sketch_rollup", "event_value_winsorized_stats",
-    "events_asof_purchase", "events_distinct_sketch_rollup",
-    "events_hourly_rollup", "events_multi_rollup",
-    "events_portable_hll_rollup", "events_session_windows",
-    "events_sliding_distinct",
-    "events_trailing_window", "events_usage", "events_usage_salted",
-    "exact_dup_groups", "gopher_quality_gate", "hot_passage_scrub",
-    "hybrid_search_rrf", "image_ahash_pairs", "incremental_dedup",
-    "ivf_ann_topk", "ivf_kmeans_ann_topk", "join_cardinality_estimate",
-    "kcenter_coreset", "label_centroid_similarity", "leakage_free_split",
-    "language_confidence_report", "latest_event_per_user",
-    "lineitem_footer_stats", "lineitem_measure_unpivot",
-    "lineitem_numeric_correlations", "lineitem_price_histogram",
-    "lineitem_weighted_median_price", "lineitem_weighted_percentiles",
-    "matryoshka_recall_curve", "minhash_eval_report",
-    "minhash_near_duplicates", "multimodal_features",
-    "multimodal_resize_dims", "nation_functional_dependencies",
-    "near_dup_best_survivors", "near_dup_cluster_survivors",
-    "mw_domain_reweight",
-    "near_dup_clusters", "neardup_store_compaction", "next_fit_bin_packing",
-    "ngram_jaccard_pairs", "orc_catalog_assets", "order_price_percentile_ranks",
-    "order_priority_late_ships", "orders_priority_status_pivot",
-    "orders_rollup", "orders_running_total", "orders_with_returns",
-    "packing_padding_waste", "passage_dedup_survivors", "pq_ann_topk",
-    "pq_kmeans_ann_topk", "prefix_filter_jaccard_pairs", "preview_lineitem",
-    "profile_lineitem", "profile_lineitem_approx", "profile_orders",
-    "props_json_agg", "props_variant_agg", "purchase_click_attribution",
-    "q10_returned_items", "q11_part_value_share",
-    "q12_late_priority_counts", "q13_customer_distribution",
-    "q14_promo_revenue", "q15_top_supplier", "q16_part_supplier_counts",
-    "q18_large_volume_customers", "q19_bracket_revenue",
-    "q1_pricing_summary", "q20_heavy_part_suppliers",
-    "q21_sole_late_supplier", "q22_dormant_customers",
-    "q2_min_cost_supplier", "q3_top_orders", "q5_nation_revenue",
-    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "referential_integrity_report",
-    "rerank_cross_encoder",
-    "retrieval_rank_agreement", "row_counts", "scrub_documents",
-    "semantic_dedup_pairs", "semantic_dedup_survivors", "sequence_packing",
-    "simhash_docs", "simhash_hamming_pairs", "small_quantity_part_revenue",
-    "sorted_neighborhood_pairs", "source_diversity_metrics",
-    "source_lexical_kl", "source_mix_weights", "source_overlap_matrix",
-    "source_quota_cap", "source_token_gini", "split_balance_chi2",
-    "split_leakage_report", "sql_api_revenue", "sql_condition_mining",
-    "srp_ann_topk", "stratified_sample", "streaming_click_attribution",
-    "streaming_hourly_rollup", "streaming_incremental_dedup",
-    "streaming_incremental_neardup", "streaming_ks_drift",
-    "streaming_quantile_rollup",
-    "streaming_segment_counts", "streaming_sliding_distinct",
-    "streaming_word_heavy_hitters",
-    "temperature_mix_weights", "text_analysis", "token_budget_allocation",
-    "top_customers",
-    "top_docs_per_lang", "training_order_interleave",
-    "truncation_budget_curve", "user_activity_gini", "user_event_grants",
-    "user_kanonymity_census", "user_path_trigrams",
-    "user_retention_cohorts", "user_sessions",
-    "video_frame_sample", "video_scene_segments", "vocab_coverage_curve",
-    "weighted_sample_docs", "winnowing_fingerprints",
-    "workload_graph_triangles", "workload_lineage_closure",
-    "workload_table_pagerank",
-    "streaming_click_attribution_salted", "zorder_distributed_skipping",
-}
+_RECORDS_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
-def _last_driver_round() -> dict[str, int]:
-    """gate -> most recent round with a CORRECTNESS_r{N}.json row.
-    Read from the committed driver records next to this file; any
-    read/parse problem degrades to {} (ordering falls back to name)."""
-    import glob as _glob
-    import json as _json
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    for p in sorted(_glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", p)
+def _latest_rows(records_dir: str) -> dict[str, tuple[int, object]]:
+    """gate -> (round, row) of its most recent CORRECTNESS_r{N}.json row.
+    A record that cannot be read or parsed is skipped."""
+    latest: dict[str, tuple[int, object]] = {}
+    for p in glob.glob(os.path.join(records_dir, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
         if not m:
             continue
         rnd = int(m.group(1))
         try:
             with open(p) as f:
-                rec = _json.load(f)
+                rec = json.load(f)
         except (OSError, ValueError):
             continue
         if isinstance(rec, dict):
-            for gate in rec:
-                last[gate] = max(last.get(gate, 0), rnd)
-    return last
+            for gate, row in rec.items():
+                if gate not in latest or rnd > latest[gate][0]:
+                    latest[gate] = (rnd, row)
+    return latest
+
+
+def _is_red(row: object) -> bool:
+    """A failed comparison or an error other than "no_oracle"; a row that
+    is not a dict cannot show it passed, so it counts as red too."""
+    if not isinstance(row, dict):
+        return True
+    failed = any(row.get(k) is False for k in ("rows_match", "schema_match", "hash_match"))
+    return failed or row.get("err") not in (None, "no_oracle")
+
+
+def _sampling_order(gates: Iterable[str], oracles: Container[str], records_dir: str) -> list[str]:
+    """The harness samples a prefix of this order, so it puts first what
+    most needs a correctness check: gates red at their latest row, then gates
+    with no row, then the rest. Within a tier, oracle-bearing gates come
+    first, then the stalest latest row: with every gate green, a fixed
+    order would re-sample the same prefix each round, while stalest-first
+    makes each round's sample cover the gates checked longest ago."""
+    latest = _latest_rows(records_dir)
+
+    def key(n: str) -> tuple:
+        rnd, row = latest.get(n, (0, None))
+        tier = 1 if n not in latest else (0 if _is_red(row) else 2)
+        return (tier, n not in oracles, rnd, n)
+
+    return sorted(gates, key=key)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    last = _last_driver_round()
-    ordered = sorted(
-        QUERIES,
-        key=lambda n: (
-            n not in _FAILED_LATEST,
-            n in _CHECKED_GREEN,
-            n not in ORACLES,
-            last.get(n, 0),  # stalest driver row first within each tier
-            n,
-        ),
-    )
-    return {n: QUERIES[n] for n in ordered}
+    return {n: QUERIES[n] for n in _sampling_order(QUERIES, ORACLES, _RECORDS_DIR)}
 
 
 def oracle_sql() -> dict[str, str]:

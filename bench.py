@@ -1,4 +1,4 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark runner: every registered gate at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
@@ -334,99 +334,9 @@ def main() -> None:
         # the side file is best-effort; the stdout line below must still
         # print (a read-only checkout/full disk must not null the bench)
         print(f"bench warning: could not write BENCH_FULL.json: {e}", file=sys.stderr)
-    headline = [
-        "q1_pricing_summary",
-        "q3_top_orders",
-        "q5_nation_revenue",
-        "q9_product_profit",
-        "q18_large_volume_customers",
-        "q21_sole_late_supplier",
-        "events_hourly_rollup",
-        "events_asof_purchase",
-        "user_sessions",
-        "minhash_near_duplicates",
-        "near_dup_clusters",
-        "simhash_hamming_pairs",
-        "prefix_filter_jaccard_pairs",
-        "ann_cosine_topk",
-        "ivf_ann_topk",
-        "text_analysis",
-        "curation_pipeline",
-        "streaming_hourly_rollup",
-        "streaming_click_attribution",
-        "multimodal_features",
-        "duplicated_span_report",
-        "sequence_packing",
-        "profile_lineitem",
-        "corpus_tfidf_terms",
-        "purchase_click_attribution",
-        "doc_bigram_perplexity",
-        "source_mix_weights",
-        "bm25_search_topk",
-        "dsir_importance_weights",
-        "passage_dedup_survivors",
-        "training_order_interleave",
-        "embedding_kmeans_profile",
-        "event_value_quantile_sketch_rollup",
-        "workload_table_pagerank",
-        "bpe_merge_rules",
-        "doc_containment_pairs",
-        "hybrid_search_rrf",
-        "audio_silence_segments",
-        "next_fit_bin_packing",
-        "event_type_count_min",
-        "corpus_holdout_split",
-        "corpus_word_heavy_hitters",
-        "kcenter_coreset",
-        "char_entropy_quality",
-        "truncation_budget_curve",
-        "source_lexical_kl",
-        "corpus_pmi_bigrams",
-        "streaming_word_heavy_hitters",
-        "workload_graph_triangles",
-        "doc_novelty_scores",
-        "source_diversity_metrics",
-        "corpus_zipf_fit",
-        "event_transition_matrix",
-        "sorted_neighborhood_pairs",
-        "lineitem_weighted_median_price",
-        "event_seasonality_residuals",
-        "label_centroid_similarity",
-        "ann_recall_report",
-        "nation_functional_dependencies",
-        "referential_integrity_report",
-        "lineitem_numeric_correlations",
-        "join_cardinality_estimate",
-        "user_path_trigrams",
-        "vocab_coverage_curve",
-        "lineitem_weighted_percentiles",
-        "event_hourly_autocorr",
-        "source_token_gini",
-        "minhash_eval_report",
-        "split_leakage_report",
-        "event_value_winsorized_stats",
-        "dedup_rate_by_source",
-        "retrieval_rank_agreement",
-        "lineitem_footer_stats",
-        "video_scene_segments",
-        "image_ahash_pairs",
-        "split_balance_chi2",
-        "event_type_lift_matrix",
-        "event_transition_entropy",
-        "user_activity_gini",
-        "language_confidence_report",
-        "hot_passage_scrub",
-        "rerank_cross_encoder",
-        "zorder_footer_skipping",
-        "zorder_distributed_skipping",
-        "nation_revenue_salted_join",
-        "streaming_click_attribution_salted",
-        "streaming_incremental_neardup",
-        "streaming_incremental_neardup_per_batch",
-        "neardup_store_compaction",
-        "neardup_store_compaction_per_mb",
-    ]
-    print(compact_line(timings, headline, failed, total, sf))
+    # headline = every timing in registration order, the two derived
+    # entries last; compact_line trims from the end to fit the line
+    print(compact_line(timings, list(timings), failed, total, sf))
     spark.stop()
 
 

@@ -8,15 +8,12 @@ Semantics mirror the reference's deterministic formatting
     DashboardURN = "{service}::{host}/{id}"
     JobURN       = "{service}::{host}/{id}"
 
-Provided both as plain-Python helpers (driver-side asset construction)
-and as Column expressions (JVM-side, codegen-friendly `format_string`)
-so URN building never drops out of whole-stage codegen on big frames.
+Plain-Python helpers for driver-side asset construction. Sources that
+build URNs per row of a large frame do it in the JVM with
+`F.format_string` over the same patterns.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def table_urn(service: str, host: str, database: str, name: str) -> str:
@@ -38,14 +35,3 @@ def job_urn(service: str, host: str, job_id: str) -> str:
 def user_urn(service: str, email: str) -> str:
     return f"{service}::{email}"
 
-
-def table_urn_col(service: Column | str, host: Column | str, database: Column | str, name: Column | str) -> Column:
-    return F.format_string("%s::%s/%s/%s", _c(service), _c(host), _c(database), _c(name))
-
-
-def topic_urn_col(service: Column | str, host: Column | str, name: Column | str) -> Column:
-    return F.format_string("%s::%s/%s", _c(service), _c(host), _c(name))
-
-
-def _c(v: Column | str) -> Column:
-    return F.lit(v) if isinstance(v, str) else v

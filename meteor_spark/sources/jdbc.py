@@ -138,60 +138,6 @@ def catalog_assets_from_columns(columns_df: DataFrame, *, service: str, host: st
     )
 
 
-def jdbc_partitioned_reader(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    user: str,
-    password: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 32,
-):
-    """Partitioned JDBC data read — the scale path for pulling a TABLE'S
-    DATA (not just its catalog) through a JDBC source: Spark issues
-    num_partitions range-bounded queries in parallel instead of one
-    single-connection scan. Bounds come from a cheap min/max probe when
-    not supplied. This is how the profiling operators (operators.profile)
-    run against a live database at 100 TB: the profile aggregation
-    pushes column pruning into each partition query.
-    """
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("user", user)
-        .option("password", password)
-        .option("fetchsize", "10000")
-    )
-    if partition_column:
-        if lower_bound is None or upper_bound is None:
-            probe = (
-                spark.read.format("jdbc")
-                .option("url", url)
-                .option("user", user)
-                .option("password", password)
-                .option("query", f"SELECT MIN({partition_column}) AS lo, MAX({partition_column}) AS hi FROM {table}")
-                .load()
-                .first()
-            )
-            lower_bound, upper_bound = probe["lo"], probe["hi"]
-        if lower_bound is None or upper_bound is None:
-            # empty table: MIN/MAX probe is (NULL, NULL); stringifying
-            # that into lowerBound would fail load() with an opaque
-            # number-parse error — an unpartitioned single-connection
-            # read of an empty table is trivially correct instead
-            return reader
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    return reader
-
-
 class JdbcCatalogExtractor(Extractor):
     CONFIG = {
         "url": Field(required=True, type=str),  # jdbc:mysql://host:3306
