@@ -70,12 +70,14 @@ def _sf_of(sf_dir: str) -> float:
 
 def _warm(spark, sf_dir: str) -> None:
     """The main sweep's warm-up, shared by --single children."""
+    from meteor_spark.io import cache_scope
     from meteor_spark.queries import QUERIES
 
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     for warm in ("q1_pricing_summary", "text_analysis", "ann_cosine_topk"):
         try:
-            QUERIES[warm](spark, sf_dir).collect()
+            with cache_scope():
+                QUERIES[warm](spark, sf_dir).collect()
         except Exception:  # noqa: BLE001 — warm-up must never fail the bench
             pass
     try:
@@ -88,14 +90,15 @@ def _warm(spark, sf_dir: str) -> None:
             .outputMode("complete").trigger(availableNow=True)
             .start().awaitTermination(30)
         )
+        spark.catalog.dropTempView("__warm_stream")
     except Exception:  # noqa: BLE001
         pass
-    spark.catalog.clearCache()
 
 
 def single_main(name: str) -> None:
     """Child mode: one gate, fresh process, 3 timed runs."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from meteor_spark.io import cache_scope
     from meteor_spark.session import get_spark
     from meteor_spark.queries import QUERIES
 
@@ -106,13 +109,12 @@ def single_main(name: str) -> None:
     for _ in range(3):
         t0 = time.time()
         try:
-            QUERIES[name](spark, sf_dir).collect()
-            runs.append(round(time.time() - t0, 3))
+            with cache_scope():
+                QUERIES[name](spark, sf_dir).collect()
+                runs.append(round(time.time() - t0, 3))
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {e}", file=sys.stderr)
             runs.append(-1.0)
-        finally:
-            spark.catalog.clearCache()
     print(json.dumps({"single": name, "runs": runs}))
     spark.stop()
 
@@ -227,6 +229,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = _sf_of(sf_dir)
 
+    from meteor_spark.io import cache_scope
     from meteor_spark.session import get_spark
     from meteor_spark.queries import QUERIES
 
@@ -244,15 +247,13 @@ def main() -> None:
     def run_once(name, fn) -> float:
         t0 = time.time()
         try:
-            fn(spark, sf_dir).collect()
-            return round(time.time() - t0, 3)
+            # the scope releases the gate's caches after the timing
+            with cache_scope():
+                fn(spark, sf_dir).collect()
+                return round(time.time() - t0, 3)
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {e}", file=sys.stderr)
             return -1.0
-        finally:
-            # release frames persisted inside operators (minhash/ngram LSH
-            # state) so later queries aren't squeezed by cache memory
-            spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
     for name, fn in QUERIES.items():

@@ -1,38 +1,46 @@
-"""IO helpers: fixture-tolerant parquet reading, plus the two write-side
+"""IO helpers: fixture-tolerant parquet reading, the two write-side
 levers that matter at 100 TB — bucketing (shuffle-free co-located joins)
-and partitioned layout (partition pruning at the scan).
+and partitioned layout (partition pruning at the scan) — and the cache
+scope: whoever builds AND collects a result inside one `cache_scope`
+owns every frame the engine `persist`ed for it.
 """
 
 from __future__ import annotations
+
+import contextlib
+import contextvars
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-# When True (always, outside plan tests), finish_and_release
-# materializes operator results so per-call persisted intermediates can
-# be unpersisted before returning. Plan tests flip it off to inspect
-# the full physical plan of the lazy result.
-EAGER_CACHE_RELEASE = True
+_SCOPE: contextvars.ContextVar = contextvars.ContextVar("cache_scope", default=None)
 
 
-def finish_and_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Materialize a SMALL result frame (localCheckpoint) and unpersist
-    the persisted intermediates that fed it. Operators whose return
-    value is lazy cannot unpersist a cache the caller's collect still
-    needs — but a bare persist outlives the call and accumulates
-    executor storage across long parity/bench sessions (r8 advisory).
-    Eagerly checkpointing the result (always group/pair/report-sized at
-    the call sites) releases the big cache at a bounded storage cost.
-    """
-    if not EAGER_CACHE_RELEASE:
-        return result
+@contextlib.contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, on exit, every frame `persist` cached inside the
+    block. The innermost scope owns; scopes are per thread, so
+    concurrent callers never release each other's caches."""
+    owned: list[DataFrame] = []
+    token = _SCOPE.set(owned)
     try:
-        return result.localCheckpoint(eager=True)
+        yield
     finally:
-        for c in caches:
-            c.unpersist()
+        _SCOPE.reset(token)
+        for df in owned:
+            df.unpersist()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """`df.persist()`, owned by the innermost open `cache_scope`; outside
+    any scope the cache stays until the caller releases it."""
+    owned = _SCOPE.get()
+    if owned is not None:
+        owned.append(df)
+    return df.persist()
 
 
 def read_parquet_table(spark: SparkSession, path: str, ts_cols: tuple[str, ...] = ("ts",)) -> DataFrame:

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import persist
+
 
 def connected_components(
     pairs: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 25
@@ -46,11 +48,10 @@ def connected_components(
     engine-independent. Only nodes that appear in at least one edge are
     returned (singletons carry no dedup decision).
     """
-    edges = (
+    edges = persist(
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .distinct()
-        .persist()
     )
     # round 1 fused into initialization: label(v) = min(v, min neighbors)
     # is one aggregation over the symmetric edge list — no join needed

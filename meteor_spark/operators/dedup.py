@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
+from meteor_spark.io import persist
 from meteor_spark.operators.text import normalize_text, words
 
 
@@ -240,7 +241,7 @@ def minhash_candidate_pairs(
     (measured 140s vs 9s on a 50k-doc corpus). The persisted state is
     (id, band, band_key) — a few dozen bytes per doc.
     """
-    b = minhash_bands(df, text_col, id_col, k, num_hashes, bands).persist()
+    b = persist(minhash_bands(df, text_col, id_col, k, num_hashes, bands))
     return band_pair_join(b, id_col)
 
 
@@ -292,10 +293,10 @@ def minhash_near_duplicates(
     the persist is a few hundred bytes per doc of hash state, far
     smaller than the text itself.
     """
-    sh_df = shingle_frame(df, text_col, id_col, k).persist()
-    band_df = minhash_bands(
+    sh_df = persist(shingle_frame(df, text_col, id_col, k))
+    band_df = persist(minhash_bands(
         df, text_col, id_col, k, num_hashes, bands, sh_df=sh_df
-    ).persist()
+    ))
     pairs = band_pair_join(band_df, id_col)
     return jaccard_pairs(
         df, pairs, text_col, id_col, k, threshold, round_to, sh_df=sh_df
@@ -434,7 +435,7 @@ def simhash_hamming_pairs(
     if drop_degenerate:
         pc = F.bit_count(F.col("simhash").bitwiseAND(F.lit((1 << bits) - 1)))
         base = base.filter((pc > 0) & (pc < bits))
-    base = base.persist()  # distinct sketches + id expansion both read it
+    base = persist(base)  # distinct sketches + id expansion both read it
 
     def chunk_expr(i: int):
         lo = i * width
@@ -443,7 +444,7 @@ def simhash_hamming_pairs(
 
     # persisted: both sides of the chunk self-join read the distinct
     # set, and without the cache the distinct shuffle would run twice
-    ds = base.select("simhash").distinct().persist()
+    ds = persist(base.select("simhash").distinct())
     ex = ds.select(
         "simhash",
         F.explode(
@@ -542,10 +543,9 @@ def prefix_filter_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    sh = (
+    sh = persist(
         shingle_frame(df, text_col, id_col, k)
         .withColumn("sz", F.size("sh"))
-        .persist()
     )
     toks = sh.select(F.col(id_col), "sz", F.explode("sh").alias("gram"))
     freq = toks.groupBy("gram").agg(F.count("*").alias("df"))
@@ -562,12 +562,11 @@ def prefix_filter_jaccard_pairs(
     # (An r12 note claimed this persist measured as a loss; that
     # measurement predates the positional-filter rewrite — the r13
     # plan dump shows the window genuinely running twice without it.)
-    prefixes = (
+    prefixes = persist(
         toks.join(freq, "gram")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= prefix_len)
         .select(F.col(id_col), "sz", "gram", "rn")
-        .persist()
     )
     pa, pb = prefixes.alias("pa"), prefixes.alias("pb")
     # POSITIONAL filter (the "PP" in PPJoin): both prefixes are sorted by
@@ -898,7 +897,7 @@ def duplicated_spans(
     worded = df.select(
         F.col(id_col), words(normalize_text(F.col(text_col))).alias("__ws")
     )
-    grams = worded.select(
+    grams = persist(worded.select(
         F.col(id_col),
         F.posexplode(
             F.transform(
@@ -906,7 +905,7 @@ def duplicated_spans(
                 lambda i: F.md5(F.concat_ws(" ", F.slice("__ws", i, k))),
             )
         ).alias("pos", "gram"),
-    ).persist()  # feeds BOTH the shared-gram agg and the position semi join — tokenize once
+    ))  # feeds BOTH the shared-gram agg and the position semi join — tokenize once
     shared = (
         grams.groupBy("gram")
         .agg(F.count_distinct(id_col).alias("nd"))
@@ -1101,11 +1100,10 @@ def containment_pairs(
     """
     from pyspark.sql import Window
 
-    sh = (
+    sh = persist(
         shingle_frame(df, text_col, id_col, k)
         .select(F.col(id_col), F.transform("sh", lambda g: F.xxhash64(g)).alias("sh"))
         .withColumn("sz", F.size("sh"))
-        .persist()
     )
     toks = sh.select(F.col(id_col), "sz", F.explode("sh").alias("gram"))
     freq = toks.groupBy("gram").agg(F.count("*").alias("df"))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import persist
+
 
 def pagerank(
     edges: DataFrame,
@@ -46,11 +48,10 @@ def pagerank(
     e_raw = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), F.col(weight_col).alias("w")
     )
-    nodes = (
+    nodes = persist(
         e_raw.select(F.col("src").alias("node"))
         .union(e_raw.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     n = nodes.count()
     if n == 0:  # empty graph: empty result, not a 1/N division blow-up
@@ -58,10 +59,9 @@ def pagerank(
             "node", F.lit(None).cast("double").alias("pagerank")
         )
     wout = e_raw.groupBy("src").agg(F.sum("w").cast("double").alias("wout"))
-    e = (
+    e = persist(
         e_raw.join(wout, "src")
         .select("src", "dst", (F.col("w") / F.col("wout")).alias("p"))
-        .persist()
     )
     pr = nodes.select("node", F.round(F.lit(1.0) / n, iter_round).alias("pr"))
     for i in range(iters):

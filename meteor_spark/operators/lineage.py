@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import persist
+
 
 def edges(assets: DataFrame) -> DataFrame:
     """Asset frame (ASSET_SCHEMA) -> distinct (src_urn, dst_urn) edges."""
@@ -48,7 +50,7 @@ def transitive_upstreams(edge_df: DataFrame, max_depth: int = 10) -> DataFrame:
     table and anti-joins what's already known (cycle-safe).
     """
     rev = edge_df.select(F.col("dst_urn").alias("urn"), F.col("src_urn").alias("ancestor_urn"))
-    result = rev.withColumn("depth", F.lit(1)).persist()
+    result = persist(rev.withColumn("depth", F.lit(1)))
     frontier = result
     step = rev.select(F.col("urn").alias("j_urn"), F.col("ancestor_urn").alias("j_ancestor"))
     retired = []
@@ -64,12 +66,12 @@ def transitive_upstreams(edge_df: DataFrame, max_depth: int = 10) -> DataFrame:
             .distinct()
         )
         # anti-join against known (urn, ancestor) pairs: dedup + cycle stop
-        nxt = nxt.join(result.select("urn", "ancestor_urn"), ["urn", "ancestor_urn"], "left_anti").persist()
+        nxt = persist(nxt.join(result.select("urn", "ancestor_urn"), ["urn", "ancestor_urn"], "left_anti"))
         if nxt.isEmpty():
             nxt.unpersist()
             break
         prev = result
-        result = result.unionByName(nxt).persist()
+        result = persist(result.unionByName(nxt))
         result.count()  # materialize before retiring the inputs it was built from
         retired.extend((prev, nxt))
         frontier = nxt

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meteor_spark.io import persist
+
 _PROFILE_FIELDS = ("min", "max", "avg", "med", "unique", "count", "top")
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType)
@@ -165,7 +167,7 @@ def profile_df(
         # FileScans / 0 ReusedExchange on an 11-column profile). The
         # cached frame is one row per distinct (column, value) — tiny
         # next to the input.
-        pre = lf.groupBy("column", "v").agg(F.count("*").alias("cnt")).persist()
+        pre = persist(lf.groupBy("column", "v").agg(F.count("*").alias("cnt")))
         stats = pre.groupBy("column").agg(
             F.min("v").cast("string").alias("min"),
             F.max("v").cast("string").alias("max"),

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from meteor_spark.io import persist
+
 
 def _sql_double(x: float) -> str:
     """Render one double as an exact SQL literal. Python's repr emits the
@@ -207,11 +209,11 @@ def ivf_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    corpus_v = corpus.select(
+    corpus_v = persist(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).persist()  # KMeans makes one pass per iteration; never re-read parquet
+    ))  # KMeans makes one pass per iteration; never re-read parquet
     # random init (seeded, deterministic) skips the k-means|| init jobs;
     # quantizer cells only need to be roughly balanced, not optimal, so a
     # short iteration budget is plenty
@@ -579,11 +581,11 @@ def embedding_near_duplicates(
         dim = len(df.select(vec_col).first()[0])
     # persist: both sides of the self-join would otherwise recompute the
     # bits*dim-term signature expression from raw vectors
-    sigs = df.select(
+    sigs = persist(df.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("v"),
         srp_signature(F.col(vec_col), dim, bits).alias("sig"),
-    ).withColumn("nv", norm(F.col("v"))).persist()
+    ).withColumn("nv", norm(F.col("v"))))
     l, r = sigs.alias("l"), sigs.alias("r")
     return (
         l.join(r, "sig")
@@ -1027,11 +1029,11 @@ def ivf_write_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    corpus_v = corpus.select(
+    corpus_v = persist(corpus.select(
         F.col(id_col),
         F.col(vec_col),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).persist()
+    ))
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="features", predictionCol="cell", initMode="random", maxIter=5
     ).fit(corpus_v)
@@ -1144,7 +1146,7 @@ def kmeans_fit(
     """
     # every iteration re-scans the vectors: persist once (at 100 TB this
     # is THE difference between iters x full-table reads and one read)
-    base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")).persist()
+    base = persist(df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")))
     cents = [
         [float(x) for x in r[0]]
         for r in base.orderBy(id_col).limit(k).select("v").collect()
@@ -1532,10 +1534,9 @@ def power_iteration_pc1(
     )
     # NULL vectors carry no direction information; dropping them also
     # keeps the dim probe below from landing on a NULL row
-    base = (
+    base = persist(
         df.filter(F.col(vec_col).isNotNull())
         .select(F.col(id_col), xm.alias("xm"))
-        .persist()
     )
     first = base.select(F.size("xm").alias("d")).first()
     if first is None:
@@ -1678,12 +1679,11 @@ def margin_bitext_mine(
     # per-query mass, target set) — without it the |B| x |Q| broadcast
     # scan re-runs per consumer; persisted it is one pass over B and
     # |Q|*k rows of state
-    fwd = (
+    fwd = persist(
         b.join(F.broadcast(q), F.lit(True))
         .select("src_id", "tgt_id", c4("qv", "qv_n", "bv", "bv_n").alias("c4"))
         .withColumn("r", F.row_number().over(wq))
         .filter(F.col("r") <= k)
-        .persist()
     )
     fwd_sum = fwd.groupBy("src_id").agg(F.sum("c4").alias("sum_fwd"))
 
@@ -1715,14 +1715,8 @@ def margin_bitext_mine(
     wbest = Window.partitionBy("src_id").orderBy(
         F.col("margin_ppm").desc(), F.col("tgt_id")
     )
-    result = (
+    return (
         scored.withColumn("best", F.row_number().over(wbest))
         .filter(F.col("best") == 1)
         .select("src_id", "tgt_id", F.col("c4").alias("cos_e4"), "margin_ppm")
     )
-    # materialize the (|Q|-row) result so fwd's cache can be released
-    # before returning — a bare persist here outlives the call and
-    # accumulates executor storage across long parity/bench sessions
-    from meteor_spark.io import finish_and_release
-
-    return finish_and_release(result, fwd)

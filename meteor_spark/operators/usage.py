@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import persist
+
 
 def table_usage(log: DataFrame, referenced_col: str = "referenced") -> DataFrame:
     """urn -> usage_count (stats.go:69-75). One explode + one groupBy."""
@@ -374,7 +376,7 @@ def tcloseness_census(
     # counts, set sizes, global distribution, total); without it each
     # recomputes the count/window/signature pipeline — one user-sized
     # frame cached vs 4x the upstream work, the standard trade
-    j = sig.join(dominant, user_col).persist()
+    j = persist(sig.join(dominant, user_col))
     set_counts = j.groupBy("sig", "sens").agg(F.count("*").cast("long").alias("c"))
     set_sizes = j.groupBy("sig").agg(F.count("*").cast("long").alias("k"))
     glob = j.groupBy("sens").agg(F.count("*").cast("long").alias("g"))
@@ -397,7 +399,7 @@ def tcloseness_census(
         F.sum("term").cast("long").alias("t_num")
     )
     t_ppm = F.expr(fixed_div_expr("t_num", "2 * k * n_g", 6, "div")).cast("long")
-    result = (
+    return (
         per_set.select("k", t_ppm.alias("t_ppm"))
         .groupBy("k")
         .agg(
@@ -406,9 +408,3 @@ def tcloseness_census(
         )
         .orderBy("k")
     )
-    # materialize the (set-size-count-sized) result so j's user-sized
-    # cache is released before returning — a bare persist outlives the
-    # call and accumulates executor storage across long sessions
-    from meteor_spark.io import finish_and_release
-
-    return finish_and_release(result, j)

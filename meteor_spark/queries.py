@@ -11,11 +11,12 @@ Determinism contract shared by every pair:
   same row set;
 - every computed column is aliased identically in both formulations.
 
-Each gate call builds its own inputs; no frame or rule list is kept
-between calls. A fixture rewritten inside one session needs
-`spark.catalog.clearCache()` before the next call: a frame an operator
-persisted stays in Spark's CacheManager, which matches it by plan and
-so serves the old file's rows.
+Each gate call builds its own inputs; no frame, rule list or catalog
+view is kept between calls. A caller that builds and collects a gate
+inside one `io.cache_scope()` leaves no cache behind. A caller outside
+any scope (an external harness, perfbench) keeps what the operators
+persisted in Spark's CacheManager, which matches by plan and so serves
+a fixture rewritten in-session stale, until it clears the cache.
 
 Reference parity notes are cited per query (file:line into
 /root/reference) — see SURVEY.md §2 for the inventory this covers.
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 
 import meteor_spark.processors  # noqa: F401 — registers processor plugins (enrich_catalog)
 import meteor_spark.sources  # noqa: F401 — registers source plugins used by catalog queries
+from meteor_spark.io import persist
 from meteor_spark.operators import dedup, drift, sampling, similarity, text, usage
 from meteor_spark.operators.profile import profile_df
 from meteor_spark.functions import sqlparser, unix_us
@@ -795,13 +797,13 @@ def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e.withColumn("day", F.date_trunc("day", "ts").cast("string")).withColumn(
         "hour", F.date_trunc("hour", "ts").cast("string")
     )
-    e.createOrReplaceTempView("events_mr")
     return spark.sql(
         """
         SELECT day, hour, event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-        FROM events_mr
+        FROM {events}
         GROUP BY GROUPING SETS ((day, event_type), (day, hour, event_type))
-        """
+        """,
+        events=e,
     )
 
 
@@ -818,6 +820,8 @@ def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # last ulp at sf0.001 (caught by the strict full-precision parity
 # sweep; the published 2-decimal value was right, the bits were not).
 # One division at the end is correctly rounded on any IEEE engine.
+# A template: Spark binds each {table} to a frame, the oracle to its name.
+_SQL_API_TABLES = ("lineitem", "orders", "supplier", "nation")
 _SQL_API_REVENUE = """
     SELECT n_name, o_orderpriority,
            round(sum(rev_fp) / CAST(10000 AS DOUBLE), 2) AS revenue,
@@ -826,26 +830,24 @@ _SQL_API_REVENUE = """
       SELECT n.n_name, o.o_orderpriority, o.o_orderkey,
              sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
                  * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS rev_fp
-      FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n   ON s.s_nationkey = n.n_nationkey
+      FROM {lineitem} l
+        JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+        JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+        JOIN {nation} n   ON s.s_nationkey = n.n_nationkey
       GROUP BY n.n_name, o.o_orderpriority, o.o_orderkey
     ) per_order
     GROUP BY n_name, o_orderpriority
     """
 
 
-@query("sql_api_revenue", _SQL_API_REVENUE)
+@query("sql_api_revenue", _SQL_API_REVENUE.format(**{t: t for t in _SQL_API_TABLES}))
 def sql_api_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The spark.sql() path: identical text to the oracle, Catalyst plans
-    it the same as the DataFrame API (temp views over the parquet).
+    """The spark.sql() path: the oracle's text with each table bound to
+    its parquet frame; Catalyst plans it the same as the DataFrame API.
     n_orders counts DISTINCT orders per (nation, priority): the inner
     per-order aggregate makes each (group, orderkey) one row, so the
     outer count(*) is the distinct count without an Expand rewrite."""
-    for t in ("lineitem", "orders", "supplier", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_API_REVENUE)
+    return spark.sql(_SQL_API_REVENUE, **{t: _t(spark, sf_dir, t) for t in _SQL_API_TABLES})
 
 
 # --------------------------------------------------------------------------
@@ -2460,13 +2462,13 @@ def minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: connected_components and minhash_eval_report each read
     # the pairs twice
-    return dedup.minhash_near_duplicates(
+    return persist(dedup.minhash_near_duplicates(
         _docs(spark, sf_dir),
         k=_MINHASH_K,
         num_hashes=_MINHASH_HASHES,
         bands=_MINHASH_BANDS,
         threshold=0.5,
-    ).persist()
+    ))
 
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2619,9 +2621,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup.shingle_frame(docs, "text", "doc_id", _NGRAM_K, extra_cols=("lang", "source"))
     # both sides of the self-join read the postings; persist so the
     # corpus is shingled once, not once per side
-    toks = sh.select(
+    toks = persist(sh.select(
         "doc_id", "lang", "source", F.size("sh").alias("sz"), F.explode("sh").alias("gram")
-    ).persist()
+    ))
     a, b = toks.alias("a"), toks.alias("b")
     inter = (
         a.join(
@@ -3106,7 +3108,7 @@ def _semdedup_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_SEMDEDUP_PLANT)
         .select((F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding", "label")
     )
-    return similarity.semantic_assign(emb.unionByName(planted), n_clusters=_SEMDEDUP_K).persist()
+    return persist(similarity.semantic_assign(emb.unionByName(planted), n_clusters=_SEMDEDUP_K))
 
 
 @query(
@@ -4111,7 +4113,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = ann.filter((F.col("lang_guess") == "en") & (F.col("quality") >= 0.55))
     surv = kept.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    kept = kept.join(surv, ["fp", "doc_id"], "left_semi").persist()
+    kept = persist(kept.join(surv, ["fp", "doc_id"], "left_semi"))
     chunks = text.chunk_documents(kept, chunk_size=_CHUNK_SIZE, overlap=_CHUNK_OVERLAP)
     per_doc = chunks.groupBy("doc_id").agg(
         F.count("*").alias("n_chunks"), F.sum("n_tokens").alias("n_chunk_tokens")
@@ -4386,13 +4388,13 @@ def neardup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _session_tmpdir("msk_cmp_")
     store = os.path.join(base, "store")
 
-    csh = shingle_frame(corpus, "text", "doc_id", _MINHASH_K).persist()
+    csh = persist(shingle_frame(corpus, "text", "doc_id", _MINHASH_K))
     csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(
         f"{store}/shingles"
     )
     minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
     csh.unpersist()
-    bsh = shingle_frame(batch, "text", "doc_id", _MINHASH_K).persist()
+    bsh = persist(shingle_frame(batch, "text", "doc_id", _MINHASH_K))
     for _ in range(2):  # at-least-once: same survivors appended twice
         bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(
             f"{store}/shingles"
@@ -7001,11 +7003,9 @@ def minhash_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches, 2B+ distinct candidates — measured fatal on disk twice),
     while the blocked join is output-linear with broadcast postings."""
     # persisted: read twice, by its count and by the semi join
-    truth = (
+    truth = persist(
         dedup.exact_jaccard_pairs_blocked(_docs(spark, sf_dir), threshold=0.5)
-        .persist()
-        .select("a", "b")
-    )
+    ).select("a", "b")
     det = _minhash_pairs(spark, sf_dir).select("a", "b")
     hit = truth.join(det, ["a", "b"], "left_semi")
     return (
@@ -9293,16 +9293,8 @@ def source_overlap_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w"),
     )
-    partials = sketches.hll64_partials(toks, ["source"], "w", lg_k=_HLL64_LGK).persist()
-    # materialize the (source-pair-sized) result, then release the
-    # register cache — a bare persist outlives the gate and accumulates
-    # executor storage across long parity/bench sessions
-    from meteor_spark.io import finish_and_release
-
-    return finish_and_release(
-        sketches.hll_pairwise_overlap(partials, "source", lg_k=_HLL64_LGK),
-        partials,
-    )
+    partials = persist(sketches.hll64_partials(toks, ["source"], "w", lg_k=_HLL64_LGK))
+    return sketches.hll_pairwise_overlap(partials, "source", lg_k=_HLL64_LGK)
 
 
 @query(

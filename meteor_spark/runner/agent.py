@@ -23,7 +23,9 @@ Spark-first divergences (SURVEY.md §4 — deliberate):
   - Before multi-sink fan-out the DataFrame is persisted, so each sink
     action re-reads the cache instead of re-running the extractor —
     the analogue of the reference's per-subscriber channels fed by one
-    extraction pass (agent/stream.go:51-103).
+    extraction pass (agent/stream.go:51-103). Each run owns one
+    io.cache_scope that releases this and every processor cache when
+    the run ends, without touching concurrent runs' caches.
   - Record count comes from df.count() on the cached frame — one extra
     action on cached data, not a second extraction. A sink that writes
     the whole frame returns None and is credited with that count
@@ -45,6 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from meteor_spark import registry
+from meteor_spark.io import cache_scope, persist
 from meteor_spark.plugins_base import InvalidConfigError
 from meteor_spark.recipe import Recipe
 from meteor_spark.runner import retrier
@@ -106,52 +109,52 @@ class Agent:
                     log.exception("monitor failed")
             return report
         started = time.monotonic()
-        df: DataFrame | None = None
         try:
-            extractor = registry.extractors.get(recipe.source.name)
-            extractor.init(recipe.source.config)
-            procs = []
-            for p in recipe.processors:
-                proc = registry.processors.get(p.name)
-                proc.init(p.config)
-                procs.append(proc)
-            sink_instances = []
-            for s in recipe.sinks:
-                sink = registry.sinks.get(s.name)
-                sink.init(s.config)
-                sink_instances.append((s.name, sink))
+            with cache_scope():
+                extractor = registry.extractors.get(recipe.source.name)
+                extractor.init(recipe.source.config)
+                procs = []
+                for p in recipe.processors:
+                    proc = registry.processors.get(p.name)
+                    proc.init(p.config)
+                    procs.append(proc)
+                sink_instances = []
+                for s in recipe.sinks:
+                    sink = registry.sinks.get(s.name)
+                    sink.init(s.config)
+                    sink_instances.append((s.name, sink))
 
-            df = extractor.extract(self.spark)
-            for proc in procs:
-                df = proc.process(df)
+                df = extractor.extract(self.spark)
+                for proc in procs:
+                    df = proc.process(df)
 
-            # persist once, then one action per sink (reference:
-            # agent/stream.go:92-103 push-to-every-subscriber). ALWAYS
-            # persist: the record-count middleware's count() below is
-            # itself an action, so even a single-sink run takes >= 2
-            # passes over the pipeline without the cache
-            df = df.persist()
-            report.record_count = df.count()  # record-count middleware (agent.go:153-157)
+                # persist once, then one action per sink (reference:
+                # agent/stream.go:92-103 push-to-every-subscriber). ALWAYS
+                # persist: the record-count middleware's count() below is
+                # itself an action, so even a single-sink run takes >= 2
+                # passes over the pipeline without the cache
+                df = persist(df)
+                report.record_count = df.count()  # record-count middleware (agent.go:153-157)
 
-            sink_errors: list[str] = []
-            for name, sink in sink_instances:
-                try:
-                    written = retrier.retry(
-                        lambda s=sink: s.sink(df),
-                        max_retries=self.max_retries,
-                        initial_interval_s=self.retry_initial_interval_s,
-                    )
-                    report.sink_records[name] = written if written is not None else report.record_count
-                except Exception as e:  # noqa: BLE001 — sink failure policy below
-                    if self.stop_on_sink_error:
-                        raise
-                    log.error("sink %s failed (continuing): %s", name, e)
-                    sink_errors.append(f"{name}: {e}")
-                finally:
-                    sink.close()
-            report.success = True
-            if sink_errors:
-                report.error = "; ".join(sink_errors)
+                sink_errors: list[str] = []
+                for name, sink in sink_instances:
+                    try:
+                        written = retrier.retry(
+                            lambda s=sink: s.sink(df),
+                            max_retries=self.max_retries,
+                            initial_interval_s=self.retry_initial_interval_s,
+                        )
+                        report.sink_records[name] = written if written is not None else report.record_count
+                    except Exception as e:  # noqa: BLE001 — sink failure policy below
+                        if self.stop_on_sink_error:
+                            raise
+                        log.error("sink %s failed (continuing): %s", name, e)
+                        sink_errors.append(f"{name}: {e}")
+                    finally:
+                        sink.close()
+                report.success = True
+                if sink_errors:
+                    report.error = "; ".join(sink_errors)
         except Exception as e:  # noqa: BLE001 — report-shaped error handling
             report.error = str(e)
             report.success = False
@@ -164,8 +167,6 @@ class Agent:
             if self._cancelled:
                 report.success = False
                 report.error = report.error or "cancelled"
-            if df is not None and df.is_cached:
-                df.unpersist()
             report.duration_ms = int((time.monotonic() - started) * 1000)
             for m in self.monitors:
                 try:

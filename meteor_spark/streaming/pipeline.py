@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meteor_spark.io import persist
+
+
 def normalize_ts(raw: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize whatever timestamp flavor the fixture shipped with —
     nanos-as-long (r1), timestamp[us]/TIMESTAMP_NTZ (r2), or a true
@@ -99,9 +102,7 @@ def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
-def run_stream_to_batch(
-    stream_df: DataFrame, output_mode: str = "complete", state_partitions: int | None = 4
-) -> DataFrame:
+def run_stream_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drive a (bounded) streaming query to completion; return results.
 
     Uses trigger(availableNow) + the in-memory sink. Complete mode emits
@@ -116,8 +117,7 @@ def run_stream_to_batch(
     # per microbatch for mostly-empty stores. Pin the stream to a few
     # partitions and restore the session default after.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -130,6 +130,7 @@ def run_stream_to_batch(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.table(name)
+    spark.catalog.dropTempView(name)  # out's plan holds the sink: its rows stay
     return out
 
 
@@ -458,7 +459,7 @@ def _compact_dataset(
     rows_before = _footer_rows(in_files)
     if rows_before is None:
         rows_before = df.count()
-    deduped = df.dropDuplicates(key_cols).persist()
+    deduped = persist(df.dropDuplicates(key_cols))
     expect = deduped.count()
     if prefix_col is not None:
         plen = 2 if expect > 100_000 else 1
@@ -648,7 +649,7 @@ def incremental_neardup_stream(
     # seed=False continues ingestion on an EXISTING store (e.g. one
     # rewritten by compact_neardup_store) instead of overwriting it.
     if seed:
-        corpus_sh = shingle_frame(corpus, text_col, id_col, k).persist()
+        corpus_sh = persist(shingle_frame(corpus, text_col, id_col, k))
         # the two seed writes are independent jobs over the persisted
         # shingle frame; overlapping them (guide §2.6) hides the
         # cheaper write inside the band-hash one. Concurrent first
@@ -676,8 +677,8 @@ def incremental_neardup_stream(
         nonlocal n_batches
         n_batches += 1
         s = batch_df.sparkSession
-        sh_b = shingle_frame(batch_df, text_col, id_col, k).persist()
-        b_b = _bands_of(sh_b).persist()
+        sh_b = persist(shingle_frame(batch_df, text_col, id_col, k))
+        b_b = persist(_bands_of(sh_b))
 
         # compacted stores are hive-partitioned by band_key prefix:
         # prune the candidate scan to the batch's own prefixes, and
@@ -724,7 +725,7 @@ def incremental_neardup_stream(
         )
 
         dropped = dup_of_store.unionByName(dup_in_batch).distinct()
-        survivors_sh = sh_b.join(dropped, id_col, "left_anti").persist()
+        survivors_sh = persist(sh_b.join(dropped, id_col, "left_anti"))
 
         # the two survivor appends touch disjoint store dirs and both
         # read the persisted survivor frame — overlap them (§2.6, the

@@ -164,29 +164,34 @@ def test_filter_processor_rejects_missing_config(spark):
         p.init({})
 
 
-def test_mix_pipeline_e2e(spark, tmp_path):
-    """parquet_table -> [reweight, passage_dedup, interleave] -> file:
-    the data-mixing recipe surface over the round-3 curation ops."""
+def _mix_docs(path, texts, langs) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    base = " ".join(f"w{i}" for i in range(16))
     rows = {
         "doc_id": [1, 2, 3, 4],
-        "text": [base, base, "fresh unique words entirely " + " ".join(f"u{i}" for i in range(12)), "mas palabras unicas aqui " + " ".join(f"v{i}" for i in range(12))],
-        "lang": ["en", "en", "en", "es"],
+        "text": texts,
+        "lang": langs,
         "source": ["a", "b", "a", "b"],
     }
-    src = tmp_path / "docs.parquet"
-    pq.write_table(pa.table(rows), src)
-    out = tmp_path / "mixed"
+    pq.write_table(pa.table(rows), path)
 
-    from meteor_spark.recipe.loader import parse_recipe
-    from meteor_spark.runner import Agent
 
-    recipe = parse_recipe(
+_MIX_BASE = " ".join(f"w{i}" for i in range(16))
+_MIX_TEXTS = [
+    _MIX_BASE,
+    _MIX_BASE,
+    "fresh unique words entirely " + " ".join(f"u{i}" for i in range(12)),
+    "mas palabras unicas aqui " + " ".join(f"v{i}" for i in range(12)),
+]
+_MIX_LANGS = ["en", "en", "en", "es"]
+
+
+def _mix_recipe(src, out, name: str = "mix"):
+    """parquet_table -> [reweight, passage_dedup, interleave] -> parquet."""
+    return parse_recipe(
         f"""
-name: mix
+name: {name}
 version: v1beta1
 source:
   name: parquet_table
@@ -208,8 +213,17 @@ sinks:
       path: {out}
       format: parquet
 """,
-        default_name="mix",
+        default_name=name,
     )
+
+
+def test_mix_pipeline_e2e(spark, tmp_path):
+    """parquet_table -> [reweight, passage_dedup, interleave] -> file:
+    the data-mixing recipe surface over the round-3 curation ops."""
+    src = tmp_path / "docs.parquet"
+    _mix_docs(src, _MIX_TEXTS, _MIX_LANGS)
+    out = tmp_path / "mixed"
+    recipe = _mix_recipe(src, out)
     agent = Agent(spark)
     assert agent.validate(recipe) == []
     run = agent.run(recipe)
@@ -224,6 +238,52 @@ sinks:
     assert got[0].source != got[1].source
     # reweight kept the weight column populated
     assert all(r.log_weight is not None for r in got)
+
+
+def test_mix_runs_release_their_caches(spark, tmp_path):
+    """Agent.run owns every cache it or a processor makes: the
+    CacheManager is empty after a run, so a source rewritten between
+    runs is read fresh (a leaked reweight cache matches the new read by
+    plan and serves the old file's weights), and run_multiple's
+    concurrent runs each release their own."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    agent = Agent(spark)
+
+    def weights(out):
+        rows = spark.read.parquet(str(out)).orderBy("position").collect()
+        return [(r.doc_id, r.log_weight) for r in rows]
+
+    spark.catalog.clearCache()
+    src = tmp_path / "docs.parquet"
+    _mix_docs(src, _MIX_TEXTS, _MIX_LANGS)
+    assert agent.run(_mix_recipe(src, tmp_path / "first")).success
+    assert cache.isEmpty()
+
+    _mix_docs(
+        src,
+        [
+            "the quick brown fox " + " ".join(f"q{i}" for i in range(12)),
+            "a slow green turtle " + " ".join(f"s{i}" for i in range(12)),
+            _MIX_BASE,
+            "otra frase nueva aqui " + " ".join(f"o{i}" for i in range(12)),
+        ],
+        ["es", "en", "en", "es"],
+    )
+    assert agent.run(_mix_recipe(src, tmp_path / "second")).success
+    spark.catalog.clearCache()
+    assert agent.run(_mix_recipe(src, tmp_path / "cold")).success
+    assert weights(tmp_path / "second") == weights(tmp_path / "cold")
+    assert weights(tmp_path / "cold") != weights(tmp_path / "first")
+
+    src_a = tmp_path / "docs_a.parquet"
+    _mix_docs(src_a, _MIX_TEXTS, _MIX_LANGS)
+    runs = agent.run_multiple(
+        [_mix_recipe(src, tmp_path / "m1", "m1"), _mix_recipe(src_a, tmp_path / "m2", "m2")]
+    )
+    assert all(r.success for r in runs), [r.error for r in runs]
+    assert cache.isEmpty()
+    assert weights(tmp_path / "m1") == weights(tmp_path / "cold")
+    assert weights(tmp_path / "m2") == weights(tmp_path / "first")
 
 
 def test_boilerplate_scrub_in_recipe(spark, tmp_path):

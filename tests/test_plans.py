@@ -468,14 +468,8 @@ def test_plan_budget(spark, name):
     from meteor_spark import io
 
     spark.catalog.clearCache()
-    # keep the lazy plan inspectable: finish_and_release would swap the
-    # whole subtree for a localCheckpoint RDD scan, hiding every
-    # exchange/join the budget pins
-    io.EAGER_CACHE_RELEASE = False
-    try:
+    with io.cache_scope():
         got = _plan_counts(_plan(spark, name))
-    finally:
-        io.EAGER_CACHE_RELEASE = True
     budget = _PLAN_BUDGETS[name]
     max_shuffle, min_bhj, max_bnlj = budget[:3]
     max_smj = budget[3] if len(budget) > 3 else 0

@@ -1,6 +1,6 @@
 """Capture `.explain("formatted")` for named gates with the cold-plan
-protocol of tests/test_plans.py (Spark cache cleared, eager cache
-release disabled). Usage:
+protocol of tests/test_plans.py (Spark cache cleared, the gate built
+inside a cache scope). Usage:
 
     python tools/capture_plans.py <out_dir> <suffix> gate [gate ...]
 
@@ -25,22 +25,17 @@ def main() -> None:
     spark = get_spark("capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(out_dir, exist_ok=True)
-    # restore whatever value the module (or a caller) had set, not a
-    # hard-coded True — the tool must not silently flip global state
-    prev_eager = io.EAGER_CACHE_RELEASE
     for name in gates:
         spark.catalog.clearCache()
-        io.EAGER_CACHE_RELEASE = False
         try:
-            df = QUERIES[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            with io.cache_scope():
+                df = QUERIES[name](spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
         except Exception as e:  # noqa: BLE001
             print(f"SKIP {name}: {e}", file=sys.stderr)
             continue
-        finally:
-            io.EAGER_CACHE_RELEASE = prev_eager
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

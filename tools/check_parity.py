@@ -335,6 +335,7 @@ def main() -> int:
     # layout by fixture label; export it BEFORE the oracle strings are
     # built at import time so both engines resolve the same dir
     os.environ["SPARK_GRAFT_FIXTURE"] = os.path.basename(sf_dir.rstrip("/"))
+    from meteor_spark.io import cache_scope
     from meteor_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -422,7 +423,8 @@ def main() -> int:
                 failures.append(name)
                 continue
             try:
-                scols, stotal, sdig, smax = spark_digest(fn(spark, sf_dir))
+                with cache_scope():
+                    scols, stotal, sdig, smax = spark_digest(fn(spark, sf_dir))
             except Exception as e:  # noqa: BLE001
                 print(f"FAIL {name}: spark error: {e}")
                 failures.append(name)
@@ -498,9 +500,10 @@ def main() -> int:
                 _decertify(name)
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with cache_scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
