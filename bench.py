@@ -175,14 +175,16 @@ def isolate_main(spec: str) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     full_path = os.path.join(here, "BENCH_FULL.json")
     if spec == "auto":
+        from meteor_spark.queries import QUERIES
+
         with open(full_path) as f:
             prior = json.load(f)
         # 1.0s (was 2.0 through r9): the headline tier starts around 1s
         # at sf0.1, and sub-second drift there (r9's ivf_ann_topk +0.55s)
-        # should be self-adjudicating via the isolated medians
+        # should be self-adjudicating via the isolated medians; only
+        # registered gates, since an older record may carry other keys
         names = sorted(
-            k for k, t in prior.get("queries", {}).items()
-            if t > 1.0 and not k.endswith(("_per_batch", "_per_mb"))
+            k for k, t in prior.get("queries", {}).items() if t > 1.0 and k in QUERIES
         )
     else:
         names = [n for n in spec.split(",") if n]
@@ -282,37 +284,7 @@ def main() -> None:
                 t = min(t, t2)
         timings[name] = t
 
-    # Amortized store-lifecycle line items (informational, excluded
-    # from the total): the two multi-microbatch pipeline gates report
-    # one number that mixes per-batch fixed cost with state growth;
-    # these split out cost per microbatch and per MB of store
-    # compacted, from instrumentation of the gates' final run.
-    try:
-        from meteor_spark.streaming.pipeline import LAST_STATS
-
-        if timings.get("streaming_incremental_neardup", -1) > 0 and LAST_STATS.get(
-            "neardup_stream_batches"
-        ):
-            timings["streaming_incremental_neardup_per_batch"] = round(
-                LAST_STATS["neardup_stream_sec"]
-                / LAST_STATS["neardup_stream_batches"],
-                3,
-            )
-        if timings.get("neardup_store_compaction", -1) > 0 and LAST_STATS.get(
-            "compact_bytes_in"
-        ):
-            timings["neardup_store_compaction_per_mb"] = round(
-                LAST_STATS["compact_sec"] / (LAST_STATS["compact_bytes_in"] / 1e6),
-                3,
-            )
-    except Exception as e:  # noqa: BLE001
-        print(f"bench error deriving amortized entries: {e}", file=sys.stderr)
-
-    _informational = ("_per_batch", "_per_mb")
-    total = round(
-        sum(t for k, t in timings.items() if t >= 0 and not k.endswith(_informational)),
-        3,
-    )
+    total = round(sum(t for t in timings.values() if t >= 0), 3)
     failed = sorted(k for k, t in timings.items() if t < 0)
     # Full per-query timings go to a side file; the stdout line must stay
     # SHORT — the driver keeps only the last ~2KB of stdout, and a JSON
@@ -335,8 +307,8 @@ def main() -> None:
         # the side file is best-effort; the stdout line below must still
         # print (a read-only checkout/full disk must not null the bench)
         print(f"bench warning: could not write BENCH_FULL.json: {e}", file=sys.stderr)
-    # headline = every timing in registration order, the two derived
-    # entries last; compact_line trims from the end to fit the line
+    # headline = every timing in registration order; compact_line trims
+    # from the end to fit the line
     print(compact_line(timings, list(timings), failed, total, sf))
     spark.stop()
 

@@ -64,6 +64,27 @@ def _session_tmpdir(prefix: str) -> str:
     return d
 
 
+def _stage_microbatches(base: str, parts: tuple[DataFrame, ...]) -> str:
+    """Stage each frame of `parts` as one parquet file
+    `<base>/in/batch_<i>.parquet` with mtimes 1000s apart in list order,
+    so a maxFilesPerTrigger=1 file stream reads them as ordered
+    microbatches; returns the watch dir `<base>/in`."""
+    import glob
+    import os
+    import shutil
+
+    watch = os.path.join(base, "in")
+    os.makedirs(watch)
+    for i, part in enumerate(parts):
+        d = os.path.join(base, f"b{i}")
+        part.coalesce(1).write.mode("overwrite").parquet(d)
+        src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
+        dst = os.path.join(watch, f"batch_{i}.parquet")
+        shutil.copyfile(src, dst)
+        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
+    return watch
+
+
 _PROC_TMP_ROOT: str | None = None
 
 
@@ -4216,9 +4237,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, the per-batch min-id survivor equals the batch-mode global
     min-id survivor, so the oracle is the same SQL as incremental_dedup
     — the streaming execution must land on the identical row set."""
-    import glob
     import os
-    import shutil
+
+    from meteor_spark.streaming.pipeline import incremental_dedup_stream
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 400)
@@ -4226,23 +4247,11 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") < 50).select((F.col("doc_id") + 1000).alias("doc_id"), "text")
     )
     base = _session_tmpdir("msk_sid_")
-    watch = os.path.join(base, "in")
-    os.makedirs(watch)
-    parts = (newb.filter(F.col("doc_id") < 2000), newb.filter(F.col("doc_id") >= 2000))
-    for i, part in enumerate(parts):
-        d = os.path.join(base, f"b{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(d)
-        src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-        dst = os.path.join(watch, f"batch_{i}.parquet")
-        shutil.copyfile(src, dst)
-        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
-    from meteor_spark.streaming.pipeline import incremental_dedup_stream
-
-    # microbatches here are a few hundred rows; 4 shuffle partitions
-    # kills per-batch task-scheduling overhead (see _run_foreach_batch)
+    watch = _stage_microbatches(
+        base, (newb.filter(F.col("doc_id") < 2000), newb.filter(F.col("doc_id") >= 2000))
+    )
     return incremental_dedup_stream(
-        spark, watch, corpus, os.path.join(base, "store"), os.path.join(base, "ckpt"),
-        shuffle_partitions=4,
+        spark, watch, corpus, os.path.join(base, "store"), os.path.join(base, "ckpt")
     )
 
 
@@ -4315,9 +4324,9 @@ def streaming_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     Upgraded from rows-only in round 4: the family is deterministic and
     the batch composition fixed, so _SND_ORACLE replays both microbatch
     steps (including the store growing by batch-0 survivors) exactly."""
-    import glob
     import os
-    import shutil
+
+    from meteor_spark.streaming.pipeline import incremental_neardup_stream
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 400)
@@ -4327,23 +4336,11 @@ def streaming_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     newb = docs.filter((F.col("doc_id") >= 400) & (F.col("doc_id") < 480)).union(paraphrased)
     base = _session_tmpdir("msk_snd_")
-    watch = os.path.join(base, "in")
-    os.makedirs(watch)
-    parts = (newb.filter(F.col("doc_id") < 5000), newb.filter(F.col("doc_id") >= 5000))
-    for i, part in enumerate(parts):
-        d = os.path.join(base, f"b{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(d)
-        src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-        dst = os.path.join(watch, f"batch_{i}.parquet")
-        shutil.copyfile(src, dst)
-        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
-    from meteor_spark.streaming.pipeline import incremental_neardup_stream
-
-    # microbatches here are ~100 rows; 4 shuffle partitions kills
-    # per-batch task-scheduling overhead (measured 11.6s -> 6.3s)
+    watch = _stage_microbatches(
+        base, (newb.filter(F.col("doc_id") < 5000), newb.filter(F.col("doc_id") >= 5000))
+    )
     return incremental_neardup_stream(
-        spark, watch, corpus, os.path.join(base, "store"), os.path.join(base, "ckpt"),
-        shuffle_partitions=4,
+        spark, watch, corpus, os.path.join(base, "store"), os.path.join(base, "ckpt")
     )
 
 
@@ -4379,29 +4376,21 @@ def neardup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-prune (test_streaming.py asserts the pruned plan)."""
     import os
 
-    from meteor_spark.operators.dedup import minhash_bands, shingle_frame
-    from meteor_spark.streaming.pipeline import compact_neardup_store
+    from meteor_spark.operators.dedup import shingle_frame
+    from meteor_spark.streaming.pipeline import compact_neardup_store, write_neardup_store
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 400)
     batch = docs.filter((F.col("doc_id") >= 400) & (F.col("doc_id") < 480))
-    base = _session_tmpdir("msk_cmp_")
-    store = os.path.join(base, "store")
+    store = os.path.join(_session_tmpdir("msk_cmp_"), "store")
 
-    csh = persist(shingle_frame(corpus, "text", "doc_id", _MINHASH_K))
-    csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(
-        f"{store}/shingles"
-    )
-    minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
-    csh.unpersist()
-    bsh = persist(shingle_frame(batch, "text", "doc_id", _MINHASH_K))
-    for _ in range(2):  # at-least-once: same survivors appended twice
-        bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(
-            f"{store}/shingles"
+    # seed, then the at-least-once replay: same survivors appended twice
+    for sh_src, seed in ((corpus, True), (batch, False), (batch, False)):
+        write_neardup_store(
+            shingle_frame(sh_src, "text", "doc_id", _MINHASH_K), store,
+            seed=seed, store_pcol=None, id_col="doc_id",
+            num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS,
         )
-        minhash_bands(batch, sh_df=bsh).write.mode("append").parquet(f"{store}/bands")
-    bsh.unpersist()
-
     compact_neardup_store(spark, store)
     return (
         spark.read.parquet(f"{store}/bands")
@@ -8754,13 +8743,8 @@ def streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical under either cleanup timing). The four-microbatch
     fixture exercises fresh keys, live-state drops, and
     post-eviction re-admission."""
-    import glob
-    import os
-    import shutil
+    from meteor_spark.streaming.pipeline import ttl_dedup_stream
 
-    base = _session_tmpdir("msk_ttl_")
-    watch = os.path.join(base, "in")
-    os.makedirs(watch)
     t0 = _TTL_T0
     batches = (
         spark.range(100).selectExpr("id AS k", f"timestamp_seconds({t0} + id) AS ts"),
@@ -8778,16 +8762,7 @@ def streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    for i, part in enumerate(batches):
-        d = os.path.join(base, f"b{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(d)
-        src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-        dst = os.path.join(watch, f"batch_{i}.parquet")
-        shutil.copyfile(src, dst)
-        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
-    from meteor_spark.streaming.pipeline import ttl_dedup_stream
-
-    out = ttl_dedup_stream(spark, watch)
+    out = ttl_dedup_stream(spark, _stage_microbatches(_session_tmpdir("msk_ttl_"), batches))
     return out.select(
         "k", F.expr("CAST(unix_timestamp(ts) AS BIGINT)").alias("ts_s")
     )

@@ -15,6 +15,10 @@ Components:
   a plain DataFrame — this is how the oracle checks streaming semantics
   against batch SQL (they must agree on bounded input).
 - streaming dedup: dropDuplicates within the watermark horizon.
+- write_neardup_store: the one writer of the near-dup store's layout
+  (`shingles/` with the `__corpus` origin marker, `bands/` from
+  operators.dedup.minhash_bands); incremental_neardup_stream seeds and
+  appends through it, compact_neardup_store rewrites what it wrote.
 
 Scale notes: watermark + window state lives in the state store keyed by
 (window, event_type) — bounded cardinality; shuffle partitions sized by
@@ -249,7 +253,6 @@ def incremental_dedup_stream(
     checkpoint_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shuffle_partitions: int | None = None,
     seed: bool = True,
 ) -> DataFrame:
     """Streaming incremental exact-dedup: foreachBatch + a fingerprint
@@ -300,37 +303,36 @@ def incremental_dedup_stream(
         .option("maxFilesPerTrigger", "1")
         .parquet(watch_dir)
     )
-    _run_foreach_batch(stream, _merge, checkpoint_dir, shuffle_partitions)
+    _run_foreach_batch(stream, _merge, checkpoint_dir)
     return spark.read.parquet(store_dir).filter(F.col(id_col).isNotNull()).select(id_col)
 
 
-def _run_foreach_batch(stream, merge_fn, checkpoint_dir: str, shuffle_partitions: int | None) -> None:
-    """Drive a foreachBatch availableNow stream to completion, optionally
-    pinning spark.sql.shuffle.partitions for its duration.
+def _run_foreach_batch(stream, merge_fn, checkpoint_dir: str) -> None:
+    """Drive a foreachBatch availableNow stream to completion, each
+    batch planned with 4 shuffle partitions.
 
     foreachBatch has no state store, but every join/groupBy INSIDE the
-    batch function plans with the session's shuffle-partition count at
-    that moment. Microbatches are typically orders of magnitude smaller
-    than the historical corpus, so the session default (sized for batch
+    batch function plans with its session's shuffle-partition count.
+    Microbatches are typically orders of magnitude smaller than the
+    historical corpus, so the session default (sized for batch
     analytics over the full fixture) buys pure task-scheduling overhead
-    here — measured 11.6s -> 6.3s on the near-dup gate at 32 -> 4.
-    Callers that stream production-sized batches leave this None and
-    size the session conf (with AQE coalescing) for their batch volume.
+    here — measured 11.6s -> 6.3s on the near-dup gate at 32 -> 4. The
+    4 is set on the batch's own session (the stream's clone of the
+    caller's), never on the caller's, which other threads may be
+    planning on at the same time (Agent.run_multiple).
     """
-    spark = stream.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_fn)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    def _pinned(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.sparkSession.conf.set("spark.sql.shuffle.partitions", "4")
+        merge_fn(batch_df, batch_id)
+
+    (
+        stream.writeStream.foreachBatch(_pinned)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def _store_pfx_col(columns: list[str]) -> str | None:
@@ -365,11 +367,6 @@ def pruned_store(store_df: DataFrame, batch_df: DataFrame, key: str) -> DataFram
     return store_df.filter(F.col(pcol).isin(pfxs)).drop(pcol)
 
 
-def pruned_store_bands(store_bands: DataFrame, batch_bands: DataFrame) -> DataFrame:
-    """pruned_store over the band store's band_key."""
-    return pruned_store(store_bands, batch_bands, "band_key")
-
-
 def _partitioned_append(df: DataFrame, pcol: str, key: str, path: str) -> None:
     """Append rows to a compacted store in its own partitioned layout
     (plain files at the root of a hive-partitioned dir break partition
@@ -380,14 +377,6 @@ def _partitioned_append(df: DataFrame, pcol: str, key: str, path: str) -> None:
         .mode("append")
         .parquet(path)
     )
-
-
-# Amortization stats from the latest store-lifecycle run in this
-# process (bench.py reads these to publish per-microbatch / per-MB
-# line items alongside the raw gate timings — the raw numbers measure
-# a whole multi-microbatch pipeline as one figure, which hides whether
-# growth is per-batch fixed cost or state-size cost).
-LAST_STATS: dict[str, float] = {}
 
 
 def _compact_dataset(
@@ -526,7 +515,7 @@ def compact_neardup_store(spark, store_dir: str, id_col: str = "doc_id") -> dict
          length encoded in the partition column name —
          incremental_neardup_stream then prunes each batch's
          candidate join to the partitions its own keys hash into
-         (pruned_store_bands);
+         (pruned_store);
       2. shingles/: drop duplicate (id, __corpus) rows — NOT bare ids:
          the corpus and stream doc_id spaces are independent (that's
          why the __corpus origin marker exists), so a collision holds
@@ -547,9 +536,6 @@ def compact_neardup_store(spark, store_dir: str, id_col: str = "doc_id") -> dict
     mid-swap is self-repairing — the next call restores the live dir
     from __pre_compact before doing anything else.
     """
-    import time
-
-    t0 = time.time()
     # bands/ and shingles/ are independent datasets in disjoint dirs;
     # compacting them concurrently overlaps the two rewrite jobs
     # (guide §2.6) instead of leaving the cluster idle during each
@@ -567,12 +553,65 @@ def compact_neardup_store(spark, store_dir: str, id_col: str = "doc_id") -> dict
             spark, f"{store_dir}/shingles", [id_col, "__corpus"],
             range_col=id_col,
         )
-        rep = {"bands": fb.result(), "shingles": fs.result()}
-    LAST_STATS["compact_sec"] = time.time() - t0
-    LAST_STATS["compact_bytes_in"] = (
-        rep["bands"]["bytes"][0] + rep["shingles"]["bytes"][0]
-    )
-    return rep
+        return {"bands": fb.result(), "shingles": fs.result()}
+
+
+def write_neardup_store(
+    sh_df: DataFrame,
+    store_dir: str,
+    *,
+    seed: bool,
+    store_pcol: str | None,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+) -> None:
+    """The one writer of the near-dup store's on-disk layout: a shingle
+    frame (id_col, sh) goes to `shingles/` with its `__corpus` origin
+    marker, and to `bands/` as operators.dedup.minhash_bands rows
+    (id_col, band, band_key).
+
+    seed=True overwrites the store with corpus rows (__corpus true);
+    seed=False appends stream survivors (__corpus false). The origin
+    marker travels WITH the store rows (the exact-dedup twin's NULL-id
+    trick): identifying stream survivors by anti-joining ids against
+    the corpus would silently drop any stream doc whose id collides
+    with a corpus id — the two id spaces are independent.
+
+    store_pcol is the partition column of a compacted store
+    (_store_pfx_col of its bands/ schema; None when seeding or when the
+    store is uncompacted): appends then match its hive layout, since
+    plain files at the root of a partitioned dir break partition
+    discovery. The caller passes the layout it already read — reading
+    the schema here again would cost one more job per append.
+
+    The two writes touch disjoint dirs and both read the persisted
+    shingle frame, so they overlap (guide §2.6): the cheaper write
+    hides inside the band-hash one. Concurrent first actions race the
+    cache fill, which at worst computes a partition twice on
+    otherwise-idle cores.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from meteor_spark.operators.dedup import minhash_bands
+
+    sh = persist(sh_df)
+    mode = "overwrite" if seed else "append"
+
+    def _shingles() -> None:
+        sh.withColumn("__corpus", F.lit(seed)).write.mode(mode).parquet(f"{store_dir}/shingles")
+
+    def _bands() -> None:
+        nb = minhash_bands(sh, id_col=id_col, num_hashes=num_hashes, bands=bands, sh_df=sh)
+        if store_pcol is not None:
+            _partitioned_append(nb, store_pcol, "band_key", f"{store_dir}/bands")
+        else:
+            nb.write.mode(mode).parquet(f"{store_dir}/bands")
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for f in [pool.submit(_shingles), pool.submit(_bands)]:
+            f.result()
+    sh.unpersist()
 
 
 def incremental_neardup_stream(
@@ -587,7 +626,6 @@ def incremental_neardup_stream(
     num_hashes: int = 12,
     bands: int = 4,
     threshold: float = 0.5,
-    shuffle_partitions: int | None = None,
     seed: bool = True,
 ) -> DataFrame:
     """Streaming incremental NEAR-dup dedup: each microbatch is checked
@@ -597,96 +635,54 @@ def incremental_neardup_stream(
     have".
 
     Store layout (parquet-append; Delta/Iceberg MERGE in a real
-    deployment): `bands/` holds (doc_id, band, band_key) — a few dozen
-    bytes per historical doc — and `shingles/` holds (doc_id, sh) for
-    exact verification of the FEW band-collision candidates. Per batch:
+    deployment; written only by write_neardup_store): `bands/` holds
+    (doc_id, band, band_key) — a few dozen bytes per historical doc —
+    and `shingles/` holds (doc_id, sh, __corpus) for exact
+    verification of the FEW band-collision candidates. Per batch:
 
-      1. shingle + minhash-band the batch (the same sketch family as
-         operators.dedup, so batch vs store collisions mean the same
-         thing as batch-mode LSH);
+      1. shingle + minhash-band the batch (operators.dedup's own
+         shingle_frame/minhash_bands, so batch vs store collisions mean
+         the same thing as batch-mode LSH);
       2. candidates = batch bands ⋈ store bands on (band, band_key) —
          an equi-join that touches only colliding keys, never the
          corpus;
       3. exact Jaccard verify against the stored shingle sets; matches
          >= threshold are dropped;
-      4. batch-internal near-dups collapse to the min-id survivor;
+      4. batch-internal near-dups (dedup.band_pair_join) collapse to
+         the min-id survivor;
       5. survivors append their bands + shingles to the store (matching
          the store's layout — partitioned appends on a compacted store).
+
+    Both verify joins compare the UNROUNDED Jaccard to the threshold
+    (dedup.jaccard_pairs rounds first; the gate's oracle does not).
 
     Returns the surviving id rows across the whole bounded stream.
     seed=False skips the corpus seeding and continues on an existing
     store — the production continuation path after a restart or a
     compact_neardup_store rewrite.
     """
-    from meteor_spark.operators.dedup import minhash_signature, shingle_frame
+    from meteor_spark.operators.dedup import band_pair_join, minhash_bands, shingle_frame
 
-    rows = num_hashes // bands
-
-    def _bands_of(sh_df: DataFrame) -> DataFrame:
-        base = sh_df.select(F.col(id_col), minhash_signature(F.col("sh"), num_hashes).alias("sig"))
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[F.element_at(F.col("sig"), b * rows + r + 1).cast("string") for r in range(rows)],
-                        )
-                    ).alias("band_key"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return base.select(F.col(id_col), F.explode(structs).alias("bk")).select(
-            F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    def _write(sh_df: DataFrame, seed: bool, store_pcol: str | None) -> None:
+        write_neardup_store(
+            sh_df, store_dir, seed=seed, store_pcol=store_pcol,
+            id_col=id_col, num_hashes=num_hashes, bands=bands,
         )
 
-    # origin marker travels WITH the store rows (the exact-dedup twin's
-    # NULL-id trick): identifying stream survivors by anti-joining ids
-    # against the corpus would silently drop any stream doc whose id
-    # collides with a corpus id — the two id spaces are independent.
-    # seed=False continues ingestion on an EXISTING store (e.g. one
-    # rewritten by compact_neardup_store) instead of overwriting it.
     if seed:
-        corpus_sh = persist(shingle_frame(corpus, text_col, id_col, k))
-        # the two seed writes are independent jobs over the persisted
-        # shingle frame; overlapping them (guide §2.6) hides the
-        # cheaper write inside the band-hash one. Concurrent first
-        # actions race the cache fill, which at worst computes a
-        # partition twice on otherwise-idle cores.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            w1 = pool.submit(
-                lambda: corpus_sh.withColumn("__corpus", F.lit(True))
-                .write.mode("overwrite")
-                .parquet(f"{store_dir}/shingles")
-            )
-            w2 = pool.submit(
-                lambda: _bands_of(corpus_sh)
-                .write.mode("overwrite")
-                .parquet(f"{store_dir}/bands")
-            )
-            w1.result(); w2.result()
-        corpus_sh.unpersist()
-
-    n_batches = 0
+        _write(shingle_frame(corpus, text_col, id_col, k), True, None)
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         s = batch_df.sparkSession
         sh_b = persist(shingle_frame(batch_df, text_col, id_col, k))
-        b_b = persist(_bands_of(sh_b))
+        b_b = persist(minhash_bands(batch_df, id_col=id_col, num_hashes=num_hashes, bands=bands, sh_df=sh_b))
 
         # compacted stores are hive-partitioned by band_key prefix:
         # prune the candidate scan to the batch's own prefixes, and
-        # remember the layout — appends must match it (plain files at
-        # the root of a partitioned dir break partition discovery)
+        # remember the layout for the survivor append
         raw_bands = s.read.parquet(f"{store_dir}/bands")
         store_pcol = _store_pfx_col(raw_bands.columns)
-        store_bands = pruned_store_bands(raw_bands, b_b)
+        store_bands = pruned_store(raw_bands, b_b, "band_key")
         store_sh = s.read.parquet(f"{store_dir}/shingles")
 
         # batch vs store: band collision -> exact verify
@@ -707,60 +703,26 @@ def incremental_neardup_stream(
         )
 
         # batch-internal: min-id survivor among near-dup pairs
-        l, r = b_b.alias("l"), b_b.alias("r")
-        pairs = (
-            l.join(r, ["band", "band_key"])
-            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-            .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-            .distinct()
-        )
         sa = sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("ash"))
         sb = sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("bsh"))
         si2 = F.size(F.array_intersect("ash", "bsh"))
         jac2 = si2.cast("double") / (F.size("ash") + F.size("bsh") - si2)
         dup_in_batch = (
-            pairs.join(sa, "a").join(sb, "b").filter(jac2 >= threshold)
+            band_pair_join(b_b, id_col).join(sa, "a").join(sb, "b").filter(jac2 >= threshold)
             .select(F.col("b").alias(id_col))
             .distinct()
         )
 
         dropped = dup_of_store.unionByName(dup_in_batch).distinct()
-        survivors_sh = persist(sh_b.join(dropped, id_col, "left_anti"))
-
-        # the two survivor appends touch disjoint store dirs and both
-        # read the persisted survivor frame — overlap them (§2.6, the
-        # same move as the seed writes)
-        def _append_shingles() -> None:
-            survivors_sh.withColumn("__corpus", F.lit(False)).write.mode(
-                "append"
-            ).parquet(f"{store_dir}/shingles")
-
-        def _append_bands() -> None:
-            nb = _bands_of(survivors_sh)
-            if store_pcol is not None:
-                _partitioned_append(nb, store_pcol, "band_key", f"{store_dir}/bands")
-            else:
-                nb.write.mode("append").parquet(f"{store_dir}/bands")
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            a1 = pool.submit(_append_shingles)
-            a2 = pool.submit(_append_bands)
-            a1.result(); a2.result()
-        sh_b.unpersist(); b_b.unpersist(); survivors_sh.unpersist()
+        _write(sh_b.join(dropped, id_col, "left_anti"), False, store_pcol)
+        sh_b.unpersist(); b_b.unpersist()
 
     stream = (
         spark.readStream.schema(f"{id_col} long, {text_col} string")
         .option("maxFilesPerTrigger", "1")
         .parquet(watch_dir)
     )
-    import time
-
-    t0 = time.time()
-    _run_foreach_batch(stream, _merge, checkpoint_dir, shuffle_partitions)
-    LAST_STATS["neardup_stream_sec"] = time.time() - t0
-    LAST_STATS["neardup_stream_batches"] = n_batches
+    _run_foreach_batch(stream, _merge, checkpoint_dir)
     return (
         spark.read.parquet(f"{store_dir}/shingles")
         .filter(~F.col("__corpus"))

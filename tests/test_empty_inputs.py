@@ -200,18 +200,19 @@ def test_wave9_on_empty(spark, empty_docs):
 def test_compaction_on_seed_only_store(spark, sf_dir, tmp_path):
     # a store with only the corpus seed (no appends, no duplicates):
     # compaction must be a pure relayout — zero rows dropped
-    from meteor_spark.streaming.pipeline import compact_neardup_store
+    from meteor_spark.streaming.pipeline import compact_neardup_store, write_neardup_store
 
-    from meteor_spark.operators.dedup import minhash_bands, shingle_frame
+    from meteor_spark.operators.dedup import shingle_frame
     from meteor_spark.queries import _t
     from pyspark.sql import functions as F
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 50)
     store = str(tmp_path / "store")
-    csh = shingle_frame(corpus, "text", "doc_id", 3)
-    csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(f"{store}/shingles")
-    minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
+    write_neardup_store(
+        shingle_frame(corpus, "text", "doc_id", 3), store, seed=True, store_pcol=None,
+        id_col="doc_id", num_hashes=12, bands=4,
+    )
     rep = compact_neardup_store(spark, store)
     assert rep["bands"]["rows"][0] == rep["bands"]["rows"][1] == 200
     assert rep["shingles"]["rows"][0] == rep["shingles"]["rows"][1] == 50

@@ -248,21 +248,18 @@ def test_incremental_neardup_stream_survives_id_collision(spark, tmp_path):
 
 
 def _seed_store(spark, sf_dir, store, dup_appends=2):
-    from meteor_spark.operators.dedup import minhash_bands, shingle_frame
+    from meteor_spark.operators.dedup import shingle_frame
     from meteor_spark.queries import _t
+    from meteor_spark.streaming.pipeline import write_neardup_store
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 100)
     batch = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 140))
-    csh = shingle_frame(corpus, "text", "doc_id", 3).persist()
-    csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(f"{store}/shingles")
-    minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
-    csh.unpersist()
-    bsh = shingle_frame(batch, "text", "doc_id", 3).persist()
-    for _ in range(dup_appends):
-        bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(f"{store}/shingles")
-        minhash_bands(batch, sh_df=bsh).write.mode("append").parquet(f"{store}/bands")
-    bsh.unpersist()
+    for src, seed in [(corpus, True)] + [(batch, False)] * dup_appends:
+        write_neardup_store(
+            shingle_frame(src, "text", "doc_id", 3), store, seed=seed, store_pcol=None,
+            id_col="doc_id", num_hashes=12, bands=4,
+        )
     return corpus
 
 
@@ -285,7 +282,7 @@ def test_compaction_drops_duplicate_appends_and_partitions(spark, sf_dir, tmp_pa
 def test_pruned_store_bands_partition_prunes(spark, sf_dir, tmp_path):
     from meteor_spark.operators.dedup import minhash_bands
     from meteor_spark.queries import _t
-    from meteor_spark.streaming.pipeline import compact_neardup_store, pruned_store_bands
+    from meteor_spark.streaming.pipeline import compact_neardup_store, pruned_store
 
     store = str(tmp_path / "store")
     _seed_store(spark, sf_dir, store, dup_appends=1)
@@ -293,7 +290,7 @@ def test_pruned_store_bands_partition_prunes(spark, sf_dir, tmp_path):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     batch_bands = minhash_bands(docs.filter(F.col("doc_id") < 5)).persist()
     store_bands = spark.read.parquet(f"{store}/bands")
-    pruned = pruned_store_bands(store_bands, batch_bands)
+    pruned = pruned_store(store_bands, batch_bands, "band_key")
     # the pruned view must show partition filters in its scan...
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "pfx1" in plan
@@ -303,7 +300,7 @@ def test_pruned_store_bands_partition_prunes(spark, sf_dir, tmp_path):
     assert full == cut
     # identity on an uncompacted store
     raw = minhash_bands(docs.filter(F.col("doc_id") < 10))
-    assert pruned_store_bands(raw, batch_bands) is raw
+    assert pruned_store(raw, batch_bands, "band_key") is raw
     batch_bands.unpersist()
 
 
@@ -336,7 +333,7 @@ def test_incremental_stream_continues_on_compacted_store(spark, sf_dir, tmp_path
 
     surv = incremental_neardup_stream(
         spark, watch, corpus, store, str(tmp_path / "ckpt"),
-        shuffle_partitions=4, seed=False,
+        seed=False,
     )
     ids = {r[0] for r in surv.collect()}
     assert 200 in ids          # novel doc survives
@@ -508,7 +505,7 @@ def test_fingerprint_store_compaction_and_pruned_continuation(spark, sf_dir, tmp
     shutil.copyfile(glob.glob(f"{d}/part-*.parquet")[0], f"{watch}/batch_0.parquet")
     surv = incremental_dedup_stream(
         spark, watch, corpus, store, str(tmp_path / "ckpt"),
-        shuffle_partitions=4, seed=False,
+        seed=False,
     )
     ids = {r[0] for r in surv.collect()}
     assert 300 in ids and 9005 not in ids
@@ -527,3 +524,41 @@ def test_streaming_ks_drift_equals_batch(spark, sf_dir):
     stream = QUERIES["streaming_ks_drift"](spark, sf_dir)
     batch = QUERIES["event_value_ks_drift"](spark, sf_dir)
     assert sorted(map(tuple, stream.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def test_foreach_batch_leaves_caller_conf_alone(spark, sf_dir, monkeypatch):
+    """The microbatch's 4 shuffle partitions go on the batch's own
+    session (the stream's clone), never on the caller's: a set/restore
+    there races every other thread sharing the session
+    (Agent.run_multiple)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from meteor_spark.io import cache_scope
+    from meteor_spark.queries import QUERIES
+
+    recorded = []
+    real_set = RuntimeConfig.set
+
+    def _set(self, key, value):
+        if self is spark.conf:
+            recorded.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", _set)
+    with cache_scope():
+        assert QUERIES["streaming_incremental_dedup"](spark, sf_dir).count() > 0
+    assert "spark.sql.shuffle.partitions" not in recorded
+
+
+def test_neardup_store_layout_has_one_writer():
+    # the store's origin marker is written (write_neardup_store) and
+    # read back in one module only
+    import pathlib
+
+    import meteor_spark
+
+    root = pathlib.Path(meteor_spark.__file__).parent
+    users = sorted(
+        str(p.relative_to(root)) for p in root.rglob("*.py") if "__corpus" in p.read_text()
+    )
+    assert users == ["streaming/pipeline.py"]
