@@ -1,12 +1,15 @@
 """Pinned binary FileDescriptorSet for the asset messages.
 
-spark-protobuf's `to_protobuf(col, messageName, binaryDescriptorSet=...)`
-needs a serialized google.protobuf.FileDescriptorSet. protoc is absent
-in this container — but a FileDescriptorSet is ITSELF a protobuf
-message whose schema (descriptor.proto) is public, so it is generated
-here with the same wire primitives as functions/protowire.py, derived
-from the SAME declarative descriptors the Python encoder uses (single
-source of truth; the two paths cannot drift apart silently).
+A serialized google.protobuf.FileDescriptorSet lets any protobuf
+runtime load the asset message types without the .proto sources; its
+consumer here is tests/test_protobuf_interop.py, which loads it into
+google.protobuf's DescriptorPool and checks the Python wire encoder's
+bytes against the real library wherever that library is installed.
+protoc is not a dependency of this package — but a FileDescriptorSet is ITSELF
+a protobuf message whose schema (descriptor.proto) is public, so it is
+generated here with the same wire primitives as functions/protowire.py,
+derived from the SAME declarative descriptors the encoder uses (single
+source of truth; the two cannot drift apart silently).
 
 Field numbers below are from the public descriptor.proto:
   FileDescriptorSet   { file = 1 repeated FileDescriptorProto }
@@ -26,11 +29,11 @@ Types/labels (public enums): TYPE_DOUBLE=1, TYPE_INT64=3, TYPE_INT32=5,
 TYPE_BOOL=8, TYPE_STRING=9, TYPE_MESSAGE=11, TYPE_ENUM=14;
 LABEL_OPTIONAL=1, LABEL_REPEATED=3.
 
-Caveat (docs/ADR-0001 v4): the jar is absent in this container, so the
+Caveat: google.protobuf is not a dependency either, so without it the
 descriptor set is validated structurally (round-tripped through the
-strict wire decoder against hand-written descriptor-proto descriptors)
-but not against a live to_protobuf call; the JVM path is gated behind
-a probe and falls back to the Python encoder.
+strict wire decoder against hand-written descriptor-proto descriptors,
+tests/test_protodesc.py); the real-runtime load runs where the library
+is installed.
 """
 
 from __future__ import annotations

@@ -2,10 +2,10 @@
 
 The reference's Kafka sink publishes each asset as the compiled protobuf
 message (reference plugins/sinks/kafka/sink.go:112-118, proto.Marshal).
-This container has neither protoc nor the spark-protobuf jars, but the
-protobuf wire format itself is a small public specification (varint
-tags; wire types 0=varint, 1=i64, 2=len-delimited), so the encoder is
-implemented directly and driven by declarative descriptors whose field
+It is the Kafka sink's only protobuf encoder and needs neither protoc
+nor a JVM connector jar: the protobuf wire format is a small public
+specification (varint tags; wire types 0=varint, 1=i64,
+2=len-delimited), so the encoder is implemented directly and driven by declarative descriptors whose field
 numbers are copied from the reference's generated code:
 
 - Table        models/odpf/assets/v1beta1/table.pb.go:33-57

@@ -30,8 +30,6 @@ from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from meteor_spark.io import persist
-
 _PROFILE_FIELDS = ("min", "max", "avg", "med", "unique", "count", "top")
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType)
@@ -102,9 +100,9 @@ def profile_df(
 
     quantiles (exact path only): extra named EXACT interpolated
     quantile columns, e.g. {"p45": 0.45} — derived from the SAME
-    persisted (column, v, cnt) frequency frame as the median via the
-    frequency-weighted percentile aggregate, so each extra quantile
-    costs one tiny agg over the freq frame, not another scan of df
+    (column, v, cnt) frequency frame as the median, in the same
+    frequency-weighted percentile aggregate, so an extra quantile costs
+    one more array slot, not another scan of df
     (the r11 profile_lineitem_approx contract re-scanned lineitem with
     a full-sort F.percentile for its p45/p55 window — 2s of its 5s).
     NULL (double) for non-numeric columns.
@@ -159,65 +157,48 @@ def profile_df(
         # sort-based aggregate — measured 32s vs 3s on 600k x 4 cols.
         # The frequency frame gives: unique = row count, count = sum cnt,
         # avg = weighted mean, mode = deterministic arg-max (ties -> min
-        # value), median = interpolated cumulative-count lookup — all
-        # hash aggregates and one window, no Expand, no sort fallback.
-        # persist the frequency frame: it feeds the stats aggregate AND
-        # the median derivation, and without the persist each consumer
-        # re-scans the source and re-runs the explode+count (measured 7
-        # FileScans / 0 ReusedExchange on an 11-column profile). The
-        # cached frame is one row per distinct (column, value) — tiny
-        # next to the input.
-        pre = persist(lf.groupBy("column", "v").agg(F.count("*").alias("cnt")))
-        stats = pre.groupBy("column").agg(
-            F.min("v").cast("string").alias("min"),
-            F.max("v").cast("string").alias("max"),
-            (
-                F.round(F.sum(F.col("v").cast("double") * F.col("cnt")) / F.sum("cnt"), round_to)
-                if numeric
-                else F.lit(None).cast("double")
-            ).alias("avg"),
-            F.count("*").cast("long").alias("unique"),
-            F.sum("cnt").alias("count"),
-            F.min_by("v", F.struct((-F.col("cnt")).alias("nc"), F.col("v").alias("vv"))).cast("string").alias("top"),
-        )
-        qnames = list((quantiles or {}))
-        if not numeric:
-            return stats.select(
-                "column", "min", "max", "avg", F.lit(None).cast("double").alias("med"), "unique", "count", "top",
-                *[F.lit(None).cast("double").alias(qn) for qn in qnames],
-            )
-        # exact interpolated median via the frequency-weighted percentile
-        # AGGREGATE over the (column, v, cnt) frame — identical semantics
-        # to percentile(v, 0.5) over the raw rows (index q*(N-1), linear
-        # interpolation). Earlier formulation ran running/total sums in a
-        # Window.partitionBy(column): ONE task per column sorting every
-        # distinct value — a single-reducer bottleneck that broke down on
-        # high-cardinality columns (and cost ~half the exact-profile
-        # runtime at sf0.1). The aggregate form combines map-side partial
-        # value->count maps instead; no global sort, no one-task window.
-        # ONE percentile aggregate evaluating every requested quantile
-        # from a single weighted buffer (the array-percentage form).
-        # Separate percentile(...) calls per quantile each build, merge
-        # and sort their own value->weight map over the same rows —
-        # measured 4.2s vs 2.2s for [med, p45, p55] on the cached
-        # 600k-row lineitem freq frame at sf0.1, values bit-identical.
-        # med is rounded after extraction; the extra quantiles stay
-        # unrounded — window-bound consumers must not lose a boundary
-        # to rounding.
+        # value), median = frequency-weighted percentile. All of them run
+        # in ONE groupBy("column") over the frequency frame, so the frame
+        # is read once and needs no persist (and leaves nothing cached
+        # for the caller to release).
+        pre = lf.groupBy("column", "v").agg(F.count("*").alias("cnt"))
         qitems = list((quantiles or {}).items())
-        med = pre.groupBy("column").agg(
-            F.percentile(
+        null = F.lit(None).cast("double")
+        avg, med, extra = null, null, [null] * len(qitems)
+        if numeric:
+            avg = F.round(F.sum(F.col("v").cast("double") * F.col("cnt")) / F.sum("cnt"), round_to)
+            # exact interpolated median via the frequency-weighted
+            # percentile AGGREGATE — identical semantics to
+            # percentile(v, 0.5) over the raw rows (index q*(N-1), linear
+            # interpolation). A Window.partitionBy(column) of running
+            # sums would be ONE task per column sorting every distinct
+            # value, a single-reducer bottleneck on high-cardinality
+            # columns. ONE percentile evaluates every requested quantile
+            # from a single weighted buffer (the array-percentage form);
+            # separate percentile(...) calls each build and sort their
+            # own value->weight map — measured 4.2s vs 2.2s for [med,
+            # p45, p55] on the 600k-row lineitem freq frame at sf0.1,
+            # values bit-identical. med is rounded after extraction; the
+            # extra quantiles stay unrounded — window-bound consumers
+            # must not lose a boundary to rounding.
+            qs = F.percentile(
                 F.col("v").cast("double"),
                 F.array(F.lit(0.5), *[F.lit(q) for _, q in qitems]),
                 F.col("cnt"),
-            ).alias("__qs")
-        ).select(
-            "column",
-            F.round(F.col("__qs")[0], round_to).alias("med"),
-            *[F.col("__qs")[i + 1].alias(qn) for i, (qn, _) in enumerate(qitems)],
-        )
-        return stats.join(med, "column").select(
-            "column", "min", "max", "avg", "med", "unique", "count", "top", *qnames
+            )
+            # med and the extra quantiles index the same aggregate;
+            # Catalyst evaluates it once per group
+            med = F.round(qs[0], round_to)
+            extra = [qs[i + 1] for i in range(len(qitems))]
+        return pre.groupBy("column").agg(
+            F.min("v").cast("string").alias("min"),
+            F.max("v").cast("string").alias("max"),
+            avg.alias("avg"),
+            med.alias("med"),
+            F.count("*").cast("long").alias("unique"),
+            F.sum("cnt").alias("count"),
+            F.min_by("v", F.struct((-F.col("cnt")).alias("nc"), F.col("v").alias("vv"))).cast("string").alias("top"),
+            *[e.alias(qn) for e, (qn, _) in zip(extra, qitems)],
         )
 
     outs = []

@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(48, half of physical RAM) in whole GiB, at least 1."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, ram // 2**31))}g"
+
+
 def get_spark(app_name: str = "meteor_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -27,9 +33,11 @@ def get_spark(app_name: str = "meteor_spark", shuffle_partitions: int | None = N
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local mode = driver-only JVM; size it to the box (128 GiB) so
-        # wide aggregates and LSH joins never GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode = driver-only JVM: 48g on a large box so wide
+        # aggregates and LSH joins never GC-thrash, but never more than
+        # half the host's RAM — a heap ceiling above physical memory
+        # lets the JVM grow into the kernel's OOM killer
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -4,27 +4,18 @@ Reference (plugins/sinks/kafka/sink.go:74-197): protobuf-serialized
 value; optional message key from a 1-level field path (e.g. `.Urn`)
 resolved by reflection (:121-188); LeastBytes balancer (:190-197).
 
-Spark-first translation: the idiomatic path is
-
-    df.select(to_json(struct("*")).alias("value"),
-              col(key_path).cast("string").alias("key"))
-      .write.format("kafka").option("kafka.bootstrap.servers", ...)
-
-which serializes and partitions entirely JVM-side (Spark's Kafka
-partitioner plays the balancer role; `to_protobuf` can replace to_json
-where the registry-compatible binary encoding is required and the
-spark-protobuf package is on the classpath). The payload builder
-`kafka_rows` is a pure transformation (tested); the actual write needs
-the spark-sql-kafka connector jar, absent in this container, so sink()
-raises a clear error without it.
+Spark-first translation: `kafka_rows` builds the (key, value) frame
+and `df.write.format("kafka")` publishes it; Spark's Kafka partitioner
+plays the balancer role. `kafka_rows` is a pure transformation
+(tested); the write needs the spark-sql-kafka connector jar, which
+pyspark does not bundle, so sink() raises a clear error without it.
 
 Wire format: protobuf by default (reference parity, kafka/sink.go:
-112-118), JSON opt-in (value_format config) — the protobuf path
-encodes the reference's exact message shape via the pure-Python wire
-encoder (functions/protowire.py, field numbers pinned from the
-reference generated code) in ONE Arrow-batched mapInPandas pass; see
-docs/ADR-0001-kafka-wire-format.md (v3) for the default flip, the
-interop matrix, and the map-field byte-ordering caveat.
+112-118), JSON opt-in (value_format config). The protobuf path has one
+encoder: the pure-Python wire encoder (functions/protowire.py, field
+numbers pinned from the reference generated code) in ONE Arrow-batched
+mapInPandas pass. See docs/ADR-0001-kafka-wire-format.md (v5) for the
+interop matrix and the map-field byte-ordering caveat.
 """
 
 from __future__ import annotations
@@ -127,173 +118,10 @@ def _key_message(key_path: str, key: str, asset_type: str) -> bytes:
     return protowire.encode_asset(shell, asset_type=asset_type)
 
 
-_JVM_PROBE_CACHE: dict[int, bool] = {}
-
-
-def jvm_protobuf_available(spark) -> bool:
-    """Probe whether the spark-protobuf connector is loadable: build and
-    run a one-row to_protobuf plan against the pinned descriptor set.
-    The jar ships separately from the Spark distribution (absent in
-    this container — docs/ADR-0001 v4), so the JVM encode path is
-    opt-in with this probe as the gate. Cached per SparkContext — the
-    classpath cannot change within one JVM, and engine='auto' calls
-    this on every kafka_rows build."""
-    key = id(spark.sparkContext)
-    if key in _JVM_PROBE_CACHE:
-        return _JVM_PROBE_CACHE[key]
-    _JVM_PROBE_CACHE[key] = _probe_jvm_protobuf(spark)
-    return _JVM_PROBE_CACHE[key]
-
-
-def _probe_jvm_protobuf(spark) -> bool:
-    try:
-        from pyspark.sql.protobuf.functions import to_protobuf
-
-        from meteor_spark.functions import protodesc
-
-        probe = spark.range(1).select(
-            F.struct(F.lit("u").alias("urn")).alias("s")
-        )
-        probe.select(
-            to_protobuf(
-                "s",
-                f"{protodesc.PKG}.Resource",
-                binaryDescriptorSet=protodesc.file_descriptor_set(),
-            )
-        ).collect()
-        return True
-    except Exception:  # noqa: BLE001 - any failure means "not usable"
-        return False
-
-
-def _jvm_asset_struct(asset_type: str, columns: list[str]):
-    """(message_struct, unsupported_cond) — protowire.asset_plain's
-    model->message mapping re-expressed as Column expressions.
-
-    The open-JSON fields (Column.properties, Preview.rows,
-    Properties.attributes) hold arbitrary-keyed JSON the model stores
-    as strings; the Python wire encoder converts them to
-    google.protobuf.Struct at runtime, which no STATIC to_protobuf
-    input schema can express — so they are omitted from the struct and
-    `unsupported_cond` flags any row that actually carries one (the
-    caller raises instead of silently dropping data)."""
-    def has(c):
-        return c in columns
-
-    bad = F.lit(False)
-    parts = [F.col("resource").alias("resource")]
-    if asset_type == "Topic":
-        if has("topic_profile"):
-            parts.append(F.col("topic_profile").alias("profile"))
-        if has("topic_schema"):
-            parts.append(F.col("topic_schema").alias("schema"))
-    else:
-        if has("profile"):
-            parts.append(F.col("profile").alias("profile"))
-        if has("schema"):
-            parts.append(
-                F.when(
-                    F.col("schema").isNotNull(),
-                    F.struct(
-                        F.transform(
-                            "schema",
-                            lambda c: F.struct(
-                                c["name"].alias("name"),
-                                c["description"].alias("description"),
-                                c["data_type"].alias("data_type"),
-                                c["is_nullable"].alias("is_nullable"),
-                                c["length"].alias("length"),
-                                c["profile"].alias("profile"),
-                            ),
-                        ).alias("columns")
-                    ),
-                ).alias("schema")
-            )
-            bad = bad | F.coalesce(
-                F.exists("schema", lambda c: c["properties"].isNotNull()),
-                F.lit(False),
-            )
-        if has("preview"):
-            parts.append(
-                F.when(
-                    F.col("preview").isNotNull(),
-                    F.struct(F.col("preview.fields").alias("fields")),
-                ).alias("preview")
-            )
-            bad = bad | F.coalesce(
-                F.col("preview.rows").isNotNull(), F.lit(False)
-            )
-    if has("ownership"):
-        parts.append(
-            F.when(
-                F.col("ownership").isNotNull(),
-                F.struct(F.col("ownership").alias("owners")),
-            ).alias("ownership")
-        )
-    if has("lineage"):
-        parts.append(F.col("lineage").alias("lineage"))
-    if has("properties"):
-        parts.append(
-            F.when(
-                F.col("properties").isNotNull(),
-                F.struct(
-                    F.col("properties.tags").alias("tags"),
-                    F.col("properties.labels").alias("labels"),
-                ),
-            ).alias("properties")
-        )
-        bad = bad | F.coalesce(
-            F.col("properties.attributes").isNotNull(), F.lit(False)
-        )
-    if has("timestamps"):
-        parts.append(F.col("timestamps").alias("timestamps"))
-    if has("event"):
-        parts.append(F.col("event").alias("event"))
-    return F.struct(*parts), bad
-
-
-def _kafka_rows_jvm(df: DataFrame, key_path: str | None, asset_type: str) -> DataFrame:
-    """JVM-native protobuf encode via spark-protobuf's to_protobuf and
-    the pinned binary FileDescriptorSet (functions/protodesc.py) — no
-    Python stage in the encode at all. Requires a homogeneous
-    asset_type (the reference sink always knows its message type,
-    kafka/sink.go:112-118). google.protobuf.Timestamp fields ride as
-    Catalyst TimestampType (the connector's documented mapping)."""
-    from pyspark.sql.protobuf.functions import to_protobuf
-
-    from meteor_spark.functions import protodesc
-
-    fds = protodesc.file_descriptor_set()
-    name = protodesc.message_full_name(asset_type)
-    msg, bad = _jvm_asset_struct(asset_type, df.columns)
-    value = F.when(
-        bad,
-        F.raise_error(F.lit(
-            "jvm protobuf path cannot encode open-JSON Struct fields "
-            "(Column.properties / preview.rows / properties.attributes); "
-            "null them upstream or use engine='python'"
-        )).cast("binary"),
-    ).otherwise(to_protobuf(msg, name, binaryDescriptorSet=fds))
-    if key_path:
-        parts = key_path.split(".")
-        shell = F.struct(F.col(key_path).alias(parts[-1]))
-        for p in reversed(parts[:-1]):
-            shell = F.struct(shell.alias(p))
-        key = F.when(
-            F.col(key_path).isNotNull(),
-            to_protobuf(shell, name, binaryDescriptorSet=fds),
-        )
-    else:
-        key = F.lit(None).cast("binary")
-    return df.select(key.alias("key"), value.alias("value"))
-
-
 def kafka_rows(
     df: DataFrame,
     key_path: str | None = None,
     value_format: str = "protobuf",
-    engine: str = "auto",
-    asset_type: str = "Table",
 ) -> DataFrame:
     """(key, value) frame ready for the kafka writer.
 
@@ -307,24 +135,10 @@ def kafka_rows(
     key is the same-descriptor message carrying only the key field
     (sink.go:121-150).
 
-    engine (protobuf only): "python" = the Arrow-batched mapInPandas
-    wire encoder (works everywhere, handles the open-JSON Struct
-    fields); "jvm" = spark-protobuf's to_protobuf against the pinned
-    descriptor set (no Python stage — the 100-TB path; requires the
-    spark-protobuf jar on the classpath and a homogeneous asset_type);
-    "auto" = jvm when the probe succeeds, python otherwise. See
-    docs/ADR-0001 v4 for the interop matrix.
+    The protobuf path encodes with the Python wire encoder
+    (functions/protowire.py) in one Arrow-batched mapInPandas pass; each
+    row's own `asset_type` column picks its message type.
     """
-    if value_format == "protobuf" and engine in ("jvm", "auto"):
-        if jvm_protobuf_available(df.sparkSession):
-            return _kafka_rows_jvm(df, key_path, asset_type)
-        if engine == "jvm":
-            raise RuntimeError(
-                "engine='jvm' requires the spark-protobuf connector on the "
-                "classpath (org.apache.spark:spark-protobuf); the probe "
-                "failed — use engine='auto' to fall back to the Python "
-                "wire encoder"
-            )
     if value_format == "protobuf":
         import pandas as pd
 
@@ -341,7 +155,6 @@ def kafka_rows(
         # pickle cleanly into the closure
         naive_tz = _resolve_session_tz(tz_name)
         _check_pandas_tz(tz_name, df.schema)
-        single_desc = len(protowire._ASSET_DESCS) == 1
 
         def encode(batches):
             for pdf in batches:
@@ -352,14 +165,12 @@ def kafka_rows(
                         # reference sink.go always knows its message
                         # type; guessing between descriptors would emit
                         # wrong-typed bytes silently — fail instead
-                        if not single_desc:
-                            raise ValueError(
-                                "protobuf kafka sink: row has no asset_type "
-                                "and multiple descriptors are registered "
-                                f"({sorted(protowire._ASSET_DESCS)}); cannot "
-                                "pick a message type safely"
-                            )
-                        at = next(iter(protowire._ASSET_DESCS))
+                        raise ValueError(
+                            "protobuf kafka sink: row has no asset_type "
+                            "and multiple descriptors are registered "
+                            f"({sorted(protowire._ASSET_DESCS)}); cannot "
+                            "pick a message type safely"
+                        )
                     values.append(
                         protowire.encode_asset(rec, asset_type=at, naive_tz=naive_tz)
                     )
@@ -390,21 +201,10 @@ class KafkaSink(Sink):
         "topic": Field(required=True, type=str),
         "key_path": Field(default=None, type=str),  # e.g. resource.urn
         "value_format": Field(default="protobuf", type=str, oneof=("json", "protobuf")),
-        # protobuf encode engine: jvm (spark-protobuf + pinned descriptor
-        # set, no Python stage), python (Arrow-batched wire encoder,
-        # works everywhere), auto (jvm when the classpath allows)
-        "engine": Field(default="auto", type=str, oneof=("auto", "jvm", "python")),
-        "asset_type": Field(default="Table", type=str),  # jvm path message type
     }
 
     def sink(self, df: DataFrame) -> int:
-        out = kafka_rows(
-            df,
-            self.config["key_path"],
-            self.config["value_format"],
-            engine=self.config["engine"],
-            asset_type=self.config["asset_type"],
-        )
+        out = kafka_rows(df, self.config["key_path"], self.config["value_format"])
         try:
             (
                 out.write.format("kafka")

@@ -194,3 +194,19 @@ def test_mad_outliers_hand_checked(spark):
     assert a["n_outliers"] == 1
     b = rows["b"]
     assert b["med"] == 7.0 and b["mad"] == 0.0 and b["n_outliers"] == 0
+
+
+def test_exact_profile_leaves_no_cache_and_pins_jobs(spark, df):
+    # called outside any io.cache_scope(): the exact profile runs one
+    # aggregate per type family over its frequency frame, so nothing is
+    # persisted that a caller would have to release. A persisted
+    # frequency frame per family (read by a stats agg and a percentile
+    # agg, joined) stayed cached here and took 16 jobs; now 7
+    spark.catalog.clearCache()
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    rows = profile_df(df).collect()
+    jobs = sched.numTotalJobs() - before
+    assert len(rows) == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert jobs == 7, jobs

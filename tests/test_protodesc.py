@@ -1,13 +1,14 @@
 """Structural validation of the pinned binary FileDescriptorSet.
 
-protoc and google.protobuf are absent in this container, so the
-descriptor set can't be checked against a live to_protobuf call (that
-interop test lives in test_protowire.py and SKIPS without the jar).
+protoc and google.protobuf are not dependencies of this package, so
+the descriptor set can't always be loaded into a real DescriptorPool (that
+interop check lives in test_protobuf_interop.py and SKIPS without the
+library).
 What CAN be checked everywhere: the bytes parse under the strict wire
 decoder against hand-written descriptor.proto descriptors (public field
 numbers, independently re-derived here), and the parsed structure
 matches the protowire descriptor dicts field-for-field — the single
-source of truth cannot drift from what a JVM consumer would load.
+source of truth cannot drift from what a protobuf runtime would load.
 """
 
 from __future__ import annotations

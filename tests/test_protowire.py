@@ -614,108 +614,3 @@ def test_wire_round_trip_catalog_extraction(spark):
         at, desc, plain = pw.asset_plain(r)
         got = pw.decode_message(desc, pw.encode_asset(r))
         assert got == _expected(desc, plain), plain["resource"]["urn"]
-
-
-# ---------------------------------------------------------------------------
-# JVM to_protobuf path (ADR-0001 v4): flag + probe + fallback
-# ---------------------------------------------------------------------------
-
-
-def test_jvm_probe_false_without_jar_and_auto_falls_back(spark):
-    # this container has no spark-protobuf jar; the probe must say so
-    # (cached per context) and engine='auto' must produce the same
-    # bytes as the Python encoder, transparently
-    from meteor_spark.model import ASSET_SCHEMA
-    from meteor_spark.model.schema import empty_asset
-    from meteor_spark.sinks.kafka_sink import jvm_protobuf_available, kafka_rows
-
-    available = jvm_protobuf_available(spark)
-    a = empty_asset()
-    a["asset_type"] = "Table"
-    a["resource"] = {
-        "urn": "urn:a", "name": "t", "service": "parquet",
-        "type": "table", "url": None, "description": None,
-    }
-    df = spark.createDataFrame([a], ASSET_SCHEMA)
-    auto = kafka_rows(df, key_path="resource.urn", engine="auto").collect()[0]
-    py = kafka_rows(df, key_path="resource.urn", engine="python").collect()[0]
-    if not available:
-        assert bytes(auto["value"]) == bytes(py["value"])
-        assert bytes(auto["key"]) == bytes(py["key"])
-        import pytest
-
-        with pytest.raises(RuntimeError, match="spark-protobuf"):
-            kafka_rows(df, key_path="resource.urn", engine="jvm")
-
-
-def test_jvm_asset_struct_shape_and_open_json_guard(spark):
-    # the message-struct transformation is pure Column algebra — it is
-    # testable without the jar: field names match the descriptors, and
-    # the unsupported-cond flags exactly the rows carrying open-JSON
-    # payloads a static schema can't encode
-    from pyspark.sql import functions as F
-
-    from meteor_spark.model import ASSET_SCHEMA
-    from meteor_spark.model.schema import empty_asset
-    from meteor_spark.sinks.kafka_sink import _jvm_asset_struct
-
-    clean = empty_asset()
-    clean["asset_type"] = "Table"
-    clean["resource"] = {
-        "urn": "u1", "name": "t", "service": "s", "type": "table",
-        "url": None, "description": None,
-    }
-    dirty = empty_asset()
-    dirty["asset_type"] = "Table"
-    dirty["resource"] = {
-        "urn": "u2", "name": "t", "service": "s", "type": "table",
-        "url": None, "description": None,
-    }
-    dirty["properties"] = {"tags": None, "labels": None, "attributes": '{"k": 1}'}
-    df = spark.createDataFrame([clean, dirty], ASSET_SCHEMA)
-    msg, bad = _jvm_asset_struct("Table", df.columns)
-    out = df.select(F.col("resource.urn").alias("u"), msg.alias("m"), bad.alias("bad")).collect()
-    by_urn = {r["u"]: r for r in out}
-    assert by_urn["u1"]["bad"] is False
-    assert by_urn["u2"]["bad"] is True
-    m = by_urn["u1"]["m"].asDict()
-    # message field names — exactly what the descriptor set declares
-    assert set(m) == {
-        "resource", "profile", "schema", "preview", "ownership",
-        "lineage", "properties", "timestamps", "event",
-    }
-    assert m["resource"]["urn"] == "u1"
-    # open-JSON fields are OMITTED from the struct, not carried as strings
-    schema_type = dict(df.select(msg.alias("m")).dtypes)["m"]
-    assert "attributes" not in schema_type
-    assert "preview:struct<fields:array<string>>" in schema_type  # no rows field
-
-
-def test_jvm_protobuf_interop_bytes_match_python_encoder(spark):
-    # the real interop check — runs only where the spark-protobuf jar is
-    # on the classpath (skipped-not-failed in this container, ADR-0001
-    # v4): JVM-encoded bytes must equal the Python wire encoder's for a
-    # map-free asset (Go's proto.Marshal map-order caveat doesn't apply)
-    import pytest
-
-    from meteor_spark.model import ASSET_SCHEMA
-    from meteor_spark.model.schema import empty_asset
-    from meteor_spark.sinks.kafka_sink import jvm_protobuf_available, kafka_rows
-
-    if not jvm_protobuf_available(spark):
-        pytest.skip("spark-protobuf jar not on the classpath")
-    a = empty_asset()
-    a["asset_type"] = "Table"
-    a["resource"] = {
-        "urn": "urn:a", "name": "t", "service": "parquet",
-        "type": "table", "url": None, "description": None,
-    }
-    a["profile"] = {
-        "total_rows": 150, "partition_key": None, "partition_value": None,
-        "usage_count": 0, "joins": None, "filters": None,
-    }
-    df = spark.createDataFrame([a], ASSET_SCHEMA)
-    jvm = kafka_rows(df, key_path="resource.urn", engine="jvm").collect()[0]
-    py = kafka_rows(df, key_path="resource.urn", engine="python").collect()[0]
-    assert bytes(jvm["value"]) == bytes(py["value"])
-    assert bytes(jvm["key"]) == bytes(py["key"])
