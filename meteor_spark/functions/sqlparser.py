@@ -7,12 +7,10 @@ Reference (plugins/extractors/bigquery/sqlparser/parser.go):
     =, <, >, LIKE, BETWEEN, IS, IN (parser.go:72-77, patterns :27-53).
   - comment stripping + whitespace normalization (parser.go:79-95).
 
-Two surfaces:
-  - plain-Python (parse_join_conditions / parse_filter_conditions) for
-    driver-side use and tests;
-  - Column expressions (*_col) built on F.regexp_extract_all so the same
-    mining runs JVM-side inside whole-stage codegen over a query-log
-    DataFrame — no Python UDF in the hot path.
+The pattern strings are the one definition: queries.sql_condition_mining
+runs them JVM-side with regexp_extract (no Python UDF in the hot path),
+and the plain-Python parse_join_conditions / parse_filter_conditions
+restate the mining so tests can pin each pattern against the reference.
 
 Patterns are kept to portable regex (no lookbehind) so the identical
 pattern string runs in Java (Spark), Python (driver), and RE2-style
@@ -22,9 +20,6 @@ engines.
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # `ON x = y [AND x2 = y2 ...]` — the reference captures the whole ON chain
 # (parser.go:12-18). The chain may be wrapped in parens (`ON (a.id =
@@ -65,15 +60,3 @@ def parse_join_conditions(q: str) -> list[str]:
 def parse_filter_conditions(q: str) -> list[str]:
     q = normalize_query(q)
     return [m.group(1).strip() for m in re.finditer(FILTER_PATTERN, q)]
-
-
-def join_conditions_col(query: Column) -> Column:
-    """JVM-side ON-chain extraction over a query-string column."""
-    return F.regexp_extract_all(query, F.lit(JOIN_ON_PATTERN), 1)
-
-
-def filter_conditions_col(query: Column) -> Column:
-    return F.transform(
-        F.regexp_extract_all(query, F.lit(FILTER_PATTERN), 1),
-        lambda s: F.trim(s),
-    )

@@ -11,17 +11,11 @@ shapes: comma lists in FROM, chained JOINs, UNION branches, aliased
 tables, and parenthesized subqueries (recursed into because
 normalization keeps their FROM/JOIN keywords visible). Quoted and
 schema-qualified names are preserved.
-
-Also usable JVM-side: `table_names_col` compiles the same scan into
-regexp_extract_all for query-log DataFrames.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from meteor_spark.functions.sqlparser import normalize_query
 
@@ -34,10 +28,6 @@ _JOIN_RE = re.compile(rf"(?i)\bJOIN\s+{_NAME}")
 _FROM_LIST_RE = re.compile(rf"(?i)\bFROM\s+((?:{_NAME}(?:\s+(?:AS\s+)?\w+)?\s*,\s*)+{_NAME})")
 
 _KEYWORDS = {"select", "lateral", "unnest", "values", "dual"}
-
-# same _NAME body as the Python scan, so schema-qualified quoted names
-# (sch."Tbl") capture whole instead of truncating at the quote
-TABLE_PATTERN = rf"(?i)\b(?:FROM|JOIN)\s+{_NAME}"
 
 
 def substitute_template_tags(q: str, defaults: dict[str, str] | None = None) -> str:
@@ -72,32 +62,3 @@ def extract_table_names(q: str, defaults: dict[str, str] | None = None) -> list[
     for m in _JOIN_RE.finditer(q):
         add(m.group(1))
     return seen
-
-
-def table_names_col(query: Column) -> Column:
-    """JVM-side variant over a query-string column (distinct, sorted).
-
-    Shares _NAME, the keyword filter, AND the comma-list walk with
-    extract_table_names so both surfaces mine the same names from the
-    same log: a second regexp_extract_all captures each `FROM a, b c, d`
-    list, which is split on commas and reduced to the leading token per
-    segment (dropping aliases) — the relational twin of the Python
-    scan's _FROM_LIST_RE loop.
-    """
-    names = F.regexp_extract_all(query, F.lit(TABLE_PATTERN), 1)
-    lists = F.regexp_extract_all(query, F.lit(_FROM_LIST_RE.pattern), 1)
-    from_lists = F.flatten(
-        F.transform(
-            lists,
-            lambda l: F.transform(
-                F.split(l, ","),
-                lambda seg: F.element_at(F.split(F.trim(seg), " "), 1),
-            ),
-        )
-    )
-    kept = F.filter(
-        F.concat(names, from_lists),
-        lambda s: ~F.lower(F.regexp_replace(s, r'[`"]', "")).isin(*_KEYWORDS)
-        & (s != ""),
-    )
-    return F.array_sort(F.array_distinct(kept))

@@ -62,28 +62,6 @@ def read_parquet_table(spark: SparkSession, path: str, ts_cols: tuple[str, ...] 
     return df
 
 
-def write_bucketed(df: DataFrame, table: str, bucket_col: str, n_buckets: int = 32, sort: bool = True) -> None:
-    """Persist a table bucketed (and sorted) by its join key.
-
-    Two tables bucketed the same way join WITHOUT an exchange — the
-    pre-shuffle is paid once at write time and amortized over every
-    later join/aggregate on that key. This is the 100 TB answer to
-    repeated fact-fact joins; see tests/test_scale_io.py for the
-    plan-level assertion (no Exchange on either side).
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.format("parquet").saveAsTable(table)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Persist a table hive-partitioned by low-cardinality columns so
-    predicate-bearing scans prune whole directories (PartitionFilters in
-    the scan node, zero IO for excluded partitions)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
 def list_data_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> list[tuple[str, int]]:
     """(path, bytes) for every data file under `path`, via the Hadoop
     FileSystem API — works on any supported filesystem (local/HDFS/S3),

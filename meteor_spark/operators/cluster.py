@@ -109,26 +109,16 @@ def connected_components(
 
 
 def survivors_from_labels(df: DataFrame, labels: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Survivor selection given precomputed (node, cluster_id) labels —
+    """Keep one representative (min id) per near-dup cluster, given the
+    (node, cluster_id) labels of connected_components: every row not in
+    a cluster survives, plus each cluster's min-id member. Taking labels
     lets one CC materialization serve both the cluster report and the
-    dedup pass instead of re-running the closure."""
+    dedup pass. The anti-join key set (clustered non-representatives)
+    is tiny relative to the corpus, so AQE broadcasts it."""
     losers = labels.filter(F.col("cluster_id") != F.col("node")).select(
         F.col("node").alias(id_col)
     )
     return df.join(losers, id_col, "left_anti")
-
-
-def cluster_survivors(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id", src: str = "a", dst: str = "b"
-) -> DataFrame:
-    """Keep one representative (min id) per near-dup cluster.
-
-    Survivors = every row not in a cluster, plus each cluster's min-id
-    member. The anti-join key set (clustered non-representatives) is tiny
-    relative to the corpus, so AQE broadcasts it.
-    """
-    cc = connected_components(pairs, src, dst)
-    return survivors_from_labels(df, cc, id_col)
 
 
 def best_survivors_from_labels(

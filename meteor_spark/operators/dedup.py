@@ -210,8 +210,8 @@ def minhash_bands(
 
 def band_pair_join(band_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct candidate pairs (a < b) sharing at least one LSH band —
-    the equi-self-join both the candidate-pairs API and the full
-    near-dup pipeline run over a (persisted) band frame."""
+    the equi-self-join the near-dup pipeline and the streaming near-dup
+    store run over a (persisted) band frame."""
     l, r = band_df.alias("l"), band_df.alias("r")
     return (
         l.join(r, ["band", "band_key"])
@@ -219,30 +219,6 @@ def band_pair_join(band_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
         .distinct()
     )
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 12,
-    bands: int = 4,
-) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing at least one LSH band.
-
-    Self-join is on (band, band_key) — an equi-join whose key count grows
-    with corpus size, so it parallelizes; within-bucket pair blowup is
-    bounded by bucket size (hot buckets = near-identical content).
-
-    The band frame is persisted before the self-join: without it each
-    join side re-derives text -> shingles -> signatures -> band keys,
-    and the doubled expression tree degrades far worse than 2x
-    (measured 140s vs 9s on a 50k-doc corpus). The persisted state is
-    (id, band, band_key) — a few dozen bytes per doc.
-    """
-    b = persist(minhash_bands(df, text_col, id_col, k, num_hashes, bands))
-    return band_pair_join(b, id_col)
 
 
 def jaccard_pairs(

@@ -40,13 +40,6 @@ def bucket_threshold(rate: float, buckets: int = BUCKETS) -> int:
     return int(rate * buckets + 0.5)
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, rate: float, buckets: int = BUCKETS
-) -> DataFrame:
-    """Keep ~rate of rows, chosen by key hash — stable across runs/engines."""
-    return df.filter(hash_bucket(F.col(key_col), buckets) < bucket_threshold(rate, buckets))
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,
@@ -334,7 +327,7 @@ def holdout_split(
     buckets: int = BUCKETS,
 ) -> DataFrame:
     """Deterministic train/val/test assignment from the same md5 bucket
-    as deterministic_sample: cumulative bucket ranges over `splits`
+    as stratified_sample: cumulative bucket ranges over `splits`
     (insertion order), e.g. {"train": 0.9, "val": 0.05, "test": 0.05} ->
     buckets [0,9000) train, [9000,9500) val, [9500,10000) test.
 

@@ -1011,103 +1011,6 @@ def pq_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    seed: int = 42,
-):
-    """Materialize the IVF index as a CELL-PARTITIONED parquet layout —
-    the production form of ivf_topk's in-memory assignment: each corpus
-    vector lands in `path/cell=<i>/`, so a query probing n_probe cells
-    reads exactly those directories (partition pruning at the scan;
-    zero IO for every other cell). Returns the centroid list to ship
-    with the index (KB-sized driver-side state).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus_v = persist(corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ))
-    model = KMeans(
-        k=n_cells, seed=seed, featuresCol="features", predictionCol="cell", initMode="random", maxIter=5
-    ).fit(corpus_v)
-    assigned = model.transform(corpus_v).select(id_col, vec_col, "cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return [list(map(float, c)) for c in model.clusterCenters()]
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    centers: list,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_probe: int = 4,
-    round_to: int = 4,
-) -> DataFrame:
-    """Search a materialized IVF index: rank centroids per query
-    (driver-side — the centroid table is KB), then scan ONLY the probed
-    cell partitions (`cell IN (...)` prunes directories at the source)
-    and exact-cosine re-rank. The scan's PartitionFilters carry the
-    probe set, so IO scales with n_probe/n_cells of the corpus, not the
-    corpus — the property that matters when the index is 100 TB.
-    """
-    import math
-
-    q_rows = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")).collect()
-    probe_cells: set[int] = set()
-    probes = []
-    for r in q_rows:
-        qv = list(map(float, r["qv"]))
-        qn = math.sqrt(sum(x * x for x in qv)) or 1.0
-        sims = []
-        for ci, c in enumerate(centers):
-            cn = math.sqrt(sum(x * x for x in c)) or 1.0
-            dp = sum(a * b for a, b in zip(qv, c))
-            sims.append((dp / (qn * cn), -ci))
-        sims.sort(reverse=True)
-        cells = [-ci for _, ci in sims[:n_probe]]
-        probe_cells.update(cells)
-        probes.append((r["query_id"], qv, cells))
-    probe_df = F.broadcast(
-        queries.sparkSession.createDataFrame(
-            [(qid, qv, c) for qid, qv, cells in probes for c in cells],
-            # array<double>, NOT <float>: a float32 round-trip here
-            # truncated the mantissa of double query embeddings, so
-            # rounded cosines could flip vs the in-memory ANN paths
-            "query_id long, qv array<double>, cell int",
-        )
-    )
-    corpus = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(*[int(c) for c in probe_cells]))
-        .withColumn("cvd", F.col(vec_col).cast("array<double>"))
-        .withColumn("cn", norm(F.col("cvd")))
-    )
-    scored = (
-        corpus.join(probe_df.withColumn("qvd", F.col("qv").cast("array<double>")).withColumn("qn", norm(F.col("qvd"))), "cell")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("qvd"), F.col("cvd")) / (F.col("qn") * F.col("cn")),
-                round_to,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 # ------------------------------------------------------ distributed k-means
 
 def kmeans_fit(

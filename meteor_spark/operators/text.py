@@ -13,8 +13,6 @@ across engines), floats are rounded at the call site.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -263,9 +261,9 @@ def char_entropy_profile(
 
     Low entropy flags gibberish/templated/repeated-character documents
     that length and stopword ratios miss — the information-theoretic leg
-    of the quality-scoring family (quality_features, gopher_rules,
-    compression_ratio). Entropy = -Σ p_c·log2(p_c), exact rational p_c,
-    rounded so summation-order noise can't flip the oracle hash.
+    of the quality-scoring family (quality_features, gopher_rules).
+    Entropy = -Σ p_c·log2(p_c), exact rational p_c, rounded so
+    summation-order noise can't flip the oracle hash.
 
     Characters are enumerated relationally (explode over a 1..len
     sequence + substring — identical semantics on any engine; no
@@ -299,29 +297,6 @@ def char_entropy_profile(
             F.log2(n) - F.sum(F.col("c") * F.log2("c")) / n, round_to
         ).alias("char_entropy"),
     )
-
-
-def compression_ratio(text_col: str = "text") -> Column:
-    """zlib-compressed size / raw size — a classic data-quality signal
-    (repetitive/templated text compresses far better than natural prose).
-
-    zlib has no SQL equivalent, so this is the scalar Pandas-UDF path:
-    Arrow-batched, one Python call per batch of strings — the sanctioned
-    shape for Python-only logic (never a row-at-a-time UDF).
-    """
-    import zlib
-
-    @F.pandas_udf("double")
-    def _cr(s: "pd.Series") -> "pd.Series":
-        def ratio(t: str) -> float:
-            if not t:
-                return 1.0
-            raw = t.encode("utf-8")
-            return len(zlib.compress(raw, 6)) / len(raw)
-
-        return s.map(ratio)
-
-    return _cr(F.col(text_col))
 
 
 def winnow_fingerprints(
@@ -435,14 +410,6 @@ def ngrams_of_words(ws: Column, n: int = 2) -> Column:
         F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
     )
-
-
-def ngrams(text: Column, n: int = 2) -> Column:
-    """ALL word n-grams of normalized text (with multiplicity — corpus
-    statistics want counts, unlike dedup's distinct shingles).
-    Single-expression convenience form; pipelines should materialize the
-    words array first (ngrams_of_words)."""
-    return ngrams_of_words(words(normalize_text(text)), n)
 
 
 def corpus_top_ngrams(df: DataFrame, text_col: str = "text", n: int = 2, k: int = 50) -> DataFrame:

@@ -8,13 +8,10 @@ from a log of completed queries, derive per-table stats:
 merged into TableProfile.usage_count / joins / filters
 (bigquery/profile.go:8-47).
 
-Spark design (all shuffle-lean, 100 TB-ready):
-  - usage:   explode(referenced)  -> groupBy(urn).count()  — one shuffle,
-             map-side partial aggregation.
+Spark design (shuffle-lean, 100 TB-ready):
   - joins:   explode ordered pairs per query -> groupBy(urn, joined).
              Pairs are emitted with urn < joined to halve the shuffle
              volume; conditions aggregated with collect_set.
-  - filters: explode(filters) -> groupBy(urn) collect_set.
 
 The log schema expected here: one row per query with
   referenced: array<string>   (table urns touched)
@@ -27,15 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meteor_spark.io import persist
-
-
-def table_usage(log: DataFrame, referenced_col: str = "referenced") -> DataFrame:
-    """urn -> usage_count (stats.go:69-75). One explode + one groupBy."""
-    return (
-        log.select(F.explode(F.array_distinct(F.col(referenced_col))).alias("urn"))
-        .groupBy("urn")
-        .agg(F.count("*").alias("usage_count"))
-    )
 
 
 def join_usage(log: DataFrame, referenced_col: str = "referenced", conditions_col: str | None = None) -> DataFrame:
@@ -64,15 +52,6 @@ def join_usage(log: DataFrame, referenced_col: str = "referenced", conditions_co
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("conds")))).alias("conditions"),
         )
     return grouped.agg(F.count("*").alias("join_count"))
-
-
-def filter_conditions(log: DataFrame, referenced_col: str = "referenced", filters_col: str = "filters") -> DataFrame:
-    """urn -> sorted distinct filter conditions (stats.go:117-129)."""
-    return (
-        log.select(F.explode(F.array_distinct(F.col(referenced_col))).alias("urn"), F.col(filters_col))
-        .groupBy("urn")
-        .agg(F.array_sort(F.array_distinct(F.flatten(F.collect_list(filters_col)))).alias("filters"))
-    )
 
 
 def event_transition_matrix(

@@ -2540,7 +2540,7 @@ WHERE cc.node IS NULL
 def near_dup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end fuzzy dedup: keep every unclustered doc plus the min-id
     representative of each near-dup cluster (operators.cluster
-    .cluster_survivors — anti-join on the clustered non-representatives,
+    .survivors_from_labels — anti-join on the clustered non-representatives,
     broadcast by AQE since losers << corpus)."""
     from meteor_spark.operators.cluster import survivors_from_labels
 
@@ -5946,10 +5946,9 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document character-distribution Shannon entropy
     (text.char_entropy_profile): the information-theoretic quality leg —
     flags gibberish / single-character spam / templated text that
-    length, stopword, and punctuation ratios miss (pairs with the zlib
-    compression_ratio signal, but stays fully relational). Exact
-    rational probabilities, H = log2(n) - Σ c·log2(c)/n in one
-    groupBy."""
+    length, stopword, and punctuation ratios miss, and stays fully
+    relational. Exact rational probabilities, H = log2(n) -
+    Σ c·log2(c)/n in one groupBy."""
     docs = _docs(spark, sf_dir)
     return text.char_entropy_profile(docs).orderBy("doc_id")
 

@@ -20,8 +20,13 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(48, ram // 2**31))}g"
 
 
+def _default_cpus() -> str:
+    """min(32, the cores this process may run on)."""
+    return str(min(32, len(os.sched_getaffinity(0))))
+
+
 def get_spark(app_name: str = "meteor_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (

@@ -14,7 +14,8 @@ Components:
   availableNow trigger into an in-memory sink and returns the result as
   a plain DataFrame — this is how the oracle checks streaming semantics
   against batch SQL (they must agree on bounded input).
-- streaming dedup: dropDuplicates within the watermark horizon.
+- incremental_dedup_stream / incremental_neardup_stream: exact and
+  near-duplicate filtering of a stream against a persisted store.
 - write_neardup_store: the one writer of the near-dup store's layout
   (`shingles/` with the `__corpus` origin marker, `bands/` from
   operators.dedup.minhash_bands); incremental_neardup_stream seeds and
@@ -98,12 +99,6 @@ def windowed_rollup(events: DataFrame, window: str = "1 hour", watermark: str = 
             "sum_value",
         )
     )
-
-
-def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Exactly-once event stream by event_id within the watermark horizon
-    (the streaming twin of dedup_exact)."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
 def run_stream_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:

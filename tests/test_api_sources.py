@@ -215,22 +215,3 @@ def test_table_name_extraction():
     # metabase template tags (queryhelper.go:11-54)
     assert substitute_template_tags("WHERE {{cond}}", {"cond": "a=1"}) == "WHERE a=1"
     assert extract_table_names("SELECT * FROM orders WHERE {{snippet}}") == ["orders"]
-
-
-def test_table_names_col_matches_python_scan(spark):
-    # regression: the JVM variant truncated qualified quoted names at the
-    # quote, kept keywords like unnest, and missed comma-list secondaries
-    from pyspark.sql import functions as F
-
-    from meteor_spark.functions.tables import extract_table_names, table_names_col
-
-    qs = [
-        'SELECT * FROM a, b c, d WHERE 1=1',
-        'SELECT * FROM sch."Tbl" JOIN x y ON 1=1',
-        "SELECT * FROM unnest(arr) JOIN t ON 1=1",
-        "SELECT * FROM a JOIN b ON a.x = b.y",
-    ]
-    df = spark.createDataFrame([(q,) for q in qs], "q string")
-    rows = df.select("q", table_names_col(F.col("q")).alias("n")).collect()
-    for r in rows:
-        assert r["n"] == sorted(set(extract_table_names(r["q"]))), r["q"]

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from meteor_spark.operators.cluster import cluster_survivors, connected_components
+from meteor_spark.operators.cluster import connected_components, survivors_from_labels
 
 
 def test_chain_collapses_to_one_cluster(spark):
@@ -28,7 +28,8 @@ def test_edge_order_irrelevant(spark):
 def test_cluster_survivors_keeps_min_and_singletons(spark):
     docs = spark.createDataFrame([(i, f"t{i}") for i in range(1, 7)], ["doc_id", "text"])
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["a", "b"])
-    kept = sorted(r.doc_id for r in cluster_survivors(docs, pairs).select("doc_id").collect())
+    labels = connected_components(pairs)
+    kept = sorted(r.doc_id for r in survivors_from_labels(docs, labels, "doc_id").select("doc_id").collect())
     # cluster {1,2,3} -> keep 1; singleton 4 kept; cluster {5,6} -> keep 5
     assert kept == [1, 4, 5]
 

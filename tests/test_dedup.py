@@ -115,7 +115,7 @@ def test_lsh_recall_on_planted_near_dups(spark):
     """
     import random
 
-    from meteor_spark.operators.dedup import minhash_candidate_pairs
+    from meteor_spark.operators.dedup import band_pair_join, minhash_bands
 
     rng = random.Random(7)
     vocab = [f"tok{i}" for i in range(500)]
@@ -130,7 +130,7 @@ def test_lsh_recall_on_planted_near_dups(spark):
         rows.append((2 * d + 1, " ".join(mut)))
         planted.append((2 * d, 2 * d + 1))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    cand = {(r.a, r.b) for r in minhash_candidate_pairs(df).collect()}
+    cand = {(r.a, r.b) for r in band_pair_join(minhash_bands(df), "doc_id").collect()}
     missed = [p for p in planted if p not in cand]
     assert not missed, f"LSH missed planted near-dups: {missed}"
 

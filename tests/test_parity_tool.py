@@ -11,12 +11,15 @@ fixes:
      key drops.
   4. legacy (size-only) cache keys migrate to the content-aware key
      on hit without re-running the oracle.
+A run that would check nothing is an error before Spark starts.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -183,3 +186,40 @@ def test_r12_callable_scale_oracle_equivalence_sf001():
             f"{gate}: callable restatement diverges from canonical "
             f"({len(a)} vs {len(b)} rows)"
         )
+
+
+# runs the tool's main() with get_spark replaced by an exit, so a case
+# that starts Spark fails with "Spark started"
+_NO_SPARK_MAIN = """
+import sys
+import meteor_spark.session
+def _no_spark(*a, **k):
+    sys.exit("Spark started")
+meteor_spark.session.get_spark = _no_spark
+from tools.check_parity import main
+sys.argv[0] = "check_parity.py"
+sys.exit(main())
+"""
+
+
+@pytest.mark.parametrize(
+    "args, code, message",
+    [
+        pytest.param(["--help"], 0, "usage:", id="help"),
+        pytest.param(["/nonexistent/fixture"], 2, "not a directory", id="missing_dir"),
+        pytest.param(["SF", "no_such_gate"], 2, "unknown gate(s): no_such_gate", id="unknown_gate"),
+        pytest.param(["SF", "--skip", "no_such_gate"], 2, "unknown gate(s): no_such_gate", id="unknown_skip"),
+        pytest.param(
+            ["SF", "image_ahash_pairs", "--skip", "image_ahash_pairs"], 2, "no gate left to check",
+            id="nothing_left",
+        ),
+    ],
+)
+def test_cli_rejects_runs_that_check_nothing_before_spark(sf_dir, args, code, message):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_SPARK_MAIN, *(sf_dir if a == "SF" else a for a in args)],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert "Spark started" not in out.stderr
+    assert (out.returncode, message in out.stdout + out.stderr) == (code, True), out.stderr

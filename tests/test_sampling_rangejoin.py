@@ -6,23 +6,7 @@ from pyspark.sql import functions as F
 
 from meteor_spark.operators.profile import histogram
 from meteor_spark.operators.rangejoin import time_range_join
-from meteor_spark.operators.sampling import deterministic_sample, stratified_sample
-
-
-def test_deterministic_sample_stable_and_proportional(spark):
-    df = spark.range(0, 2000).withColumnRenamed("id", "k")
-    s1 = sorted(r.k for r in deterministic_sample(df, "k", 0.25).collect())
-    s2 = sorted(r.k for r in deterministic_sample(df, "k", 0.25).collect())
-    assert s1 == s2  # same rows, not just same count
-    assert 0.18 < len(s1) / 2000 < 0.32
-
-
-def test_deterministic_sample_is_nested(spark):
-    # consistent hashing: a 10% sample is a subset of the 30% sample
-    df = spark.range(0, 1000).withColumnRenamed("id", "k")
-    small = {r.k for r in deterministic_sample(df, "k", 0.1).collect()}
-    big = {r.k for r in deterministic_sample(df, "k", 0.3).collect()}
-    assert small <= big
+from meteor_spark.operators.sampling import stratified_sample
 
 
 def test_stratified_rates(spark):

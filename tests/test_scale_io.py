@@ -1,13 +1,11 @@
-"""Plan-level assertions for the scale levers: bucketed co-located joins
-(no exchange), partition pruning, filter pushdown, broadcast hints."""
+"""Plan-level assertions for the scale levers: filter pushdown,
+broadcast hints, z-order layouts and file compaction."""
 
 from __future__ import annotations
 
 import pytest
 
 from pyspark.sql import functions as F
-
-from meteor_spark.io import write_bucketed, write_partitioned
 
 
 def _plan(df) -> str:
@@ -19,45 +17,6 @@ def warehouse(spark, tmp_path_factory):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ to expose exchanges
     yield
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, warehouse):
-    # clear leftovers from prior sessions: the fresh in-memory catalog
-    # doesn't know about an old warehouse dir and refuses the location
-    import shutil
-
-    for t in ("li_b", "o_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    write_bucketed(li.select("l_orderkey", "l_quantity"), "li_b", "l_orderkey", 8)
-    write_bucketed(o.select("o_orderkey", "o_totalprice"), "o_b", "o_orderkey", 8)
-    joined = spark.table("li_b").join(
-        spark.table("o_b"), F.col("l_orderkey") == F.col("o_orderkey")
-    )
-    plan = _plan(joined)
-    assert "Exchange" not in plan, plan
-    # same join on the unbucketed frames shuffles both sides
-    plain = li.select("l_orderkey", "l_quantity").join(
-        o.select("o_orderkey", "o_totalprice"), F.col("l_orderkey") == F.col("o_orderkey")
-    )
-    assert "Exchange" in _plan(plain)
-    assert joined.count() == plain.count()
-
-
-def test_partition_pruning(spark, sf_dir, tmp_path):
-    from meteor_spark.io import read_parquet_table
-
-    e = read_parquet_table(spark, f"{sf_dir}/events.parquet")
-    path = str(tmp_path / "events_part")
-    write_partitioned(e.withColumn("day", F.to_date("ts")), path, ["day"])
-    pruned = spark.read.parquet(path).filter(F.col("day") == "2024-01-02")
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "day" in plan
-    got = pruned.count()
-    expected = e.filter(F.to_date("ts") == "2024-01-02").count()
-    assert got == expected > 0
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

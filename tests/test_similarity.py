@@ -144,33 +144,6 @@ def test_pq_codes_shape(spark, sf_dir):
     assert C1.shape == (8, 4)
 
 
-def test_ivf_materialized_index_prunes_partitions(spark, sf_dir, tmp_path):
-    """The written IVF layout must (a) return the same neighbors as the
-    in-memory ivf_topk for the same quantizer seed, and (b) scan ONLY
-    the probed cell partitions (PartitionFilters prune the rest)."""
-    from meteor_spark.operators.similarity import ivf_query_index, ivf_topk, ivf_write_index
-
-    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = corpus.limit(3)
-    path = str(tmp_path / "ivf_index")
-    centers = ivf_write_index(corpus, path, n_cells=8, seed=42)
-    assert len(centers) == 8
-
-    got = ivf_query_index(spark, path, centers, queries, k=5, n_probe=3)
-    rows = got.collect()
-    assert len(rows) == 3 * 5
-
-    # partition pruning visible in the scan
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-    mem = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(corpus, queries, k=5, n_cells=8, n_probe=3, seed=42).collect()
-    }
-    assert {(r["query_id"], r["neighbor_id"]) for r in rows} == mem
-
-
 def test_semantic_assign_nearest_seed_and_tiebreak(spark):
     # seeds = 2 lowest ids: cluster 0 = (1,0,0), cluster 1 = (0,1,0).
     # vec 2 is closer to seed 1; vec 3 is equidistant -> lowest cluster.

@@ -45,22 +45,6 @@ def test_comment_stripping():
     assert parse_filter_conditions(q) == ["x = 1"]
 
 
-def test_spark_column_extraction(spark):
-    from pyspark.sql import functions as F
-
-    from meteor_spark.functions.sqlparser import filter_conditions_col, join_conditions_col
-
-    df = spark.createDataFrame(
-        [("SELECT * FROM a JOIN b ON a.x = b.y WHERE a.z > 3",)], "q string"
-    )
-    row = df.select(
-        join_conditions_col(F.col("q")).alias("j"),
-        filter_conditions_col(F.col("q")).alias("f"),
-    ).first()
-    assert row["j"] == ["a.x = b.y"]
-    assert row["f"] == ["a.z > 3"]
-
-
 def test_filter_paren_forms():
     # regression: a [^;()]*? predicate tail could not cross ANY paren, so
     # IN-lists and function calls after the operator extracted NOTHING

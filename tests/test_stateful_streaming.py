@@ -1,262 +1,13 @@
-"""Cross-batch stateful sessionization must equal the batch window
-computation once the stream is drained."""
+"""Kill-and-resume equality for the stateful streaming gates: process
+the first half of the microbatches, STOP the query, restart from the
+checkpoint over the remaining files, and assert the union of published
+output equals the uninterrupted single run. Batch boundaries are pinned
+identical in both runs (maxFilesPerTrigger=1, mtime order), so any
+divergence is recovery state, not batching."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
-
-from meteor_spark.streaming.pipeline import normalize_ts
-from meteor_spark.streaming.stateful import sessionize_stateful
-
-
-def test_update_late_event_does_not_regress_session_clock():
-    """regression: last_us = ts let a late cross-batch event move the
-    session clock backwards, so the next on-time event opened a phantom
-    session. Drive _update directly with a fake GroupState."""
-    import pandas as pd
-
-    from meteor_spark.streaming.stateful import GAP_US, _update
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    st = FakeState()
-    h = 3_600_000_000  # 1h in us
-    batches = [
-        [9 * h, 10 * h],          # 2 sessions (gap 1h > 30min)
-        [9 * h + GAP_US // 2],    # late event inside session 1's window
-        [10 * h + 5 * 60_000_000],  # 10:05 — same session as 10:00
-    ]
-    for ts_list in batches:
-        list(_update((1,), iter([pd.DataFrame({"ts_us": ts_list})]), st))
-    last_us, n_events, n_sessions = st.get
-    assert n_events == 4
-    assert n_sessions == 2  # the late event must not split session 2
-    assert last_us == 10 * h + 5 * 60_000_000
-
-
-def test_stateful_sessionize_matches_batch(spark, sf_dir, tmp_path):
-    # split events into 4 time-ordered chunks staged with increasing
-    # mtimes (the file source orders by modification time) -> 4
-    # micro-batches in event-time order, so state genuinely carries
-    # across batches
-    import glob
-    import os
-    import time
-
-    # normalize whatever timestamp flavor the fixture has (nanos-long or
-    # timestamp[us]) so the quantile math is unit-agnostic
-    raw = normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).withColumn(
-        "__us", F.unix_micros("ts")
-    )
-    chunks = str(tmp_path / "chunks")
-    bounds = raw.approxQuantile("__us", [0.25, 0.5, 0.75], 0.0)
-    edges = [float("-inf"), *bounds, float("inf")]
-    base = time.time() - 1000
-    seen: set[str] = set()
-    for i in range(4):
-        part = (
-            raw.filter((raw.__us >= edges[i]) & (raw.__us < edges[i + 1]))
-            if i
-            else raw.filter(raw.__us < edges[1])
-        ).drop("__us")
-        part.coalesce(1).write.mode("append").parquet(chunks)
-        for f in glob.glob(f"{chunks}/part-*"):
-            if f not in seen:
-                os.utime(f, (base + i * 10, base + i * 10))
-                seen.add(f)
-
-    stream = normalize_ts(
-        spark.readStream.schema(spark.read.parquet(chunks).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks)
-    )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stateful(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode emits one row per (user, batch); the final totals are
-    # the row with the max n_events per user
-    out = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "n_sessions")).alias("s"))
-        .select("user_id", "s.n_events", "s.n_sessions")
-    )
-    got = {r["user_id"]: (r["n_events"], r["n_sessions"]) for r in out.collect()}
-
-    from meteor_spark.queries import user_sessions
-
-    expected = {r["user_id"]: (r["n_events"], r["n_sessions"]) for r in user_sessions(spark, sf_dir).collect()}
-    assert got == expected
-
-
-def test_transform_with_state_matches_batch(spark, sf_dir, tmp_path):
-    """state-v2 per-user activity totals over a 3-batch stream must equal
-    the one-shot batch aggregate once drained."""
-    import pytest
-
-    # the state-v2 python client speaks protobuf to the state server;
-    # containers without google.protobuf can't run it (the operator is
-    # still exercised for plan construction below on real clusters)
-    pytest.importorskip("google.protobuf.descriptor")
-    import uuid as _uuid
-
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    chunks = str(tmp_path / "tws_chunks")
-    # 3 chunks by event_id stripe — state must merge users seen in
-    # multiple batches
-    for i in range(3):
-        raw.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode("append").parquet(chunks)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        from meteor_spark.streaming.stateful import user_activity_stateful
-
-        stream = (
-            spark.readStream.schema(spark.read.parquet(chunks).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        name = f"tws_{_uuid.uuid4().hex[:8]}"
-        q = (
-            user_activity_stateful(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(F.max(F.struct("n_events", "total_value", "n_types")).alias("s"))
-            .select("user_id", "s.n_events", "s.total_value", "s.n_types")
-        )
-        got = {r["user_id"]: (r["n_events"], r["total_value"], r["n_types"]) for r in out.collect()}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    batch = (
-        raw.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-            F.countDistinct("event_type").alias("n_types"),
-        )
-    )
-    expected = {
-        r["user_id"]: (r["n_events"], r["total_value"], r["n_types"]) for r in batch.collect()
-    }
-    assert got == expected
-
-
-def test_transform_with_state_plan_builds(spark, sf_dir):
-    """Plan construction for the state-v2 operator is protobuf-free: the
-    unresolved streaming plan and output schema must be right even where
-    the runtime client can't execute."""
-    from meteor_spark.streaming.stateful import user_activity_stateful
-
-    schema = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
-    stream = spark.readStream.schema(schema).option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    out = user_activity_stateful(stream)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["user_id", "n_events", "total_value", "n_types"]
-
-
-def test_stateful_restart_recovers_from_checkpoint(spark, tmp_path):
-    """Stop after batch 1, restart the same query from its checkpoint
-    with new input: per-user state must carry across the restart (the
-    driver-failure story on a real cluster)."""
-    import glob
-    import os
-
-    ckpt = str(tmp_path / "ckpt")
-    watch = tmp_path / "in"
-    watch.mkdir()
-    b1 = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 7, "click", 1.0, "{}"),
-         (2, "2024-01-01 00:05:00", 7, "view", 2.0, "{}")],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    b2 = spark.createDataFrame(
-        # > 30 min after b1's last event -> a SECOND session for user 7
-        [(3, "2024-01-01 02:00:00", 7, "click", 3.0, "{}")],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def stage(df, name, mtime):
-        d = str(tmp_path / name)
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        src = next(p for p in glob.glob(f"{d}/part-*.parquet"))
-        dst = watch / f"{name}.parquet"
-        dst.write_bytes(open(src, "rb").read())
-        os.utime(dst, (mtime, mtime))
-
-    def run_once():
-        # the memory sink cannot recover from a checkpoint; foreachBatch
-        # is the fault-tolerant sink path (same as production)
-        got: list = []
-
-        def collect_batch(df, _epoch):
-            got.extend(df.collect())
-
-        stream = spark.readStream.schema(b1.schema).parquet(str(watch))
-        q = (
-            sessionize_stateful(stream)
-            .writeStream.foreachBatch(collect_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return got
-
-    stage(b1, "b1", 1_700_000_000)
-    first = {r["user_id"]: (r["n_events"], r["n_sessions"]) for r in run_once()}
-    assert first[7] == (2, 1)
-
-    stage(b2, "b2", 1_700_000_900)
-    second = run_once()  # RESTART: must resume from ckpt and only read b2
-    # state carried: 3 total events, and the 2h gap opened session #2
-    assert {r["user_id"]: (r["n_events"], r["n_sessions"]) for r in second}[7] == (3, 2)
-
-
-# ---------------------------------------------------------------------------
-# Kill-and-resume equality: for each stateful streaming family member,
-# process the first half of the microbatches, STOP the query, restart
-# from the checkpoint over the remaining files, and assert the union of
-# published output equals the uninterrupted single run. Batch
-# boundaries are pinned identical in both runs (maxFilesPerTrigger=1,
-# mtime order), so any divergence is recovery state, not batching.
-# ---------------------------------------------------------------------------
 
 
 def _stage_parquet(df, build_dir, watch_dir, name: str, mtime: int) -> None:

@@ -1,4 +1,4 @@
-"""Structured Streaming: windowed rollup, streaming dedup, watermark
+"""Structured Streaming: windowed rollup, incremental dedup, watermark
 semantics on bounded input (must equal batch)."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from meteor_spark.streaming.pipeline import (
     run_stream_to_batch,
     stream_events,
-    streaming_dedup,
     windowed_rollup,
 )
 
@@ -19,15 +18,6 @@ def test_windowed_rollup_equals_batch(spark, sf_dir):
 
     batch = events_hourly_rollup(spark, sf_dir)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
-
-
-def test_streaming_dedup(spark, sf_dir):
-    events = stream_events(spark, sf_dir)
-    out = run_stream_to_batch(streaming_dedup(events), output_mode="append")
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    # fixture event_ids are unique -> dedup is a no-op on counts
-    assert out.count() == n_events
-    assert out.select(F.count_distinct("event_id")).first()[0] == n_events
 
 
 def test_windowed_rollup_window_alignment(spark, sf_dir):

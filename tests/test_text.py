@@ -71,18 +71,6 @@ def test_winnow_fingerprints_shared_run(spark):
     assert not (by_doc[1] & by_doc[3])
 
 
-def test_compression_ratio(spark):
-    from meteor_spark.operators.text import compression_ratio
-
-    df = spark.createDataFrame(
-        [(1, "aaaa aaaa aaaa aaaa aaaa aaaa"), (2, "zq xv jk wp mn bd fg hs lt rc")],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r["cr"] for r in df.select("doc_id", compression_ratio("text").alias("cr")).collect()}
-    assert out[1] < out[2]  # repetitive text compresses better
-    assert 0 < out[1] < 1.0
-
-
 def test_contamination_hits_planted(spark):
     bench = spark.createDataFrame(
         [(0, "alpha beta gamma delta")], "doc_id long, text string"

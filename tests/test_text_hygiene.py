@@ -2,7 +2,13 @@
 
 from pyspark.sql import functions as F
 
-from meteor_spark.operators.text import corpus_top_ngrams, ngrams, scrub_pii
+from meteor_spark.operators.text import (
+    corpus_top_ngrams,
+    ngrams_of_words,
+    normalize_text,
+    scrub_pii,
+    words,
+)
 
 
 def _scrub_one(spark, s: str) -> str:
@@ -27,7 +33,7 @@ def test_scrub_leaves_clean_text_alone(spark):
 
 def test_ngrams_keep_multiplicity(spark):
     df = spark.createDataFrame([("a b a b",)], ["text"])
-    grams = df.select(ngrams(F.col("text"), 2).alias("g")).first().g
+    grams = df.select(ngrams_of_words(words(normalize_text(F.col("text"))), 2).alias("g")).first().g
     assert grams == ["a b", "b a", "a b"]
 
 

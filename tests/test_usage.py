@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from meteor_spark.operators.usage import filter_conditions, join_usage, table_usage
+from meteor_spark.operators.usage import join_usage
 
 
 @pytest.fixture(scope="module")
@@ -19,12 +19,6 @@ def log(spark):
     )
 
 
-def test_table_usage(log):
-    # stats.go:69-75 — queries referencing each table
-    rows = {r["urn"]: r["usage_count"] for r in table_usage(log).collect()}
-    assert rows == {"t1": 2, "t2": 3, "t3": 1}
-
-
 def test_join_usage_pairs(log):
     # stats.go:77-115 — co-occurrence pairs, emitted once (urn < joined)
     rows = {(r["urn"], r["joined_urn"]): r["join_count"] for r in join_usage(log).collect()}
@@ -37,12 +31,6 @@ def test_join_usage_with_conditions(log):
         for r in join_usage(log, conditions_col="conditions").collect()
     }
     assert rows[("t1", "t2")] == ["a=b", "c=d"]
-
-
-def test_filter_conditions(log):
-    rows = {r["urn"]: r["filters"] for r in filter_conditions(log).collect()}
-    assert rows["t2"] == ["x > 1", "y = 2"]
-    assert rows["t3"] == ["y = 2"]
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

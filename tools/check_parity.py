@@ -4,44 +4,22 @@ Runs every __spark_entry__.queries() entry on Spark and its
 oracle_sql() twin on DuckDB at the given sf dir, then compares
 row count, sorted column names, and an order-insensitive value hash.
 
-Usage: python tools/check_parity.py [sf_dir] [query ...]
-       [--cache PATH] [--record PATH] [--skip name,name,...]
+--fetch pandas fetches both engines through pandas instead (Spark
+toPandas, DuckDB .df()) and hashes with a TYPE-SENSITIVE rendering
+(123 != 123.0). fetchall() converts HUGEINT to Python int and so hides
+fetch-path type divergence — the class behind all six r04 correctness
+failures (HUGEINT -> float64 via pandas while Spark publishes bigint); the
+pandas mode fails any column whose dtype differs between the engines'
+pandas frames even when the values agree.
 
---cache PATH   Slow-oracle tier: JSON file of cached DuckDB oracle
-               results (cols, rowcount, value hash) keyed by
-               (fixture digest, md5 of the oracle SQL). The ~1000s
-               recursive-CC oracles (leakage_free_split,
-               dedup_rate_by_source) and the pair-exploding family
-               run ONCE per (fixture, SQL) and are replayed from the
-               cache on every later sweep; ANY edit to the oracle SQL
-               or the fixture files invalidates the entry. The Spark
-               side is never cached — it is the thing under test.
---record PATH  Strict-certification registry (e.g. docs/CERT10X.json):
-               every PASS upserts {gate: {fixture, fixture_digest,
-               oracle_md5, rows, spark_sec, oracle_sec|"cached"}};
-               every FAIL of a recorded gate REMOVES its entry, so a
-               regression (or an oracle-SQL edit) cannot coast on a
-               stale certified row. This is the machine-readable
-               ledger behind COVERAGE.md's "N gates 10x-certified".
---skip a,b     Gate names to leave out of this sweep (documented
-               exclusions; they stay absent from --record).
---scale-oracles  Overlay tools/scale_oracles.py: the five gates whose
-               canonical oracles are deliberately brute-force
-               (all-pairs O(N^2)) run against the lossless equi-join
-               restatement instead, so they can certify at 10x. The
-               registry marks them "oracle": "scale-tier".
---digest a,b   Digest tier: for the named gates, compare an engine-side
-               row-hash digest (16 bucket rows per engine) instead of
-               collecting full outputs through Python — the only way to
-               value-certify the pair-output gates (26M-1B rows) at
-               100x. See the DIGEST_SPEC block below for the canonical
-               rendering and its validation contract; --record rows
-               carry "check": "digest-v1" so the ledger distinguishes
-               them from full strict rows.
+A missing sf dir argument, a directory that does not exist, a gate
+name that is not registered, or a selection that leaves no gate to
+check is an error before Spark starts. Run with --help for the options.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import os
 import sys
@@ -88,6 +66,45 @@ def frame_hash(cols: list[str], rows: list[tuple]) -> str:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted("|".join(normalize_cell(r[i]) for i in order) for r in rows)
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
+
+
+def render(v) -> str:
+    """Type-sensitive cell rendering for --fetch pandas: int and float
+    never collide."""
+    import datetime
+    import math
+
+    import numpy as np
+
+    if v is None:
+        return "NULL"
+    if isinstance(v, (np.integer,)):
+        return repr(int(v))
+    if isinstance(v, (np.floating,)):
+        v = float(v)
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NULL"  # pandas conflates NULL and NaN; accept both
+        return repr(v)
+    if isinstance(v, np.bool_):
+        return repr(bool(v))
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    if hasattr(v, "isoformat"):  # pandas Timestamp
+        return v.isoformat()
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return "[" + ",".join(render(x) for x in v) + "]"
+    return repr(v)
+
+
+def pdf_lines(pdf) -> list[str]:
+    """Sorted rendered rows of a pandas frame, columns in name order."""
+    pdf = pdf[sorted(pdf.columns)]
+    return sorted("|".join(render(v) for v in row) for row in pdf.itertuples(index=False))
+
+
+def pdf_hash(pdf) -> str:
+    return hashlib.md5("\n".join(pdf_lines(pdf)).encode()).hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -306,40 +323,131 @@ def _dump_json(path: str, obj: dict, drop: set[str] | None = None) -> None:
         os.replace(tmp, path)
 
 
-def main() -> int:
-    argv = list(sys.argv[1:])
-    cache_path = record_path = None
-    skip: set[str] = set()
-    digest_gates: set[str] = set()
-    use_scale = "--scale-oracles" in argv
-    if use_scale:
-        argv.remove("--scale-oracles")
-    for flag in ("--cache", "--record", "--skip", "--digest"):
-        if flag in argv:
-            i = argv.index(flag)
-            val = argv[i + 1]
-            del argv[i : i + 2]
-            if flag == "--cache":
-                cache_path = val
-            elif flag == "--record":
-                record_path = val
-            elif flag == "--digest":
-                digest_gates = set(val.split(","))
-            else:
-                skip = set(val.split(","))
-    sf_dir = argv[0] if argv and os.path.isdir(argv[0]) else "/root/testdata/sf0.001"
-    only = set(a for a in argv if not os.path.isdir(a))
+def _pandas_check(name, fn, spark, sf_dir, oracle_rel) -> bool:
+    """--fetch pandas: both engines through pandas, type-sensitive hash."""
+    from meteor_spark.io import cache_scope
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    t0 = time.time()
+    try:
+        with cache_scope():
+            sp = fn(spark, sf_dir).toPandas()
+        dp = oracle_rel(name).df()
+    except Exception as e:  # noqa: BLE001
+        print(f"FAIL {name}: {e}")
+        return False
+    if pdf_hash(sp) != pdf_hash(dp):
+        print(f"FAIL {name}: pandas-path hash mismatch ({len(sp)} rows)")
+        for x, y in zip(pdf_lines(sp), pdf_lines(dp)):
+            if x != y:
+                print(f"  spark : {x[:200]}\n  duckdb: {y[:200]}")
+                break
+        return False
+    print(f"PASS {name} ({len(sp)} rows, {time.time()-t0:.1f}s)")
+    return True
+
+
+def _gate_list(value: str) -> set[str]:
+    return set(value.split(","))
+
+
+def _parser() -> argparse.ArgumentParser:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("sf_dir", help="fixture directory")
+    ap.add_argument("gates", nargs="*", help="gates to check (default: every registered gate)")
+    ap.add_argument(
+        "--cache", metavar="PATH",
+        help="Slow-oracle tier: JSON file of cached DuckDB oracle results (cols, rowcount, "
+        "value hash) keyed by (fixture digest, md5 of the oracle SQL). The ~1000s "
+        "recursive-CC oracles (leakage_free_split, dedup_rate_by_source) and the "
+        "pair-exploding family run ONCE per (fixture, SQL) and are replayed from the cache "
+        "on every later sweep; ANY edit to the oracle SQL or the fixture files invalidates "
+        "the entry. The Spark side is never cached — it is the thing under test.")
+    ap.add_argument(
+        "--record", metavar="PATH",
+        help="Strict-certification registry (e.g. docs/CERT10X.json): every PASS upserts "
+        "{gate: {fixture, fixture_digest, oracle_md5, rows, spark_sec, oracle_sec|\"cached\"}}; "
+        "every FAIL of a recorded gate REMOVES its entry, so a regression (or an oracle-SQL "
+        "edit) cannot coast on a stale certified row. This is the machine-readable ledger "
+        "behind COVERAGE.md's \"N gates 10x-certified\".")
+    ap.add_argument(
+        "--skip", metavar="a,b", type=_gate_list, default=set(),
+        help="Gate names to leave out of this sweep (documented exclusions; they stay "
+        "absent from --record).")
+    ap.add_argument(
+        "--scale-oracles", action="store_true",
+        help="Overlay tools/scale_oracles.py: the five gates whose canonical oracles are "
+        "deliberately brute-force (all-pairs O(N^2)) run against the lossless equi-join "
+        "restatement instead, so they can certify at 10x. The registry marks them "
+        "\"oracle\": \"scale-tier\".")
+    ap.add_argument(
+        "--digest", metavar="a,b", type=_gate_list, default=set(),
+        help="Digest tier: for the named gates, compare an engine-side row-hash digest "
+        "(16 bucket rows per engine) instead of collecting full outputs through Python — "
+        "the only way to value-certify the pair-output gates (26M-1B rows) at 100x. See "
+        "the DIGEST_SPEC block for the canonical rendering and its validation contract; "
+        "--record rows carry \"check\": \"digest-v1\" so the ledger distinguishes them "
+        "from full strict rows.")
+    ap.add_argument(
+        "--fetch", choices=("rows", "pandas"), default="rows",
+        help="rows: fetchall() and the value hash (default). pandas: toPandas()/.df() and "
+        "the type-sensitive hash, over the gates that have an oracle.")
+    return ap
+
+
+def main() -> int:
+    ap = _parser()
+    args = ap.parse_intermixed_args()
+    sf_dir = args.sf_dir
+    if not os.path.isdir(sf_dir):
+        ap.error(f"{sf_dir}: not a directory")
+    pandas_fetch = args.fetch == "pandas"
+    if pandas_fetch and (args.cache or args.record or args.digest):
+        ap.error("--fetch pandas compares full frames only: drop --cache, --record and --digest")
+    cache_path, record_path = args.cache, args.record
+    skip, digest_gates = args.skip, args.digest
+
     # path-embedding oracles (zorder_footer_skipping) key their written
     # layout by fixture label; export it BEFORE the oracle strings are
     # built at import time so both engines resolve the same dir
     os.environ["SPARK_GRAFT_FIXTURE"] = os.path.basename(sf_dir.rstrip("/"))
-    from meteor_spark.io import cache_scope
-    from meteor_spark.session import get_spark
-
     import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    scale_gates: set[str] = set()
+    scale_fns: dict = {}
+    scale_fns_md5 = ""
+    if args.scale_oracles:
+        import inspect
+
+        import tools.scale_oracles as so
+        from tools.scale_oracles import SCALE_ORACLE_FNS, SCALE_ORACLES
+
+        oracles = {**oracles, **SCALE_ORACLES}
+        scale_fns = SCALE_ORACLE_FNS
+        scale_gates = set(SCALE_ORACLES) | set(scale_fns)
+        # callable oracles are keyed by the md5 of the WHOLE module
+        # source + gate name: shared helpers (the materialized pair/CC
+        # state) mean any edit must invalidate every callable's cache
+        # entry, the same edit-detection contract string oracles get
+        scale_fns_md5 = hashlib.md5(inspect.getsource(so).encode()).hexdigest()
+
+    unknown = sorted((set(args.gates) | skip | digest_gates) - set(qs))
+    if unknown:
+        ap.error(f"unknown gate(s): {', '.join(unknown)}")
+    named = [n for n in qs if not args.gates or n in args.gates]
+    selected = [
+        n for n in named
+        if n not in skip and (not pandas_fetch or n in oracles or n in scale_fns)
+    ]
+    if not selected:
+        ap.error("no gate left to check")
+
+    from meteor_spark.io import cache_scope
     from meteor_spark.queries import _ZREAL_BASE
+    from meteor_spark.session import get_spark
 
     spark = get_spark("parity")
     spark.sparkContext.setLogLevel("ERROR")
@@ -370,25 +478,9 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    scale_gates: set[str] = set()
-    scale_fns: dict = {}
-    scale_fns_md5 = ""
-    if use_scale:
-        import inspect
+    def oracle_rel(name: str):
+        return scale_fns[name](con) if name in scale_fns else con.sql(oracles[name])
 
-        import tools.scale_oracles as so
-        from tools.scale_oracles import SCALE_ORACLE_FNS, SCALE_ORACLES
-
-        oracles = {**oracles, **SCALE_ORACLES}
-        scale_fns = SCALE_ORACLE_FNS
-        scale_gates = set(SCALE_ORACLES) | set(scale_fns)
-        # callable oracles are keyed by the md5 of the WHOLE module
-        # source + gate name: shared helpers (the materialized pair/CC
-        # state) mean any edit must invalidate every callable's cache
-        # entry, the same edit-detection contract string oracles get
-        scale_fns_md5 = hashlib.md5(inspect.getsource(so).encode()).hexdigest()
     fdig = fixture_digest(sf_dir)
     fdig_legacy = fixture_digest_legacy(sf_dir)
     cache = _load_json(cache_path) if cache_path else None
@@ -403,14 +495,16 @@ def main() -> int:
             _dump_json(record_path, record, drop={name})
             print(f"     (removed stale certification entry for {name})")
 
+    skipped = [n for n in named if n in skip]
+    for name in skipped:
+        print(f"skip {name} (--skip)")
+
     failures = []
-    n_skipped = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        if name in skip:
-            print(f"skip {name} (--skip)")
-            n_skipped += 1
+    for name in selected:
+        fn = qs[name]
+        if pandas_fetch:
+            if not _pandas_check(name, fn, spark, sf_dir, oracle_rel):
+                failures.append(name)
             continue
         t0 = time.time()
         if name in digest_gates:
@@ -445,8 +539,7 @@ def main() -> int:
             else:
                 t1 = time.time()
                 try:
-                    rel = scale_fns[name](con) if name in scale_fns else con.sql(oracles[name])
-                    dcols, dtotal, ddig, dmax = duck_digest(rel)
+                    dcols, dtotal, ddig, dmax = duck_digest(oracle_rel(name))
                 except Exception as e:  # noqa: BLE001
                     print(f"FAIL {name}: duckdb error: {e}")
                     failures.append(name)
@@ -541,7 +634,7 @@ def main() -> int:
         else:
             t1 = time.time()
             try:
-                rel = scale_fns[name](con) if name in scale_fns else con.sql(oracles[name])
+                rel = oracle_rel(name)
                 dcols = [c for c in rel.columns]
                 unsafe = unsafe_oracle_types(rel)
                 drows = rel.fetchall()
@@ -627,9 +720,9 @@ def main() -> int:
             failures.append(name)
             _decertify(name)
 
-    n_run = len([n for n in qs if (not only or n in only) and n not in skip])
+    n_run = len(selected)
     print(f"\n{n_run - len(failures)}/{n_run} ok ({len(qs)} registered, "
-          f"{n_skipped} skipped); failures: {failures}")
+          f"{len(skipped)} skipped); failures: {failures}")
     return 1 if failures else 0
 
 
