@@ -4379,7 +4379,7 @@ def neardup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from meteor_spark.operators.dedup import shingle_frame
-    from meteor_spark.streaming.pipeline import compact_neardup_store, write_neardup_store
+    from meteor_spark.streaming import pipeline
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 400)
@@ -4388,14 +4388,14 @@ def neardup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # seed, then the at-least-once replay: same survivors appended twice
     for sh_src, seed in ((corpus, True), (batch, False), (batch, False)):
-        write_neardup_store(
+        pipeline.write_neardup_store(
             shingle_frame(sh_src, "text", "doc_id", _MINHASH_K), store,
-            seed=seed, store_pcol=None, id_col="doc_id",
+            seed=seed, id_col="doc_id",
             num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS,
         )
-    compact_neardup_store(spark, store)
+    pipeline.compact_neardup_store(spark, store)
     return (
-        spark.read.parquet(f"{store}/bands")
+        pipeline.neardup_store_bands(spark, store)
         .groupBy("band")
         .agg(
             F.countDistinct("band_key").cast("long").alias("n_keys"),
@@ -6091,9 +6091,9 @@ def streaming_word_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition, so the bounded stream must equal the batch GROUP
     BY/HAVING to the last digit — same exact-gate construction as
     streaming_quantile_rollup."""
-    from meteor_spark.streaming.pipeline import run_stream_to_batch, stream_documents
+    from meteor_spark.streaming.pipeline import run_stream_to_batch, stream_table
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     wcounts = (
         docs.select(
             F.explode(text.words(text.normalize_text(F.col("text")))).alias("word")

@@ -6,8 +6,8 @@ forward-looking translation: the same pipeline algebra
 (source -> transforms -> fan-out sinks) over unbounded input.
 
 Components:
-- stream_events: file-based streaming read of the events table (the
-  fixture stand-in for a Kafka topic; swap `format("parquet")` for
+- stream_table / stream_events: file-based streaming read of a fixture
+  table (the stand-in for a Kafka topic; swap `format("parquet")` for
   `format("kafka")` + from_json in production).
 - windowed_rollup: watermarked tumbling-window aggregation.
 - run_stream_to_batch: drives a streaming query to completion with the
@@ -16,10 +16,9 @@ Components:
   against batch SQL (they must agree on bounded input).
 - incremental_dedup_stream / incremental_neardup_stream: exact and
   near-duplicate filtering of a stream against a persisted store.
-- write_neardup_store: the one writer of the near-dup store's layout
-  (`shingles/` with the `__corpus` origin marker, `bands/` from
-  operators.dedup.minhash_bands); incremental_neardup_stream seeds and
-  appends through it, compact_neardup_store rewrites what it wrote.
+- this module alone owns both stores' layout: their schemas, one
+  reader, one write path (write_fingerprint_store, write_neardup_store),
+  pruned_store, and their compactions.
 
 Scale notes: watermark + window state lives in the state store keyed by
 (window, event_type) — bounded cardinality; shuffle partitions sized by
@@ -31,6 +30,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,11 +54,12 @@ def normalize_ts(raw: DataFrame, col: str = "ts") -> DataFrame:
 _SCHEMA_MEMO: dict = {}
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the events fixture with the schema taken from
-    the file footer itself (a batch read of the same path), so the
-    driver regenerating the fixture with a different timestamp physical
-    type can never desynchronize this reader from reality.
+def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Streaming read of the fixture table `<sf_dir>/<table>.parquet`
+    with the schema taken from the file footer itself (a batch read of
+    the same path), so the driver regenerating the fixture with a
+    different physical type can never desynchronize this reader from
+    reality.
 
     The footer sniff lists the whole fixture directory and decodes a
     parquet footer on the DRIVER — ~0.2-0.4s of serial stall per call,
@@ -67,23 +68,25 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     data or results). A new session or a rewritten file re-sniffs; a
     path os.stat cannot read (e.g. an object-store URI) is never
     memoized."""
+    fname = f"{table}.parquet"
     try:
-        st = os.stat(os.path.join(sf_dir, "events.parquet"))
-        key = (spark.sparkContext.applicationId, sf_dir, st.st_mtime_ns, st.st_size)
+        st = os.stat(os.path.join(sf_dir, fname))
+        key = (spark.sparkContext.applicationId, sf_dir, fname, st.st_mtime_ns, st.st_size)
     except OSError:
         key = None
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
-        schema = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
+        schema = spark.read.option("pathGlobFilter", fname).parquet(sf_dir).schema
         if key is not None:
             _SCHEMA_MEMO[key] = schema
     # the streaming file source wants a directory; glob-filter to the table
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_ts(raw)
+    return spark.readStream.schema(schema).option("pathGlobFilter", fname).parquet(sf_dir)
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming read of the events fixture, its timestamp normalized
+    whatever the fixture vintage (normalize_ts)."""
+    return normalize_ts(stream_table(spark, sf_dir, "events"))
 
 
 def windowed_rollup(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -270,40 +273,37 @@ def incremental_dedup_stream(
 
     fp = F.md5(normalize_text(F.col(text_col)))
     if seed:
-        (
-            corpus.select(fp.alias("fp"))
-            .distinct()
-            .withColumn(id_col, F.lit(None).cast("long"))
-            .write.mode("overwrite")
-            .parquet(store_dir)
-        )
+        write_fingerprint_store(corpus.select(fp.alias("fp")), store_dir, seed=True, id_col=id_col)
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        raw = batch_df.sparkSession.read.parquet(store_dir)
-        store_pcol = _store_pfx_col(raw.columns)
         bf = batch_df.select(F.col(id_col), fp.alias("fp"))
         # compacted stores prune the anti-join scan to the batch's own
         # fp-prefix partitions
-        seen = pruned_store(raw, bf, "fp").select("fp")
+        store = _read_store(batch_df.sparkSession, store_dir, "fp", id_col)
+        seen = pruned_store(store, bf, "fp").select("fp")
         fresh = bf.join(seen, "fp", "left_anti")
         survivors = fresh.groupBy("fp").agg(F.min(id_col).alias(id_col))
-        out = survivors.select("fp", id_col)
-        if store_pcol is not None:
-            _partitioned_append(out, store_pcol, "fp", store_dir)
-        else:
-            out.write.mode("append").parquet(store_dir)
+        write_fingerprint_store(survivors, store_dir, seed=False, id_col=id_col)
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch_dir)
-    )
-    _run_foreach_batch(stream, _merge, checkpoint_dir)
-    return spark.read.parquet(store_dir).filter(F.col(id_col).isNotNull()).select(id_col)
+    _run_foreach_batch(spark, watch_dir, f"{id_col} long, {text_col} string", _merge, checkpoint_dir)
+    store = _read_store(spark, store_dir, "fp", id_col)
+    return store.filter(F.col(id_col).isNotNull()).select(id_col)
 
 
-def _run_foreach_batch(stream, merge_fn, checkpoint_dir: str) -> None:
-    """Drive a foreachBatch availableNow stream to completion, each
+def write_fingerprint_store(fp_df: DataFrame, store_dir: str, *, seed: bool, id_col: str) -> None:
+    """The one writer of the exact-dedup fingerprint store (fp, id_col).
+
+    seed=True overwrites the store with the distinct `fp` values of
+    fp_df under a NULL id — corpus rows, which the final readout never
+    reports; seed=False appends fp_df's (fp, id_col) stream survivors."""
+    if seed:
+        fp_df = fp_df.select("fp").distinct().withColumn(id_col, F.lit(None).cast("long"))
+    _write_store(fp_df.select("fp", id_col), store_dir, seed=seed, key="fp")
+
+
+def _run_foreach_batch(spark, watch_dir: str, schema: str, merge_fn, checkpoint_dir: str) -> None:
+    """Drive a foreachBatch availableNow stream over watch_dir's parquet
+    files (one file per microbatch, in mtime order) to completion, each
     batch planned with 4 shuffle partitions.
 
     foreachBatch has no state store, but every join/groupBy INSIDE the
@@ -322,7 +322,10 @@ def _run_foreach_batch(stream, merge_fn, checkpoint_dir: str) -> None:
         merge_fn(batch_df, batch_id)
 
     (
-        stream.writeStream.foreachBatch(_pinned)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(watch_dir)
+        .writeStream.foreachBatch(_pinned)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -330,15 +333,57 @@ def _run_foreach_batch(stream, merge_fn, checkpoint_dir: str) -> None:
     )
 
 
-def _store_pfx_col(columns: list[str]) -> str | None:
-    """The compacted store's partition column, or None. The prefix
-    LENGTH is encoded in the column name (pfx1/pfx2/...), so readers
-    recover it from the schema alone — no extra job, and the writer and
-    reader can never disagree."""
-    for c in columns:
+# Each store dataset's schema, fixed by its writer: no store read infers
+# one (an inferring read is a Spark job of its own, on every microbatch).
+_STORE_SCHEMAS = {
+    "fp": "fp string, {id} long",
+    "bands": "{id} long, band int, band_key string",
+    "shingles": "{id} long, sh array<string>, __corpus boolean",
+}
+
+
+def _store_pfx_col(names: list[str]) -> str | None:
+    """The compacted layout's partition column among column or `pfxN=`
+    directory names, or None. The name carries the prefix LENGTH."""
+    for c in names:
+        c = c.partition("=")[0]
         if c.startswith("pfx") and c[3:].isdigit():
             return c
     return None
+
+
+def _listed_pfx_col(spark, path: str) -> str | None:
+    """The partition column of the dataset at `path` if a compaction
+    laid it out in `pfxN=` directories, from one Hadoop-FS listing of
+    its top level — no Spark job. A missing dataset is uncompacted."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    names = [st.getPath().getName() for st in fs.listStatus(hpath)] if fs.exists(hpath) else []
+    return _store_pfx_col(names)
+
+
+def _read_store(spark, path: str, dataset: str, id_col: str) -> DataFrame:
+    """The one reader of a store dataset (`dataset` keys _STORE_SCHEMAS),
+    plus `pfxN string` when compacted: inferred, a pfxN of all-digit
+    prefixes is an int, and comparing it with a batch prefix 'e' raises."""
+    schema = _STORE_SCHEMAS[dataset].format(id=id_col)
+    pcol = _listed_pfx_col(spark, path)
+    if pcol is not None:
+        schema += f", {pcol} string"
+    return spark.read.schema(schema).parquet(path)
+
+
+def _write_store(df: DataFrame, path: str, *, seed: bool, key: str | None) -> None:
+    """The one write path of a store dataset: seed=True overwrites;
+    seed=False appends in the layout the listing finds, `pfxN=`
+    partitions of the hex `key`'s prefix if compacted (plain files at
+    the root of a partitioned dir break partition discovery)."""
+    pcol = None if seed or key is None else _listed_pfx_col(df.sparkSession, path)
+    if pcol is None:
+        df.write.mode("overwrite" if seed else "append").parquet(path)
+        return
+    df = df.withColumn(pcol, F.substring(key, 1, int(pcol[3:])))
+    df.write.partitionBy(pcol).mode("append").parquet(path)
 
 
 def pruned_store(store_df: DataFrame, batch_df: DataFrame, key: str) -> DataFrame:
@@ -353,25 +398,8 @@ def pruned_store(store_df: DataFrame, batch_df: DataFrame, key: str) -> DataFram
     if pcol is None:
         return store_df
     plen = int(pcol[3:])
-    pfxs = [
-        r[0]
-        for r in batch_df.select(F.substring(key, 1, plen).alias("p"))
-        .distinct()
-        .collect()
-    ]
+    pfxs = [r[0] for r in batch_df.select(F.substring(key, 1, plen)).distinct().collect()]
     return store_df.filter(F.col(pcol).isin(pfxs)).drop(pcol)
-
-
-def _partitioned_append(df: DataFrame, pcol: str, key: str, path: str) -> None:
-    """Append rows to a compacted store in its own partitioned layout
-    (plain files at the root of a hive-partitioned dir break partition
-    discovery)."""
-    (
-        df.withColumn(pcol, F.substring(key, 1, int(pcol[3:])))
-        .write.partitionBy(pcol)
-        .mode("append")
-        .parquet(path)
-    )
 
 
 def _compact_dataset(
@@ -385,8 +413,11 @@ def _compact_dataset(
     losslessness, atomically swap. prefix_col: hex key to
     hive-partition by (1-char buckets for small sets, 2 past ~100k
     rows, length encoded in the partition column name); range_col:
-    range-partition instead (point-lookup-by-id access path)."""
-    import os
+    range-partition instead (point-lookup-by-id access path).
+
+    The one store read that infers its schema: the refusal below needs
+    the columns on disk, where a typed read (_read_store) would show a
+    foreign dir's or a pre-__corpus store's missing columns as NULLs."""
     import shutil
 
     from meteor_spark.io import list_data_files
@@ -535,8 +566,6 @@ def compact_neardup_store(spark, store_dir: str, id_col: str = "doc_id") -> dict
     # compacting them concurrently overlaps the two rewrite jobs
     # (guide §2.6) instead of leaving the cluster idle during each
     # one's dedup/write/verify sequence.
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         fb = pool.submit(
             _compact_dataset,
@@ -556,7 +585,6 @@ def write_neardup_store(
     store_dir: str,
     *,
     seed: bool,
-    store_pcol: str | None,
     id_col: str,
     num_hashes: int,
     bands: int,
@@ -571,14 +599,9 @@ def write_neardup_store(
     marker travels WITH the store rows (the exact-dedup twin's NULL-id
     trick): identifying stream survivors by anti-joining ids against
     the corpus would silently drop any stream doc whose id collides
-    with a corpus id — the two id spaces are independent.
-
-    store_pcol is the partition column of a compacted store
-    (_store_pfx_col of its bands/ schema; None when seeding or when the
-    store is uncompacted): appends then match its hive layout, since
-    plain files at the root of a partitioned dir break partition
-    discovery. The caller passes the layout it already read — reading
-    the schema here again would cost one more job per append.
+    with a corpus id — the two id spaces are independent. Appends
+    match the layout each dataset has on disk (_write_store): a
+    compacted bands/ is hive-partitioned by band_key prefix.
 
     The two writes touch disjoint dirs and both read the persisted
     shingle frame, so they overlap (guide §2.6): the cheaper write
@@ -586,22 +609,17 @@ def write_neardup_store(
     cache fill, which at worst computes a partition twice on
     otherwise-idle cores.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from meteor_spark.operators.dedup import minhash_bands
 
     sh = persist(sh_df)
-    mode = "overwrite" if seed else "append"
 
     def _shingles() -> None:
-        sh.withColumn("__corpus", F.lit(seed)).write.mode(mode).parquet(f"{store_dir}/shingles")
+        marked = sh.withColumn("__corpus", F.lit(seed))
+        _write_store(marked, f"{store_dir}/shingles", seed=seed, key=None)
 
     def _bands() -> None:
         nb = minhash_bands(sh, id_col=id_col, num_hashes=num_hashes, bands=bands, sh_df=sh)
-        if store_pcol is not None:
-            _partitioned_append(nb, store_pcol, "band_key", f"{store_dir}/bands")
-        else:
-            nb.write.mode(mode).parquet(f"{store_dir}/bands")
+        _write_store(nb, f"{store_dir}/bands", seed=seed, key="band_key")
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         for f in [pool.submit(_shingles), pool.submit(_bands)]:
@@ -629,11 +647,10 @@ def incremental_neardup_stream(
     pages that are 90% boilerplate-identical to something we already
     have".
 
-    Store layout (parquet-append; Delta/Iceberg MERGE in a real
-    deployment; written only by write_neardup_store): `bands/` holds
-    (doc_id, band, band_key) — a few dozen bytes per historical doc —
-    and `shingles/` holds (doc_id, sh, __corpus) for exact
-    verification of the FEW band-collision candidates. Per batch:
+    Store (parquet-append; Delta/Iceberg MERGE in a real deployment):
+    `bands/` — a few dozen bytes per historical doc — and `shingles/`
+    for exact verification of the FEW band-collision candidates. Per
+    batch:
 
       1. shingle + minhash-band the batch (operators.dedup's own
          shingle_frame/minhash_bands, so batch vs store collisions mean
@@ -658,14 +675,11 @@ def incremental_neardup_stream(
     """
     from meteor_spark.operators.dedup import band_pair_join, minhash_bands, shingle_frame
 
-    def _write(sh_df: DataFrame, seed: bool, store_pcol: str | None) -> None:
-        write_neardup_store(
-            sh_df, store_dir, seed=seed, store_pcol=store_pcol,
-            id_col=id_col, num_hashes=num_hashes, bands=bands,
-        )
+    def _write(sh_df: DataFrame, seed: bool) -> None:
+        write_neardup_store(sh_df, store_dir, seed=seed, id_col=id_col, num_hashes=num_hashes, bands=bands)
 
     if seed:
-        _write(shingle_frame(corpus, text_col, id_col, k), True, None)
+        _write(shingle_frame(corpus, text_col, id_col, k), True)
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -673,12 +687,10 @@ def incremental_neardup_stream(
         b_b = persist(minhash_bands(batch_df, id_col=id_col, num_hashes=num_hashes, bands=bands, sh_df=sh_b))
 
         # compacted stores are hive-partitioned by band_key prefix:
-        # prune the candidate scan to the batch's own prefixes, and
-        # remember the layout for the survivor append
-        raw_bands = s.read.parquet(f"{store_dir}/bands")
-        store_pcol = _store_pfx_col(raw_bands.columns)
+        # prune the candidate scan to the batch's own prefixes
+        raw_bands = _read_store(s, f"{store_dir}/bands", "bands", id_col)
         store_bands = pruned_store(raw_bands, b_b, "band_key")
-        store_sh = s.read.parquet(f"{store_dir}/shingles")
+        store_sh = _read_store(s, f"{store_dir}/shingles", "shingles", id_col)
 
         # batch vs store: band collision -> exact verify
         cand = (
@@ -709,31 +721,17 @@ def incremental_neardup_stream(
         )
 
         dropped = dup_of_store.unionByName(dup_in_batch).distinct()
-        _write(sh_b.join(dropped, id_col, "left_anti"), False, store_pcol)
+        _write(sh_b.join(dropped, id_col, "left_anti"), False)
         sh_b.unpersist(); b_b.unpersist()
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch_dir)
-    )
-    _run_foreach_batch(stream, _merge, checkpoint_dir)
-    return (
-        spark.read.parquet(f"{store_dir}/shingles")
-        .filter(~F.col("__corpus"))
-        .select(id_col)
-    )
+    _run_foreach_batch(spark, watch_dir, f"{id_col} long, {text_col} string", _merge, checkpoint_dir)
+    store_sh = _read_store(spark, f"{store_dir}/shingles", "shingles", id_col)
+    return store_sh.filter(~F.col("__corpus")).select(id_col)
 
 
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the documents fixture (schema from the file
-    footer, like stream_events — regeneration-proof)."""
-    schema = spark.read.option("pathGlobFilter", "documents.parquet").parquet(sf_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+def neardup_store_bands(spark, store_dir: str, id_col: str = "doc_id") -> DataFrame:
+    """The typed `bands/` dataset of a near-dup store."""
+    return _read_store(spark, f"{store_dir}/bands", "bands", id_col)
 
 
 def ttl_dedup_stream(

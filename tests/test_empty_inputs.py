@@ -210,7 +210,7 @@ def test_compaction_on_seed_only_store(spark, sf_dir, tmp_path):
     corpus = docs.filter(F.col("doc_id") < 50)
     store = str(tmp_path / "store")
     write_neardup_store(
-        shingle_frame(corpus, "text", "doc_id", 3), store, seed=True, store_pcol=None,
+        shingle_frame(corpus, "text", "doc_id", 3), store, seed=True,
         id_col="doc_id", num_hashes=12, bands=4,
     )
     rep = compact_neardup_store(spark, store)

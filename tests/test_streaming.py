@@ -3,6 +3,7 @@ semantics on bounded input (must equal batch)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from meteor_spark.streaming.pipeline import (
@@ -247,7 +248,7 @@ def _seed_store(spark, sf_dir, store, dup_appends=2):
     batch = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 140))
     for src, seed in [(corpus, True)] + [(batch, False)] * dup_appends:
         write_neardup_store(
-            shingle_frame(src, "text", "doc_id", 3), store, seed=seed, store_pcol=None,
+            shingle_frame(src, "text", "doc_id", 3), store, seed=seed,
             id_col="doc_id", num_hashes=12, bands=4,
         )
     return corpus
@@ -454,21 +455,20 @@ def test_fingerprint_store_compaction_and_pruned_continuation(spark, sf_dir, tmp
         compact_fingerprint_store,
         incremental_dedup_stream,
         pruned_store,
+        write_fingerprint_store,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") < 100)
     store = str(tmp_path / "fpstore")
     fp = F.md5(normalize_text(F.col("text")))
-    (corpus.select(fp.alias("fp")).distinct()
-     .withColumn("doc_id", F.lit(None).cast("long"))
-     .write.mode("overwrite").parquet(store))
+    write_fingerprint_store(corpus.select(fp.alias("fp")), store, seed=True, id_col="doc_id")
     # at-least-once duplicate append of one batch's survivors
     batch_rows = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120)).select(
         fp.alias("fp"), F.col("doc_id")
     )
     for _ in range(2):
-        batch_rows.write.mode("append").parquet(store)
+        write_fingerprint_store(batch_rows, store, seed=False, id_col="doc_id")
 
     rep = compact_fingerprint_store(spark, store)
     assert rep["fingerprints"]["rows"][1] == rep["fingerprints"]["rows"][0] - 20
@@ -503,6 +503,113 @@ def test_fingerprint_store_compaction_and_pruned_continuation(spark, sf_dir, tmp
     after = spark.read.parquet(store)
     assert "pfx1" in after.columns
     assert after.filter(F.col("doc_id") == 300).count() == 1
+
+
+def test_compacted_all_digit_fingerprint_store_takes_letter_prefix(spark, tmp_path):
+    """regression: a compacted store whose fingerprints all start with
+    a digit was read with its pfx1 partition column inferred as int,
+    and the next batch fingerprint starting with a letter killed the
+    stream with CAST_INVALID_INPUT in pruned_store's isin. The store
+    reader types pfx1 as string."""
+    import hashlib
+
+    from meteor_spark.queries import _stage_microbatches
+    from meteor_spark.streaming.pipeline import (
+        compact_fingerprint_store,
+        incremental_dedup_stream,
+        write_fingerprint_store,
+    )
+
+    texts = [
+        "alpha0 delta1 golf2 juliet3 mike4 papa5 charlie6 foxtrot7",
+        "hotel1 kilo2 november3 alpha4 delta5 golf6 juliet7 mike8",
+        "oscar2 bravo3 echo4 hotel5 kilo6 november7 alpha8 delta9",
+    ]
+    novel = "foxtrot3 india4 lima5 oscar6 bravo7 echo8 hotel9 kilo0"
+    assert all(hashlib.md5(t.encode()).hexdigest()[0].isdigit() for t in texts)
+    assert hashlib.md5(novel.encode()).hexdigest()[0].isalpha()
+    corpus = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    store = str(tmp_path / "store")
+    write_fingerprint_store(corpus.select(F.md5("text").alias("fp")), store, seed=True, id_col="doc_id")
+    compact_fingerprint_store(spark, store)
+    batch = spark.createDataFrame([(10, novel)], "doc_id long, text string")
+    watch = _stage_microbatches(str(tmp_path), (batch,))
+    out = incremental_dedup_stream(spark, watch, corpus, store, str(tmp_path / "ckpt"), seed=False)
+    assert [r[0] for r in out.collect()] == [10]
+
+
+def test_compacted_all_digit_band_store_takes_letter_prefix(spark, tmp_path):
+    """The bands/ twin of the fingerprint-store regression above: every
+    band_key of the corpus starts with a digit, a batch band_key with a
+    letter."""
+    from meteor_spark.operators.dedup import minhash_bands, shingle_frame
+    from meteor_spark.queries import _stage_microbatches
+    from meteor_spark.streaming.pipeline import (
+        compact_neardup_store,
+        incremental_neardup_stream,
+        neardup_store_bands,
+        write_neardup_store,
+    )
+
+    corpus = spark.createDataFrame(
+        [(7, "bravo7 echo8 hotel9 kilo0 november1 alpha2 delta3 golf4")], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(1, "hotel1 kilo2 november3 alpha4 delta5 golf6 juliet7 mike8")], "doc_id long, text string"
+    )
+    store = str(tmp_path / "store")
+    write_neardup_store(
+        shingle_frame(corpus, "text", "doc_id", 3), store, seed=True,
+        id_col="doc_id", num_hashes=12, bands=4,
+    )
+    assert all(r.band_key[0].isdigit() for r in neardup_store_bands(spark, store).collect())
+    assert any(r.band_key[0].isalpha() for r in minhash_bands(batch).collect())
+    compact_neardup_store(spark, store)
+    watch = _stage_microbatches(str(tmp_path), (batch,))
+    out = incremental_neardup_stream(spark, watch, corpus, store, str(tmp_path / "ckpt"), seed=False)
+    assert [r[0] for r in out.collect()] == [1]
+
+
+@pytest.mark.parametrize(
+    "kind, seeded_jobs, compacted_jobs",
+    # each store read inferred its schema with a job of its own: 8 and 8
+    # jobs for the exact stream, 27 and 22 for the near-dup stream
+    [("dedup", 6, 6), ("neardup", 24, 19)],
+)
+def test_store_stream_job_budget(spark, sf_dir, tmp_path, kind, seeded_jobs, compacted_jobs):
+    """Jobs of one run of an incremental-dedup stream over one
+    microbatch, result collected: on a freshly seeded store, then
+    continuing on the same store compacted. Store reads pass the
+    writer's schema and find the layout from a listing, so no read
+    runs a job."""
+    from meteor_spark.queries import _stage_microbatches, _t
+    from meteor_spark.streaming import pipeline
+
+    stream, compact = {
+        "dedup": (pipeline.incremental_dedup_stream, pipeline.compact_fingerprint_store),
+        "neardup": (pipeline.incremental_neardup_stream, pipeline.compact_neardup_store),
+    }[kind]
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    corpus = docs.filter(F.col("doc_id") < 100)
+    para = docs.filter(F.col("doc_id") < 3).select(
+        (F.col("doc_id") + 9000).alias("doc_id"), F.concat("text", F.lit(" addendum")).alias("text")
+    )
+    w0 = _stage_microbatches(str(tmp_path / "w0"), (docs.filter(F.col("doc_id").between(100, 109)),))
+    w1 = _stage_microbatches(
+        str(tmp_path / "w1"), (docs.filter(F.col("doc_id").between(110, 119)).union(para),)
+    )
+    store = str(tmp_path / "store")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    before = sched.numTotalJobs()
+    assert len(stream(spark, w0, corpus, store, str(tmp_path / "c0")).collect()) == 10
+    seeded = sched.numTotalJobs() - before
+    compact(spark, store)
+    before = sched.numTotalJobs()
+    survivors = stream(spark, w1, corpus, store, str(tmp_path / "c1"), seed=False).collect()
+    compacted = sched.numTotalJobs() - before
+    assert len(survivors) == (23 if kind == "dedup" else 19)
+    assert (seeded, compacted) == (seeded_jobs, compacted_jobs)
 
 
 def test_streaming_ks_drift_equals_batch(spark, sf_dir):
@@ -543,7 +650,9 @@ def test_foreach_batch_leaves_caller_conf_alone(spark, sf_dir, monkeypatch):
 def test_neardup_store_layout_has_one_writer():
     # the store's origin marker is written (write_neardup_store) and
     # read back in one module only
+    import ast
     import pathlib
+    import re
 
     import meteor_spark
 
@@ -552,3 +661,26 @@ def test_neardup_store_layout_has_one_writer():
         str(p.relative_to(root)) for p in root.rglob("*.py") if "__corpus" in p.read_text()
     )
     assert users == ["streaming/pipeline.py"]
+
+    # no other module reads or writes a store directory: none names a
+    # store subdirectory in a string ("{store}/bands", "shingles/")
+    subdir = re.compile(r"(?:^|/)(?:bands|shingles)(?:/|$)")
+    namers = {
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and subdir.search(node.value)
+    }
+    assert namers == {"streaming/pipeline.py"}
+
+    # in pipeline.py only the compaction (which must see the columns
+    # on disk) and the fixture footer sniff read parquet without a schema
+    tree = ast.parse((root / "streaming" / "pipeline.py").read_text())
+    inferring = set()
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", "") == "parquet":
+                chain = ast.unparse(node.func)
+                if ".read." in chain and ".schema(" not in chain:
+                    inferring.add(getattr(fn, "name", "<module>"))
+    assert inferring == {"_compact_dataset", "stream_table"}
