@@ -1,8 +1,7 @@
-"""IO helpers: fixture-tolerant parquet reading, the two write-side
-levers that matter at 100 TB — bucketing (shuffle-free co-located joins)
-and partitioned layout (partition pruning at the scan) — and the cache
-scope: whoever builds AND collects a result inside one `cache_scope`
-owns every frame the engine `persist`ed for it.
+"""IO helpers: fixture-tolerant parquet reading, data-file listing and
+small-file compaction, the z-order layout (data skipping at the scan),
+and the cache scope: whoever builds AND collects a result inside one
+`cache_scope` owns every frame the engine `persist`ed for it.
 """
 
 from __future__ import annotations

@@ -19,9 +19,17 @@ Beyond-reference operators (BASELINE.json north star):
 
 - IVF-style variant: k-means-free coarse quantizer using the top
   hyperplane bits as cells; same join shape.
+
+Every operator scores a pair through `_cosine` and ranks per-query
+top-k through `_topk`. Zero-norm rule: the cosine of a pair in which
+either vector has norm 0 is 0.0 (orthogonal), and the unit vector of a
+zero vector is the zero vector, so one all-zero embedding neither
+aborts the job (ANSI mode raises on x / 0.0) nor ranks first via NaN.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -76,8 +84,61 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Unrounded cosine of two array<double> columns given their norms
+    `na`, `nb`: dot(a, b) / (na * nb), or 0.0 when either norm is 0 —
+    the module's one division by a norm product."""
+    den = na * nb
+    return F.when(den == 0, F.lit(0.0)).otherwise(dot(a, b) / den)
+
+
+def _unit(v) -> list[float]:
+    """Driver-side v / ||v||, the norm a sequential sum of squares (the
+    oracles' sqrt(list_dot_product) order); the zero vector stays zero."""
+    s = 0.0
+    for x in v:
+        s += x * x
+    n = math.sqrt(s)
+    return [float(x) / n if n else 0.0 for x in v]
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, ident: str, vec: str, *extra: Column
+) -> DataFrame:
+    """One side of a cosine join: `id_col` as `ident`, `vec_col` as
+    array<double> `vec`, any `extra` columns, and the norm as `{vec}_n`.
+    The norm is projected once per row below the join (N+Q evaluations,
+    not 2·N·Q); it folds the same doubles in the same order as a norm
+    inside the pair expression would, so the rounded cosine is the same."""
+    return df.select(
+        F.col(id_col).alias(ident), F.col(vec_col).cast("array<double>").alias(vec), *extra
+    ).withColumn(f"{vec}_n", norm(F.col(vec)))
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    score: str = "cos",
+    tie: str = "neighbor_id",
+    by: tuple[str, ...] = ("query_id",),
+) -> DataFrame:
+    """The `k` rows of each `by` group with the highest `score`, ties to
+    the smaller `tie`, numbered 1..k in an int `rank` column."""
+    w = Window.partitionBy(*by).orderBy(F.col(score).desc(), F.col(tie))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _rerank(
+    pairs: DataFrame,
+    k: int,
+    round_to: int,
+    keep: tuple[str, ...] = ("query_id", "neighbor_id"),
+) -> DataFrame:
+    """The refinement step every top-k search shares: exact cosine of
+    each candidate pair of a `qv` query side and a `cv` corpus side
+    (both from `_side`), rounded, then the per-query top-k."""
+    cos = _cosine(F.col("qv"), F.col("cv"), F.col("qv_n"), F.col("cv_n"))
+    return _topk(pairs.select(*keep, F.round(cos, round_to).alias("cos")), k)
 
 
 def brute_force_topk(
@@ -94,28 +155,9 @@ def brute_force_topk(
     partition scores its slice and the per-query top-k is a single
     window over (queries x corpus) after local pruning.
     """
-    # norms projected once per row below the join (N+Q evaluations, not
-    # 2·N·Q): same doubles in the same order -> rounded cosine unchanged
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = _side(queries, id_col, vec_col, "query_id", "qv")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv")
+    return _rerank(c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k, round_to)
 
 
 def _hyperplane_component(bit: int, j: int) -> float:
@@ -158,29 +200,11 @@ def srp_topk(
     recall, more compute). The candidate join is an equi-join on the
     signature, so it scales with bucket sizes, not corpus^2.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        srp_signature(F.col(vec_col), dim, bits).alias("sig"),
-    ).withColumn("cn", norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        srp_signature(F.col(vec_col), dim, bits).alias("sig"),
-    ).withColumn("qn", norm(F.col("qv")))
-    scored = (
-        c.join(F.broadcast(q), "sig")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    sig = srp_signature(F.col(vec_col), dim, bits).alias("sig")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv", sig)
+    q = _side(queries, id_col, vec_col, "query_id", "qv", sig)
+    pairs = c.join(F.broadcast(q), "sig").filter(F.col("query_id") != F.col("neighbor_id"))
+    return _rerank(pairs, k, round_to)
 
 
 def ivf_topk(
@@ -220,35 +244,26 @@ def ivf_topk(
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="features", predictionCol="cell", initMode="random", maxIter=5
     ).fit(corpus_v)
-    assigned = model.transform(corpus_v).select(
-        "neighbor_id", F.col("cv").cast("array<double>").alias("cv"), "cell"
-    ).withColumn("cn", norm(F.col("cv")))
+    assigned = _side(
+        model.transform(corpus_v), "neighbor_id", "cv", "neighbor_id", "cv", F.col("cell")
+    )
 
     centers = [list(map(float, c)) for c in model.clusterCenters()]
     centers_arr = F.expr("array(" + ",".join(render_double_array(c) for c in centers) + ")")
     # per query: rank centroids by cosine, keep n_probe cells
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    probes = (
-        q.select("query_id", "qv", F.posexplode(centers_arr).alias("cell", "center"))
-        .withColumn("c_cos", cosine(F.col("qv").cast("array<double>"), F.col("center")))
-        .withColumn("p_rank", F.row_number().over(Window.partitionBy("query_id").orderBy(F.col("c_cos").desc(), "cell")))
-        .filter(F.col("p_rank") <= n_probe)
-        .select("query_id", F.col("qv").cast("array<double>").alias("qv"), "cell")
-        .withColumn("qn", norm(F.col("qv")))
+    q = _side(queries, id_col, vec_col, "query_id", "qv")
+    center = F.col("center")
+    probes = _topk(
+        q.select("query_id", "qv", "qv_n", F.posexplode(centers_arr).alias("cell", "center"))
+        .withColumn("c_cos", _cosine(F.col("qv"), center, F.col("qv_n"), norm(center))),
+        n_probe,
+        "c_cos",
+        "cell",
+    ).select("query_id", "qv", "qv_n", "cell")
+    pairs = assigned.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rerank(pairs, k, round_to)
 
 
 def ivf_pivot_topk(
@@ -292,8 +307,6 @@ def ivf_pivot_topk(
     pivot) agrees except on sub-ulp near-ties between two pivots, which
     real-valued embeddings don't produce (parity-verified at sf0.01).
     """
-    import math
-
     pivot_rows = (
         corpus.select(
             F.col(id_col).cast("long").alias("cell"),
@@ -305,18 +318,7 @@ def ivf_pivot_topk(
         .collect()
     )
 
-    def py_norm(v) -> float:
-        s = 0.0
-        for x in v:
-            s += x * x
-        return math.sqrt(s)
-
-    # unit pivots computed with sequential sums — the exact arithmetic
-    # the oracle's sqrt(list_dot_product)/divide performs
-    units = []
-    for r in pivot_rows:
-        n = py_norm(r["pv"])
-        units.append((int(r["cell"]), [float(x) / n for x in r["pv"]]))
+    units = [(int(r["cell"]), _unit(r["pv"])) for r in pivot_rows]
 
     centers_arr = F.expr(
         "array("
@@ -336,43 +338,21 @@ def ivf_pivot_topk(
         )
         return F.array_min(cands)["cell"]
 
-    assigned = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .withColumn("cn", norm(F.col("cv")))
-        .withColumn("cell", best_cell(F.col("cv")))
+    assigned = _side(corpus, id_col, vec_col, "neighbor_id", "cv").withColumn(
+        "cell", best_cell(F.col("cv"))
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
+    q = _side(queries, id_col, vec_col, "query_id", "qv")
+    probes = _topk(
+        q.select("query_id", "qv", "qv_n", F.explode(centers_arr).alias("c"))
+        .withColumn("c_dot", dot(F.col("qv"), F.col("c.up"))),
+        n_probe,
+        "c_dot",
+        "c.cell",
+    ).select("query_id", "qv", "qv_n", F.col("c.cell").alias("cell"))
+    pairs = assigned.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    probes = (
-        q.select("query_id", "qv", F.explode(centers_arr).alias("c"))
-        .withColumn("c_dot", dot(F.col("qv"), F.col("c.up")))
-        .withColumn(
-            "p_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.col("c_dot").desc(), F.col("c.cell"))
-            ),
-        )
-        .filter(F.col("p_rank") <= n_probe)
-        .select("query_id", "qv", F.col("c.cell").alias("cell"))
-        .withColumn("qn", norm(F.col("qv")))
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rerank(pairs, k, round_to)
 
 
 def pq_pivot_topk(
@@ -409,8 +389,6 @@ def pq_pivot_topk(
     candidates' raw vectors to top k. The scoring join broadcasts the
     query side; codes, not vectors, flow through the window.
     """
-    import math
-
     pivot_rows = (
         corpus.select(
             F.col(vec_col).cast("array<double>").alias("pv"),
@@ -435,31 +413,24 @@ def pq_pivot_topk(
             s += x * y
         return s
 
-    centroids: list[list[float]] = []
-    for r in pivot_rows:
-        n = math.sqrt(py_dot(r["pv"], r["pv"]))
-        centroids.append([float(x) / n for x in r["pv"]])
+    centroids = [_unit(r["pv"]) for r in pivot_rows]
     # per (subspace, code): the centroid subvector and its squared norm
     cent_sub = [
         [c[j * d_sub : (j + 1) * d_sub] for c in centroids] for j in range(m)
     ]
     cent_yy = [[py_dot(s, s) for s in subs] for subs in cent_sub]
 
-    def _normed(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-        # norm projected once per row, then one element-wise divide
-        return (
-            df.select(
-                F.col(id_col).alias(out_id),
-                F.col(vec_col).cast("array<double>").alias("__v"),
-            )
-            .withColumn("__n", norm(F.col("__v")))
-            .select(
-                out_id,
-                F.transform(F.col("__v"), lambda x: x / F.col("__n")).alias(out_vec),
-            )
-        )
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv")
+    q = _side(queries, id_col, vec_col, "query_id", "qv")
 
-    base = _normed(corpus, "neighbor_id", "nv")
+    def _normed(side: DataFrame, ident: str, vec: str, out_vec: str) -> DataFrame:
+        # one element-wise divide by the side's projected norm; a zero
+        # row stays the zero vector
+        n = F.col(f"{vec}_n")
+        unit = F.transform(F.col(vec), lambda x: F.when(n == 0, F.lit(0.0)).otherwise(x / n))
+        return side.select(ident, unit.alias(out_vec))
+
+    base = _normed(c, "neighbor_id", "cv", "nv")
 
     # The codebook rides a 128-row broadcast frame and every per-row
     # expression stays small — an earlier formulation inlined all
@@ -506,7 +477,7 @@ def pq_pivot_topk(
         .select("neighbor_id", "j", F.col("best.cs").alias("cs"))
     )
 
-    q = _normed(queries, "query_id", "qnv")
+    qn = _normed(q, "query_id", "qv", "qnv")
 
     def dot_sub_at(qv: Column, j: Column, b: Column) -> Column:
         acc = F.element_at(qv, j * d_sub + 1) * F.element_at(b, 1)
@@ -514,7 +485,7 @@ def pq_pivot_topk(
             acc = acc + F.element_at(qv, j * d_sub + t + 1) * F.element_at(b, t + 1)
         return acc
 
-    term = enc.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
+    term = enc.join(F.broadcast(qn), F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
         "j",
@@ -536,34 +507,8 @@ def pq_pivot_topk(
             ).alias("adc"),
         )
     )
-    w_c = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), "neighbor_id")
-    cand = (
-        adc_df.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    rescored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return rescored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cand = _topk(adc_df, n_candidates, "adc").select("query_id", "neighbor_id")
+    return _rerank(cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"), k, round_to)
 
 
 def embedding_near_duplicates(
@@ -581,21 +526,17 @@ def embedding_near_duplicates(
         dim = len(df.select(vec_col).first()[0])
     # persist: both sides of the self-join would otherwise recompute the
     # bits*dim-term signature expression from raw vectors
-    sigs = persist(df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        srp_signature(F.col(vec_col), dim, bits).alias("sig"),
-    ).withColumn("nv", norm(F.col("v"))))
+    sig = srp_signature(F.col(vec_col), dim, bits).alias("sig")
+    sigs = persist(_side(df, id_col, vec_col, id_col, "v", sig))
     l, r = sigs.alias("l"), sigs.alias("r")
+    cos = _cosine(F.col("l.v"), F.col("r.v"), F.col("l.v_n"), F.col("r.v_n"))
     return (
         l.join(r, "sig")
         .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
         .select(
             F.col(f"l.{id_col}").alias("a"),
             F.col(f"r.{id_col}").alias("b"),
-            F.round(
-                dot(F.col("l.v"), F.col("r.v")) / (F.col("l.nv") * F.col("r.nv")), round_to
-            ).alias("cos"),
+            F.round(cos, round_to).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .distinct()
@@ -627,15 +568,16 @@ def semantic_assign(
         for r in df.orderBy(id_col).limit(n_clusters).select(vec_col).collect()
     ]
     v = F.col(vec_col).cast("array<double>")
+    seed_lits = [lit_double_array(s) for s in seeds]
     # argmax by (cos, -cluster): struct max is lexicographic, so equal
     # cosines deterministically pick the LOWEST cluster id
     scored = F.array(
         *[
             F.struct(
-                cosine(v, lit_double_array(s)).alias("c"),
+                _cosine(v, s, norm(v), norm(s)).alias("c"),
                 F.lit(-ci).alias("nc"),
             )
-            for ci, s in enumerate(seeds)
+            for ci, s in enumerate(seed_lits)
         ]
     )
     cluster = (-F.array_max(scored).getField("nc")).cast("int")
@@ -672,7 +614,7 @@ def semantic_dedup_pairs(
     the same doubles in the same order, so the rounded cosine is
     bit-identical to the naive form, measurably cheaper at pair counts.
     """
-    sided = assigned.withColumn("__nv", norm(F.col("v")))
+    sided = assigned.withColumn("v_n", norm(F.col("v")))
     grid = F.array(*[F.lit(k) for k in range(blocks)])
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).cast("int")
     # the probe side must be SPREAD before the join: when Catalyst picks
@@ -708,8 +650,7 @@ def semantic_dedup_pairs(
             F.col(f"l.{id_col}").alias("a"),
             F.col(f"r.{id_col}").alias("b"),
             F.round(
-                dot(F.col("l.v"), F.col("r.v")) / (F.col("l.__nv") * F.col("r.__nv")),
-                round_to,
+                _cosine(F.col("l.v"), F.col("r.v"), F.col("l.v_n"), F.col("r.v_n")), round_to
             ).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
@@ -734,7 +675,6 @@ def make_semantic_exact_decider(threshold: float, round_to: int = 4):
     folds (Spark F.aggregate / DuckDB list_dot_product evaluation
     order) + HALF_UP decimal rounding of the shortest repr (Java
     BigDecimal.valueOf semantics, Spark's Round)."""
-    import math
     from decimal import ROUND_HALF_UP, Decimal
 
     q = Decimal(1).scaleb(-round_to)
@@ -981,34 +921,14 @@ def pq_topk(
                 )
                 yield yield_rows
 
-    cand = codes_df.mapInPandas(score, schema=adc_schema)
-    w_c = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), "neighbor_id")
-    cand = (
-        cand.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= n_candidates)
-        .select("query_id", "neighbor_id")
+    cand = _topk(codes_df.mapInPandas(score, schema=adc_schema), n_candidates, "adc").select(
+        "query_id", "neighbor_id"
     )
 
     # ---- exact cosine re-rank on the candidates only
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cv = _side(corpus, id_col, vec_col, "neighbor_id", "cv")
+    qv = _side(queries, id_col, vec_col, "query_id", "qv")
+    return _rerank(cand.join(cv, "neighbor_id").join(F.broadcast(qv), "query_id"), k, round_to)
 
 
 # ------------------------------------------------------ distributed k-means
@@ -1229,14 +1149,12 @@ def label_centroid_similarity(
         F.col("label").alias("label_b"), F.col("centroid").alias("cb")
     )
     pairs = a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
+    ca, cb = F.col("ca"), F.col("cb")
     return pairs.select(
         "label_a",
         "label_b",
         (
-            F.round(
-                dot(F.col("ca"), F.col("cb")) / (norm(F.col("ca")) * norm(F.col("cb"))),
-                round_to,
-            )
+            F.round(_cosine(ca, cb, norm(ca), norm(cb)), round_to)
             + F.lit(0.0)  # fold -0.0: near-orthogonal centroids
         ).alias("cos"),
     )
@@ -1265,35 +1183,8 @@ def dim_truncation_recall(
     pruning. recall_ppm is exact integer arithmetic (hits * 1e6 DIV
     pairs) — bit-stable by construction.
     """
-    # full-width ground truth through the SAME zero-norm guard as the
-    # truncated arms (cos = 0 for a zero-norm vector): an all-zero
-    # embedding would otherwise crash ANSI mode (0.0/0.0) or rank FIRST
-    # everywhere via NaN (NaN sorts greatest in Spark), while the
-    # DuckDB oracle's guarded full-width arm ranks it orthogonal
-    fq = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("fqv"),
-    ).withColumn("fqn", norm(F.col("fqv")))
-    fc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("fcv"),
-    ).withColumn("fcn", norm(F.col("fcv")))
-    fdenom = F.col("fqn") * F.col("fcn")
-    fscored = fc.join(F.broadcast(fq), F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.when(fdenom == 0, F.lit(0.0)).otherwise(
-                dot(F.col("fqv"), F.col("fcv")) / fdenom
-            ),
-            round_to,
-        ).alias("cos"),
-    )
-    fw = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    full = (
-        fscored.withColumn("rank", F.row_number().over(fw))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
+    full = brute_force_topk(corpus, queries, vec_col, id_col, k, round_to).select(
+        "query_id", "neighbor_id"
     )
     dimfan = F.explode(F.array(*[F.lit(d) for d in dims])).alias("trunc_dim")
     q = (
@@ -1307,35 +1198,23 @@ def dim_truncation_recall(
             "trunc_dim",
             F.slice("qv0", F.lit(1), F.col("trunc_dim")).alias("qv"),
         )
-        .withColumn("qn", norm(F.col("qv")))
+        .withColumn("qv_n", norm(F.col("qv")))
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv0"),
     )
-    denom = F.col("qn") * norm(F.slice("cv0", F.lit(1), F.col("trunc_dim")))
-    # a zero-norm PREFIX is structurally common (signal in later dims) —
-    # define its cosine as 0 (orthogonal), guarded so ANSI mode never
-    # sees the 0/0
+    # a zero-norm PREFIX is structurally common (signal in later dims);
+    # _cosine scores it 0.0
+    cv = F.slice("cv0", F.lit(1), F.col("trunc_dim"))
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
         "trunc_dim",
         "query_id",
         "neighbor_id",
-        F.round(
-            F.when(denom == 0, F.lit(0.0)).otherwise(
-                dot(F.col("qv"), F.slice("cv0", F.lit(1), F.col("trunc_dim")))
-                / denom
-            ),
-            round_to,
-        ).alias("cos"),
+        F.round(_cosine(F.col("qv"), cv, F.col("qv_n"), norm(cv)), round_to).alias("cos"),
     )
-    w = Window.partitionBy("trunc_dim", "query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    hits = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("trunc_dim", "query_id", F.col("neighbor_id").alias("hit_id"))
+    hits = _topk(scored, k, by=("trunc_dim", "query_id")).select(
+        "trunc_dim", "query_id", F.col("neighbor_id").alias("hit_id")
     )
     # both join sides are |queries|·k·|dims| rows — broadcast the hits
     # (the right side of the left join; only the non-preserved side can
@@ -1502,33 +1381,15 @@ def hard_negative_topk(
 
     Returns (query_id, query_label, neighbor_id, neighbor_label, cos,
     rank); ties broken by neighbor id — fully deterministic."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    scored = c.join(
+    label = F.col(label_col)
+    q = _side(queries, id_col, vec_col, "query_id", "qv", label.alias("query_label"))
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "cv", label.alias("neighbor_label"))
+    pairs = c.join(
         F.broadcast(q),
         (F.col("query_id") != F.col("neighbor_id"))
         & (F.col("query_label") != F.col("neighbor_label")),
-    ).select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        F.round(
-            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to
-        ).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).filter(F.col("rank") <= k)
+    return _rerank(pairs, k, round_to, ("query_id", "query_label", "neighbor_id", "neighbor_label"))
 
 
 def margin_bitext_mine(
@@ -1563,41 +1424,38 @@ def margin_bitext_mine(
     (src_id, tgt_id, cos_e4, margin_ppm)."""
     from meteor_spark.functions.exactmath import ppm_expr
 
-    def prep(df: DataFrame, ident: str, vec: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(ident),
-            F.col(vec_col).cast("array<double>").alias(vec),
-        ).withColumn(f"{vec}_n", norm(F.col(vec)))
+    q = _side(queries, id_col, vec_col, "src_id", "qv")
+    b = _side(side_b, id_col, vec_col, "tgt_id", "bv")
+    a = _side(side_a, id_col, vec_col, "cand_id", "av")
 
-    q = prep(queries, "src_id", "qv")
-    b = prep(side_b, "tgt_id", "bv")
-    a = prep(side_a, "cand_id", "av")
+    def c4(u: str, v: str) -> Column:
+        cos = _cosine(F.col(u), F.col(v), F.col(f"{u}_n"), F.col(f"{v}_n"))
+        return F.round(cos * 10000).cast("long").alias("c4")
 
-    c4 = lambda u, un, v, vn: F.round(  # noqa: E731
-        dot(F.col(u), F.col(v)) / (F.col(un) * F.col(vn)) * 10000
-    ).cast("long")
-
-    wq = Window.partitionBy("src_id").orderBy(F.col("c4").desc(), F.col("tgt_id"))
     # persist: the forward k-NN feeds three consumers (pair candidates,
     # per-query mass, target set) — without it the |B| x |Q| broadcast
     # scan re-runs per consumer; persisted it is one pass over B and
     # |Q|*k rows of state
     fwd = persist(
-        b.join(F.broadcast(q), F.lit(True))
-        .select("src_id", "tgt_id", c4("qv", "qv_n", "bv", "bv_n").alias("c4"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= k)
+        _topk(
+            b.join(F.broadcast(q), F.lit(True)).select("src_id", "tgt_id", c4("qv", "bv")),
+            k,
+            "c4",
+            "tgt_id",
+            ("src_id",),
+        )
     )
     fwd_sum = fwd.groupBy("src_id").agg(F.sum("c4").alias("sum_fwd"))
 
     cand = fwd.select("tgt_id").distinct().join(b, "tgt_id")
-    wt = Window.partitionBy("tgt_id").orderBy(F.col("c4").desc(), F.col("cand_id"))
-    bwd = (
+    bwd = _topk(
         a.join(F.broadcast(cand), F.lit(True))
         .filter(F.col("cand_id") != F.col("tgt_id"))
-        .select("tgt_id", "cand_id", c4("bv", "bv_n", "av", "av_n").alias("c4"))
-        .withColumn("r", F.row_number().over(wt))
-        .filter(F.col("r") <= k)
+        .select("tgt_id", "cand_id", c4("bv", "av")),
+        k,
+        "c4",
+        "cand_id",
+        ("tgt_id",),
     )
     bwd_sum = bwd.groupBy("tgt_id").agg(F.sum("c4").alias("sum_bwd"))
 
@@ -1615,11 +1473,6 @@ def margin_bitext_mine(
             ).cast("long"),
         )
     )
-    wbest = Window.partitionBy("src_id").orderBy(
-        F.col("margin_ppm").desc(), F.col("tgt_id")
-    )
-    return (
-        scored.withColumn("best", F.row_number().over(wbest))
-        .filter(F.col("best") == 1)
-        .select("src_id", "tgt_id", F.col("c4").alias("cos_e4"), "margin_ppm")
+    return _topk(scored, 1, "margin_ppm", "tgt_id", ("src_id",)).select(
+        "src_id", "tgt_id", F.col("c4").alias("cos_e4"), "margin_ppm"
     )

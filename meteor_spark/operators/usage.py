@@ -169,6 +169,41 @@ def activity_gini(
     )
 
 
+def _band_signature(h: DataFrame, user_col: str, attr_col: str) -> DataFrame:
+    """(user, sig) from a (user, attr, c) count frame: the quasi-identifier
+    of the privacy censuses, each attr's count coarsened to its
+    power-of-two band (length(bin(c))), rendered `attr:band` in sorted
+    order and comma-joined."""
+    banded = h.select(
+        user_col, attr_col, F.length(F.bin("c")).cast("long").alias("band")
+    )
+    return banded.groupBy(user_col).agg(
+        F.concat_ws(
+            ",",
+            F.transform(
+                F.sort_array(F.collect_list(F.struct(attr_col, "band"))),
+                lambda x: F.concat(x[attr_col], F.lit(":"), x["band"].cast("string")),
+            ),
+        ).alias("sig")
+    )
+
+
+def _dominant_value(h: DataFrame, user_col: str, attr_col: str) -> DataFrame:
+    """(user, sens) from a (user, attr, c) count frame: each user's
+    sensitive value, the attr with the largest count, ties to the
+    lexicographically smallest."""
+    from pyspark.sql import Window
+
+    wdom = Window.partitionBy(user_col).orderBy(
+        F.col("c").desc(), F.col(attr_col).asc()
+    )
+    return (
+        h.withColumn("__r", F.row_number().over(wdom))
+        .filter(F.col("__r") == 1)
+        .select(user_col, F.col(attr_col).alias("sens"))
+    )
+
+
 def kanonymity_census(
     events: DataFrame,
     user_col: str = "user_id",
@@ -201,18 +236,7 @@ def kanonymity_census(
     from meteor_spark.functions.exactmath import ppm_expr
 
     h = events.groupBy(user_col, attr_col).agg(F.count("*").alias("c"))
-    banded = h.select(
-        user_col, attr_col, F.length(F.bin("c")).cast("long").alias("band")
-    )
-    sig = banded.groupBy(user_col).agg(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(attr_col, "band"))),
-                lambda x: F.concat(x[attr_col], F.lit(":"), x["band"].cast("string")),
-            ),
-        ).alias("sig")
-    )
+    sig = _band_signature(h, user_col, attr_col)
     sets = sig.groupBy("sig").agg(F.count("*").alias("k"))
     total = sig.agg(F.count("*").cast("long").alias("n_total"))
     census = (
@@ -251,31 +275,11 @@ def ldiversity_census(
     window over the (user x attr) count frame (attr-domain-sized
     groups) and one distinct-count per signature. All-integer
     census, ppm-exact at any N."""
-    from pyspark.sql import Window
-
     from meteor_spark.functions.exactmath import ppm_expr
 
     h = events.groupBy(user_col, attr_col).agg(F.count("*").alias("c"))
-    wdom = Window.partitionBy(user_col).orderBy(
-        F.col("c").desc(), F.col(attr_col).asc()
-    )
-    dominant = (
-        h.withColumn("__r", F.row_number().over(wdom))
-        .filter(F.col("__r") == 1)
-        .select(user_col, F.col(attr_col).alias("sens"))
-    )
-    banded = h.select(
-        user_col, attr_col, F.length(F.bin("c")).cast("long").alias("band")
-    )
-    sig = banded.groupBy(user_col).agg(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(attr_col, "band"))),
-                lambda x: F.concat(x[attr_col], F.lit(":"), x["band"].cast("string")),
-            ),
-        ).alias("sig")
-    )
+    dominant = _dominant_value(h, user_col, attr_col)
+    sig = _band_signature(h, user_col, attr_col)
     per_set = (
         sig.join(dominant, user_col)
         .groupBy("sig")
@@ -326,31 +330,11 @@ def tcloseness_census(
     Scale: the kanonymity/l-diversity aggregations plus one
     (sets x attr-domain) grid join — |sigs|·|types| rows, never user-
     sized — and a one-row global broadcast."""
-    from pyspark.sql import Window
-
     from meteor_spark.functions.exactmath import fixed_div_expr
 
     h = events.groupBy(user_col, attr_col).agg(F.count("*").alias("c"))
-    wdom = Window.partitionBy(user_col).orderBy(
-        F.col("c").desc(), F.col(attr_col).asc()
-    )
-    dominant = (
-        h.withColumn("__r", F.row_number().over(wdom))
-        .filter(F.col("__r") == 1)
-        .select(user_col, F.col(attr_col).alias("sens"))
-    )
-    banded = h.select(
-        user_col, attr_col, F.length(F.bin("c")).cast("long").alias("band")
-    )
-    sig = banded.groupBy(user_col).agg(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(attr_col, "band"))),
-                lambda x: F.concat(x[attr_col], F.lit(":"), x["band"].cast("string")),
-            ),
-        ).alias("sig")
-    )
+    dominant = _dominant_value(h, user_col, attr_col)
+    sig = _band_signature(h, user_col, attr_col)
     # persist: the (user, sig, sens) frame feeds FOUR consumers (set
     # counts, set sizes, global distribution, total); without it each
     # recomputes the count/window/signature pipeline — one user-sized

@@ -84,8 +84,9 @@ def build_config(raw: dict[str, Any] | None, spec: dict[str, Field]) -> dict[str
     return out
 
 
-class Extractor:
-    """Base extractor. Subclasses set CONFIG spec and implement extract()."""
+class Plugin:
+    """What every plugin kind shares: a CONFIG spec, validated and
+    defaulted by init() into self.config."""
 
     CONFIG: dict[str, Field] = {}
 
@@ -97,39 +98,21 @@ class Extractor:
 
     def validate(self, config: dict[str, Any] | None) -> None:
         build_config(config, self.CONFIG)
+
+
+class Extractor(Plugin):
+    """Base extractor. Subclasses set CONFIG spec and implement extract()."""
 
     def extract(self, spark: SparkSession) -> DataFrame:
         raise NotImplementedError
 
 
-class Processor:
-    CONFIG: dict[str, Field] = {}
-
-    def __init__(self) -> None:
-        self.config: dict[str, Any] = {}
-
-    def init(self, config: dict[str, Any] | None) -> None:
-        self.config = build_config(config, self.CONFIG)
-
-    def validate(self, config: dict[str, Any] | None) -> None:
-        build_config(config, self.CONFIG)
-
+class Processor(Plugin):
     def process(self, df: DataFrame) -> DataFrame:
         raise NotImplementedError
 
 
-class Sink:
-    CONFIG: dict[str, Field] = {}
-
-    def __init__(self) -> None:
-        self.config: dict[str, Any] = {}
-
-    def init(self, config: dict[str, Any] | None) -> None:
-        self.config = build_config(config, self.CONFIG)
-
-    def validate(self, config: dict[str, Any] | None) -> None:
-        build_config(config, self.CONFIG)
-
+class Sink(Plugin):
     def sink(self, df: DataFrame) -> int | None:
         """Write the DataFrame; return the number of records written, or
         None for "every row of the frame" (the runner then reports its

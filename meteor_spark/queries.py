@@ -8143,14 +8143,55 @@ def _parallel_writes(write_one, tables) -> None:
         list(pool.map(write_one, tables))
 
 
-@query(
-    "orc_catalog_assets",
+# the catalog gates' shared oracle: each extracted table's schema width
+# and row count, checked against the fixture's parquet views
+_CATALOG_ORACLE = (
     "UNION ALL ".join(
         f"SELECT '{t}' AS table_name, CAST({_N_COLS[t]} AS BIGINT) AS n_columns,"
         f" CAST((SELECT count(*) FROM {t}) AS BIGINT) AS total_rows "
         for t in _ORC_TABLES
     )
-    + "ORDER BY table_name",
+    + "ORDER BY table_name"
+)
+
+
+def _catalog_round_trip(
+    spark: SparkSession, sf_dir: str, tag: str, suffix: str, write, extractor: str
+) -> DataFrame:
+    """Write the five dimension tables with `write(writer, path)` to
+    `<tag>_<fixture>/<table>.<suffix>` under the per-process temp root,
+    walk the directory with the `extractor` source and project
+    (table_name, n_columns, total_rows).
+
+    The temp root is a per-process mkdtemp (cached, 0700, removed at
+    exit) with a gate+fixture subdir: sweeps within one process reuse
+    (overwrite) the same directory instead of leaking a fixture-sized
+    /tmp tree per invocation, while concurrent processes and multi-user
+    hosts never share a predictable path."""
+    import os
+
+    from meteor_spark.registry import extractors
+
+    fixture = os.path.basename(os.path.normpath(sf_dir)) or "fixture"
+    base = _proc_tmpdir(f"{tag}_{fixture}")
+    _parallel_writes(
+        lambda t: write(
+            _t(spark, sf_dir, t).write.mode("overwrite"), os.path.join(base, f"{t}.{suffix}")
+        ),
+        _ORC_TABLES,
+    )
+    ex = extractors.get(extractor)
+    ex.init({"path": base, "include_row_count": True})
+    return ex.extract(spark).select(
+        F.col("resource.name").alias("table_name"),
+        F.size("schema").cast("long").alias("n_columns"),
+        F.col("profile.total_rows").cast("long").alias("total_rows"),
+    ).orderBy("table_name")
+
+
+@query(
+    "orc_catalog_assets",
+    _CATALOG_ORACLE,
 )
 def orc_catalog_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC catalog extraction (sources.parquet_catalog.
@@ -8162,31 +8203,7 @@ def orc_catalog_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema widths and row counts against the same data's parquet
     views, so a read-path or footer-walk defect on the ORC side cannot
     hide behind a matching implementation."""
-    import os
-
-    # Per-process mkdtemp root (cached, 0700, removed at exit) with a
-    # gate+fixture subdir: sweeps within one process reuse (overwrite)
-    # the same directory instead of leaking a fixture-sized /tmp tree
-    # per invocation, while concurrent processes and multi-user hosts
-    # never share a predictable path.
-    fixture = os.path.basename(os.path.normpath(sf_dir)) or "fixture"
-    base = _proc_tmpdir(f"orc_{fixture}")
-    _parallel_writes(
-        lambda t: _t(spark, sf_dir, t).write.mode("overwrite").orc(
-            os.path.join(base, f"{t}.orc")
-        ),
-        _ORC_TABLES,
-    )
-    from meteor_spark.registry import extractors
-
-    ex = extractors.get("orc_catalog")
-    ex.init({"path": base, "include_row_count": True})
-    assets = ex.extract(spark)
-    return assets.select(
-        F.col("resource.name").alias("table_name"),
-        F.size("schema").cast("long").alias("n_columns"),
-        F.col("profile.total_rows").cast("long").alias("total_rows"),
-    ).orderBy("table_name")
+    return _catalog_round_trip(spark, sf_dir, "orc", "orc", lambda w, p: w.orc(p), "orc_catalog")
 
 
 _CUSUM_PPM = _ppm("peak", "greatest(total * n_hours, 1)", "//")
@@ -8484,12 +8501,7 @@ def bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "json_catalog_assets",
-    "UNION ALL ".join(
-        f"SELECT '{t}' AS table_name, CAST({_N_COLS[t]} AS BIGINT) AS n_columns,"
-        f" CAST((SELECT count(*) FROM {t}) AS BIGINT) AS total_rows "
-        for t in _ORC_TABLES
-    )
-    + "ORDER BY table_name",
+    _CATALOG_ORACLE,
 )
 def json_catalog_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines catalog extraction (sources.parquet_catalog.
@@ -8502,36 +8514,14 @@ def json_catalog_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-path defect on the JSON side cannot hide behind a matching
     implementation. (The five dim tables have no all-null columns, so
     sampling inference must recover every column.)"""
-    import os
-
-    fixture = os.path.basename(os.path.normpath(sf_dir)) or "fixture"
-    base = _proc_tmpdir(f"jsl_{fixture}")
-    _parallel_writes(
-        lambda t: _t(spark, sf_dir, t).write.mode("overwrite").json(
-            os.path.join(base, f"{t}.jsonl")
-        ),
-        _ORC_TABLES,
+    return _catalog_round_trip(
+        spark, sf_dir, "jsl", "jsonl", lambda w, p: w.json(p), "json_catalog"
     )
-    from meteor_spark.registry import extractors
-
-    ex = extractors.get("json_catalog")
-    ex.init({"path": base, "include_row_count": True})
-    assets = ex.extract(spark)
-    return assets.select(
-        F.col("resource.name").alias("table_name"),
-        F.size("schema").cast("long").alias("n_columns"),
-        F.col("profile.total_rows").cast("long").alias("total_rows"),
-    ).orderBy("table_name")
 
 
 @query(
     "csv_catalog_assets",
-    "UNION ALL ".join(
-        f"SELECT '{t}' AS table_name, CAST({_N_COLS[t]} AS BIGINT) AS n_columns,"
-        f" CAST((SELECT count(*) FROM {t}) AS BIGINT) AS total_rows "
-        for t in _ORC_TABLES
-    )
-    + "ORDER BY table_name",
+    _CATALOG_ORACLE,
 )
 def csv_catalog_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV catalog extraction (sources.parquet_catalog.
@@ -8541,26 +8531,9 @@ def csv_catalog_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat-file export layout. Same oracle philosophy as the orc/json
     gates: widths and counts are checked against the parquet views, so
     a header/inference defect cannot self-confirm."""
-    import os
-
-    fixture = os.path.basename(os.path.normpath(sf_dir)) or "fixture"
-    base = _proc_tmpdir(f"csv_{fixture}")
-    _parallel_writes(
-        lambda t: _t(spark, sf_dir, t).write.mode("overwrite")
-        .option("header", True)
-        .csv(os.path.join(base, f"{t}.csv")),
-        _ORC_TABLES,
+    return _catalog_round_trip(
+        spark, sf_dir, "csv", "csv", lambda w, p: w.option("header", True).csv(p), "csv_catalog"
     )
-    from meteor_spark.registry import extractors
-
-    ex = extractors.get("csv_catalog")
-    ex.init({"path": base, "include_row_count": True})
-    assets = ex.extract(spark)
-    return assets.select(
-        F.col("resource.name").alias("table_name"),
-        F.size("schema").cast("long").alias("n_columns"),
-        F.col("profile.total_rows").cast("long").alias("total_rows"),
-    ).orderBy("table_name")
 
 
 _APPORTION_BUDGET = 1000

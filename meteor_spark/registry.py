@@ -78,25 +78,19 @@ processors = Registry("processor")
 sinks = Registry("sink")
 
 
-def register_extractor(name: str, description: str = "", sample_config: str = ""):
-    def deco(cls):
-        extractors.register(name, cls, PluginInfo(name, description, sample_config))
-        return cls
+def _registrar(registry: Registry):
+    """Class decorator factory that registers into `registry`."""
 
-    return deco
+    def register(name: str, description: str = "", sample_config: str = ""):
+        def deco(cls):
+            registry.register(name, cls, PluginInfo(name, description, sample_config))
+            return cls
 
+        return deco
 
-def register_processor(name: str, description: str = "", sample_config: str = ""):
-    def deco(cls):
-        processors.register(name, cls, PluginInfo(name, description, sample_config))
-        return cls
-
-    return deco
+    return register
 
 
-def register_sink(name: str, description: str = "", sample_config: str = ""):
-    def deco(cls):
-        sinks.register(name, cls, PluginInfo(name, description, sample_config))
-        return cls
-
-    return deco
+register_extractor = _registrar(extractors)
+register_processor = _registrar(processors)
+register_sink = _registrar(sinks)

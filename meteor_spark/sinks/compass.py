@@ -8,8 +8,9 @@ Reference (plugins/sinks/compass/sink.go):
   - PATCH /v1beta1/assets, 5xx -> RetryError (:100-141, :135-140).
 
 Spark shape: payload building is a pure function over asset rows
-(tested without network); the HTTP fan-out runs per partition via the
-shared posting helper so throughput scales with executors.
+(tested without network); the driver streams the rows through
+`json_lines` (one partition at a time) and PATCHes them one by one
+through the shared posting helper.
 """
 
 from __future__ import annotations

@@ -524,3 +524,101 @@ def test_lit_array_sql_rendering_bit_identical(spark):
         similarity.lit_double_array([float("nan")])
     with pytest.raises(ValueError):
         similarity.lit_double_array([float("inf")])
+
+
+def _md5(i: int) -> str:
+    import hashlib
+
+    return hashlib.md5(str(i).encode()).hexdigest()
+
+
+# id of the all-zero embedding: its md5 sorts before every other id, so
+# the hash-pivot operators draw it as their first pivot
+_ZERO_ID = min(range(100, 1000), key=_md5)
+
+
+@pytest.fixture(scope="module")
+def zero_norm_emb(spark):
+    """60 random 16-dim vectors in labels 0-2 plus one all-zero vector,
+    alone in label 3; queries are ids 1-5 and the zero vector."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(7)
+    rows = [(i, i % 3, [rng.uniform(-1.0, 1.0) for _ in range(16)]) for i in range(1, 61)]
+    rows.append((_ZERO_ID, 3, [0.0] * 16))
+    assert _md5(_ZERO_ID) < min(_md5(i) for i in range(1, 61))
+    emb = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
+    return emb, emb.filter((F.col("vec_id") <= 5) | (F.col("vec_id") == _ZERO_ID))
+
+
+# operator -> (result frame, columns naming the pair, cosine column)
+_ZERO_NORM_CASES = {
+    "brute_force_topk": lambda e, q: (
+        similarity.brute_force_topk(e, q), ("query_id", "neighbor_id"), "cos"
+    ),
+    "srp_topk": lambda e, q: (
+        similarity.srp_topk(e, q, dim=16, bits=1), ("query_id", "neighbor_id"), "cos"
+    ),
+    "ivf_topk": lambda e, q: (
+        similarity.ivf_topk(e, q, n_cells=4, n_probe=2), ("query_id", "neighbor_id"), "cos"
+    ),
+    "ivf_pivot_topk": lambda e, q: (
+        similarity.ivf_pivot_topk(e, q, n_cells=8, n_probe=3), ("query_id", "neighbor_id"), "cos"
+    ),
+    "pq_pivot_topk": lambda e, q: (
+        similarity.pq_pivot_topk(e, q, m=4, n_codes=8, n_candidates=16),
+        ("query_id", "neighbor_id"),
+        "cos",
+    ),
+    "pq_topk": lambda e, q: (
+        similarity.pq_topk(e, q, m=4, n_codes=8, n_candidates=16, sample=64),
+        ("query_id", "neighbor_id"),
+        "cos",
+    ),
+    "hard_negative_topk": lambda e, q: (
+        similarity.hard_negative_topk(e, q), ("query_id", "neighbor_id"), "cos"
+    ),
+    "embedding_near_duplicates": lambda e, q: (
+        similarity.embedding_near_duplicates(e, threshold=-1.0, bits=1, dim=16), ("a", "b"), "cos"
+    ),
+    "semantic_dedup_pairs": lambda e, q: (
+        similarity.semantic_dedup_pairs(
+            similarity.semantic_assign(e, n_clusters=4), threshold=-1.0
+        ),
+        ("a", "b"),
+        "cos",
+    ),
+    "margin_bitext_mine": lambda e, q: (
+        similarity.margin_bitext_mine(e.filter("label % 2 = 0"), e.filter("label % 2 = 1"), q),
+        ("src_id", "tgt_id"),
+        "cos_e4",
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_ZERO_NORM_CASES))
+def test_zero_norm_vector_scores_zero(zero_norm_emb, op):
+    """One all-zero embedding in the corpus and the queries must not
+    abort the job (ANSI mode raises on x / 0.0): every row pairing it
+    carries cosine 0.0, the module's zero-norm rule."""
+    df, ids, cos = _ZERO_NORM_CASES[op](*zero_norm_emb)
+    rows = df.collect()
+    zero_rows = [r for r in rows if _ZERO_ID in (r[ids[0]], r[ids[1]])]
+    assert zero_rows, f"{op}: no row involves the zero vector"
+    assert all(r[cos] == 0.0 for r in zero_rows)
+
+
+def test_zero_norm_label_centroid_and_truncation(zero_norm_emb):
+    """The pair operators without an id pair: a label whose centroid is
+    the zero vector scores 0.0 against every other label, and the
+    truncation recall sweep completes with the zero vector among its
+    queries and corpus."""
+    emb, queries = zero_norm_emb
+    cents = similarity.label_centroid_similarity(emb).collect()
+    zero = [r for r in cents if 3 in (r["label_a"], r["label_b"])]
+    assert len(zero) == 3 and all(r["cos"] == 0.0 for r in zero)
+    recall = similarity.dim_truncation_recall(emb, queries, dims=(4, 16)).collect()
+    assert [r["trunc_dim"] for r in recall] == [4, 16]
+    assert recall[-1]["recall_ppm"] == 1_000_000
